@@ -18,259 +18,13 @@ noop write so execution is measured end-to-end without disk-sink noise.
 """
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-BENCH_QUERIES = [
-    "pricing_summary",
-    "revenue_by_nation",
-    "sessionize",
-    "balance_classify",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "knn_cosine",
-    "ann_ivf_cosine",
-    "token_count",
-    "normalize_text",
-    "multimodal_features",
-    "spatial_join",
-    "table_merge_sessions",
-    "tumbling_window",
-    # round 2 additions
-    "dedup_components",
-    "lattice_stream_cascade",
-    "parse_number_csv",
-    "bidi_display",
-    "section_assembly",
-    "status_breakdown",
-    "kmeans_fit",
-    "length_quantiles",
-    "range_join_binned",
-    "token_windows",
-    "dedup_incremental",
-    "pii_redact",
-    "contamination_check",
-    "vocab_top_ngrams",
-    "holdout_split",
-    "gopher_quality",
-    "ann_recall",
-    "ann_ivf_trained",
-    "corpus_merge",
-    # round 3 additions
-    "dedup_embedding_cosine",
-    "paragraph_dedup",
-    "mixture_resample",
-    "repetition_filters",
-    "token_packing",
-    "temperature_mixture",
-    "stratified_sample",
-    "sequence_manifest",
-    "dedup_retention",
-    "lm_fluency",
-    "decontaminate_spans",
-    "cdc_chunk_dedup",
-    "inverted_index",
-    "loss_mask_spans",
-    "bpe_fit",
-    "bpe_encode",
-    "sequence_shuffle",
-    "token_packing_incremental",
-    "cohort_retention",
-    "funnel_conversion",
-    "corpus_report",
-    "salted_join_skew",
-    "cluster_top_terms",
-    "hashed_tf_vectors",
-    "url_host_filter",
-    "pq_codes",
-    "pq_adc_recall",
-    "ann_ivfpq_recall",
-    "hll_distinct",
-    "bloom_semi_join",
-    "bm25_top_k",
-    "pagerank",
-    "image_ahash_dedup",
-    "logreg_quality",
-    "asof_join_events",
-    "rollup_two_level",
-    "cm_sketch_words",
-    "hll_merge",
-    "zorder_skipping",
-    "triangle_count",
-    "ppjoin_similar",
-    "rollup_incremental",
-    "hist_percentiles",
-    "scd2_user_tiers",
-    "purge_users",
-    "shipping_priority",
-    "pivot_weekday",
-    "rollup_region_nation",
-    "user_value_quartiles",
-    "rolling_week_spend",
-    "unpivot_weekday",
-    "grouping_sets_activity",
-    "session_window_agg",
-    "cube_type_weekday",
-    "outlier_zscore",
-    "markov_transitions",
-    "hourly_spine_ffill",
-    "sequential_patterns",
-    "bradley_terry",
-    "hard_negatives",
-    "training_triplets",
-    "rrf_fusion",
-    "time_weighted_avg",
-    "purchase_attribution",
-    "funnel_steps",
-    "doc_keywords",
-    "search_snippets",
-    "cooccurrence_pmi",
-    "semantic_dedup",
-    "anchor_text_agg",
-    "snapshot_diff",
-    "compaction_plan",
-    "k_anonymity",
-    "dedup_pair_audit",
-    "source_term_lift",
-    "tool_retry_stats",
-    "prefix_dedup",
-    "substring_dup_spans",
-    "margin_mining",
-    "classifier_calibration",
-    "preference_pairs",
-    "action_trie_profile",
-    "ngram_novelty",
-    "tokenizer_fertility",
-    "fim_transform",
-    "unicode_anomalies",
-    "tool_latency_quantiles",
-    "url_canonicalize",
-    "adjacent_dup_collapse",
-    "source_quantile_norm",
-    "token_budget_select",
-    "rate_spike_detect",
-    "dsir_select",
-    "split_leakage",
-    "bitext_clean",
-    "span_corruption",
-    "type_share_drift",
-    "blocklist_filter",
-    "interval_overlap_join",
-    "join_key_skew_profile",
-    "groupwise_trend",
-    "lateness_audit",
-    "sequence_grammar",
-    "json_extract_profile",
-    "expectation_suite",
-    "ab_uplift",
-    "cusum_changepoint",
-    "source_overlap_matrix",
-    "coverage_gaps",
-    "join_cardinality_estimate",
-    "scd2_asof",
-    "wav_payload_stats",
-    "cogroup_reconcile",
-    "kcore_peel",
-    "rfm_features",
-    "column_profile",
-    "gate_attrition",
-    "dispersion_index",
-    "session_depth_histogram",
-    "join_view_delta",
-    "partition_digest",
-    "seasonality_profile",
-    "budget_apportion",
-    "position_attribution",
-    "temporal_dim_join",
-    "pareto_front",
-    "survival_table",
-    "record_linkage",
-    "seasonal_anomaly",
-    "adaptive_join",
-    "decayed_leaderboard",
-    "custom_source_scan",
-    "daily_value_bands",
-    # round 4 additions
-    "image_repair",
-    "conv_window_pack",
-    "length_bucket_batches",
-    "winnow_fingerprints",
-    "luhn_card_audit",
-    "kappa_agreement",
-    "shard_assign",
-    "simhash_hamming_pairs",
-    "context_truncate",
-    "robots_rules_filter",
-    "containment_pairs",
-    # round 5 additions
-    "shingle_pair_suite",
-    "ann_index_build",
-    "ann_index_query",
-    "cluster_holdout_split",
-    "dedup_components_incremental",
-    # round 5: full-registry completion — the remaining (small, round-1 §2)
-    # queries, so the bench artifact times EVERY registered query and
-    # `n_queries` matches the oracle sweep's count exactly.
-    "asof_prev_signup",
-    "base64_roundtrip",
-    "chunk_split",
-    "column_inference",
-    "detector_flags",
-    "extract_numbers_roundtrip",
-    "fingerprint",
-    "frame_sample",
-    "frequency_map",
-    "jaccard_pairs",
-    "kmeans_assign",
-    "language_id",
-    "lead_boundary",
-    "levenshtein_pairs",
-    "markdown_parse",
-    "markdown_render",
-    "minhash_jaccard_estimate",
-    "minhash_signatures",
-    "number_freq_cosine",
-    "ordered_concat",
-    "outline_filter",
-    "outline_sections",
-    "page_assembly",
-    "page_header",
-    "priority_merge",
-    "quality_features",
-    "repair_coalesce",
-    "safe_filename",
-    "sampling_filter",
-    "simhash_buckets",
-    "similarity_dispatch",
-    "status_rollup",
-    "table_merge_fold",
-    "validation_cost",
-    "workflow_router",
-]
-
-# Queries whose pair-generating buckets are DF-cut capped: bench threads an
-# Observation through them so the cap's drops are OBSERVED in the recorded
-# runs (n_buckets_dropped / n_ids_dropped in the output JSON), not merely
-# observable — dedup.py's "never silent" contract in the path that runs.
-CAP_OBSERVED = {
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_incremental",
-    "dedup_components",
-    "dedup_embedding_cosine",
-    "semantic_dedup",
-    "dedup_pair_audit",
-    "interval_overlap_join",
-    "simhash_hamming_pairs",
-    "containment_pairs",
-    "shingle_pair_suite",
-    "dedup_components_incremental",
-}
 
 # v3: cache key versioned with the generator (round 4 added markdown-image
 # pages for the image-aware repair route)
@@ -345,11 +99,17 @@ def main() -> None:
     from pyspark.sql.observation import Observation
 
     queries = entry_mod.queries()
+    bench_queries = list(queries)
     timings, cap_drops = {}, {}
 
     def time_query(name):
         qfn = queries[name]
-        if name in CAP_OBSERVED:
+        # Queries that take an Observation (DF-cut caps and other drop
+        # counters) get one threaded through, so their drops are OBSERVED
+        # in the recorded runs (n_buckets_dropped / n_ids_dropped in the
+        # output JSON), not merely observable — dedup.py's "never silent"
+        # contract in the path that runs.
+        if "observation" in inspect.signature(qfn).parameters:
             holder = {}
 
             def observed(spark, sf_dir, _q=qfn, _h=holder):
@@ -363,11 +123,11 @@ def main() -> None:
         else:
             timings[name] = round(time_noop(qfn, spark, sf_dir), 3)
 
-    half = len(BENCH_QUERIES) // 2
-    for name in BENCH_QUERIES[:half]:
+    half = len(bench_queries) // 2
+    for name in bench_queries[:half]:
         time_query(name)
     samples.append(run_once())
-    for name in BENCH_QUERIES[half:]:
+    for name in bench_queries[half:]:
         time_query(name)
     samples.append(run_once())
 
@@ -444,7 +204,7 @@ def main() -> None:
         # registered-query count — matches the oracle sweep artifact's
         # n_queries exactly; the timings map holds one extra entry
         # (extraction_pipeline, the flagship), counted separately.
-        "n_queries": len(BENCH_QUERIES),
+        "n_queries": len(bench_queries),
         "n_timings": len(timings),
         "queries_total_sec": round(sum(timings.values()), 3),
         "curate_turns_per_sec": round(n_turns / curate_sec, 1),

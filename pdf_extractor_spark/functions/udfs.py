@@ -1,18 +1,21 @@
-"""Arrow-batched pandas UDFs wrapping the pure kernels.
+"""Arrow-batched UDFs wrapping the pure kernels.
 
 UDFs are the slow path: everything expressible with built-in functions lives
 in ``expressions.py`` instead. What remains here is genuinely non-SQL logic:
 the extraction kernel (payload decode + segmentation + detect/repair +
 byte-exact assembly), the fused detector suite, EU/US number disambiguation,
-number-frequency similarity, and SimHash. All are Series->Series (one Arrow
-round trip per batch, no per-row Python at the Spark API level).
+number-frequency similarity, and SimHash. All are column->column (one Arrow
+round trip per batch, no per-row Python at the Spark API level); the
+extraction kernel is an Arrow UDF, the rest are pandas UDFs.
 """
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import List
 
 import pandas as pd
-from pyspark.sql.functions import pandas_udf
+import pyarrow as pa
+from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -51,39 +54,20 @@ EXTRACTION_TYPE = StructType([
     StructField("repaired_pages", ArrayType(IntegerType())),
     StructField("valid", BooleanType()),
 ])
+_EXTRACTION_ARROW_TYPE = to_arrow_type(EXTRACTION_TYPE)
 
 
-def _turn_to_row(text: Optional[str]) -> dict:
-    r = extract_turn(text)
-    return {
-        "kind": r["kind"],
-        "n_pages": r["n_pages"],
-        "extracted_text": r["extracted_text"],
-        "spans": [{"offset": o, "length": l} for o, l in r["spans"]],
-        "problems": r["problems"],
-        "sections": [
-            {"title": s["title"], "page": s["page"], "end_page": s["end_page"]}
-            for s in r["sections"]
-        ],
-        "repaired_pages": r["repaired_pages"],
-        "valid": r["valid"],
-    }
-
-
-_PLAIN_DUMMY = {
-    "kind": "plain", "n_pages": 0, "extracted_text": "", "spans": [],
-    "problems": [], "sections": [], "repaired_pages": [], "valid": True,
-}
-
-
-@pandas_udf(EXTRACTION_TYPE)
-def extract_turn_udf(text: pd.Series) -> pd.DataFrame:
-    """The flagship extraction kernel, one Arrow batch at a time. Null inputs
-    (plain rows routed JVM-side, plans/pipeline.py) share one dummy dict —
-    the kernel never runs for them and no per-row objects are built."""
-    return pd.DataFrame([
-        _PLAIN_DUMMY if t is None else _turn_to_row(t) for t in text
-    ])
+@arrow_udf(EXTRACTION_TYPE)
+def extract_turn_udf(text: pa.Array) -> pa.Array:
+    """The flagship extraction kernel, one Arrow batch at a time. The
+    kernel's dicts convert straight to the struct type (span tuples become
+    structs, keys outside the type are dropped). Null inputs (plain rows
+    routed JVM-side, plans/pipeline.py) come back as null structs without
+    running the kernel."""
+    return pa.array(
+        [None if t is None else extract_turn(t) for t in text.to_pylist()],
+        type=_EXTRACTION_ARROW_TYPE,
+    )
 
 
 @pandas_udf(ArrayType(StringType()))

@@ -284,7 +284,7 @@ def components_store_update(new_edges: DataFrame, store_root: str) -> int:
     labels.write.mode("overwrite").parquet(
         f"{store_root}/{CC_LAB_PREFIX}{v}"
     )
-    if [x for x in have if x < v]:
+    if have:
         fsio.prune_versions_below(spark, store_root, CC_LAB_PREFIX, v)
     return v
 

@@ -55,8 +55,12 @@ def pending_work(
     n_buckets: int = DEFAULT_N_BUCKETS,
 ) -> DataFrame:
     """Resume filter: anti-join bucketed inputs against completed buckets.
-    The completed set is tiny (<= n_buckets rows) -> broadcast anti-join."""
+    The completed set is tiny (<= n_buckets rows) -> broadcast anti-join;
+    with no committed manifest every input is pending and no join is
+    planned."""
     bucketed = with_bucket(inputs, n_buckets)
+    if not _fs_committed(spark, manifest_path):
+        return bucketed
     done = completed_buckets(spark, manifest_path)
     return bucketed.join(F.broadcast(done), BUCKET_COL, "left_anti")
 
@@ -94,15 +98,13 @@ def run_resumable(
 ) -> int:
     """Resumable extraction: process only pending buckets, write output
     partitioned by bucket (dynamic overwrite = idempotent re-runs), then
-    record the manifest. Returns number of rows processed this run."""
+    record the manifest. Returns number of rows processed this run. The
+    bucket column rides through the extraction map with the other input
+    columns."""
     from .pipeline import extract_transcripts
 
     todo = pending_work(spark, transcripts, manifest_path, n_buckets)
     extracted = extract_transcripts(todo, salt_partitions)
-    extracted = extracted.join(
-        with_bucket(todo.select("conv_id").distinct(), n_buckets),
-        "conv_id",
-    )
     extracted.cache()
     n = extracted.count()
     if n:

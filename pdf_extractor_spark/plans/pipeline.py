@@ -11,8 +11,9 @@ Scale notes (10^12 turns):
 - **Python touches only payload rows.** The router predicate (pdf-prefix /
   html-head detection, mirroring kernels.segment.detect_payload_kind) runs
   JVM-side; plain turns' text is nulled out before the Arrow boundary, so the
-  pandas UDF transfers ~nothing for the ~95% of rows whose extraction is the
-  identity. Their result struct is synthesized with built-in expressions.
+  Arrow UDF transfers ~nothing for the ~95% of rows whose extraction is the
+  identity and hands back a null struct for each. ``coalesce`` replaces
+  those nulls with the plain result, one struct of built-in expressions.
 - **No pre-shuffle.** The per-turn map runs on scan-native partitions:
   parquet/Iceberg splits are byte-balanced (``files.maxPartitionBytes``),
   which defuses long-document skew better than a row-hash repartition —
@@ -36,13 +37,8 @@ from ..config import (
     VALIDATION_TOKENS_PER_PAGE,
 )
 from ..functions.expressions import combine_sections_expr
-from ..functions.udfs import extract_turn_udf
+from ..functions.udfs import EXTRACTION_TYPE, extract_turn_udf
 from ..kernels.segment import PDF_PAYLOAD_PREFIX
-
-_EMPTY_SPANS = "array()"
-_SPAN_OF_WHOLE = (
-    "array(named_struct('offset', 0, 'length', length(text)))"
-)
 
 
 def _kind_expr() -> F.Column:
@@ -66,53 +62,48 @@ def _kind_expr() -> F.Column:
     )
 
 
+def _plain_result() -> F.Column:
+    """A plain turn's result, built JVM-side (the twin of the kernel's plain
+    branch): the text is its own single page, spanned whole; no problems."""
+    has_text = F.col("text").isNotNull() & (F.col("text") != "")
+    return F.struct(
+        F.lit("plain"),
+        has_text.cast("int"),
+        F.coalesce(F.col("text"), F.lit("")),
+        F.when(has_text, F.array(F.struct(F.lit(0), F.length("text"))))
+        .otherwise(F.array()),
+        F.array(),
+        F.array(),
+        F.array(),
+        F.lit(True),
+    ).cast(EXTRACTION_TYPE)
+
+
 def extract_transcripts(
     transcripts: DataFrame,
     salt_partitions: Optional[int] = None,
 ) -> DataFrame:
-    """Per-turn extraction map. Returns one row per input turn:
+    """Per-turn extraction map. Returns one row per input turn: every input
+    column except ``text`` (conv_id, turn_idx, role, tool, ts, ... pass
+    through), then
 
-    conv_id, turn_idx, role, kind, n_pages, extracted_text, spans, problems,
-    sections, repaired_pages, valid, n_chars
+    kind, n_pages, extracted_text, spans, problems, sections,
+    repaired_pages, valid, n_chars
     """
     df = transcripts
     if salt_partitions:
         # Only for sources without byte-balanced splits (see module doc).
         df = df.repartition(salt_partitions, "conv_id", "turn_idx")
 
-    empty_str_arr = F.array().cast("array<string>")
-    empty_int_arr = F.array().cast("array<int>")
-    empty_sections = F.array().cast(
-        "array<struct<title:string,page:int,end_page:int>>"
-    )
-
     df = df.withColumn("kind", _kind_expr())
-    is_plain = F.col("kind") == "plain"
     # Null input for plain rows: the Arrow transfer carries only payload rows'
-    # text; the kernel returns a dummy row for None in ~no time.
-    x = extract_turn_udf(F.when(is_plain, F.lit(None)).otherwise(F.col("text")))
-
-    has_text = F.col("text").isNotNull() & (F.col("text") != "")
+    # text, and the UDF's null result falls through to the plain struct.
+    payload_text = F.when(F.col("kind") != "plain", F.col("text"))
+    x = F.coalesce(extract_turn_udf(payload_text), _plain_result())
+    fields = [f.name for f in EXTRACTION_TYPE.fields if f.name != "kind"]
     result = df.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "kind",
-        F.when(is_plain, F.when(has_text, 1).otherwise(0))
-        .otherwise(x["n_pages"]).alias("n_pages"),
-        F.when(is_plain, F.coalesce(F.col("text"), F.lit("")))
-        .otherwise(x["extracted_text"]).alias("extracted_text"),
-        F.when(
-            is_plain,
-            F.when(has_text, F.expr(_SPAN_OF_WHOLE))
-            .otherwise(F.expr(_EMPTY_SPANS))
-            .cast("array<struct<offset:int,length:int>>"),
-        ).otherwise(x["spans"]).alias("spans"),
-        F.when(is_plain, empty_str_arr).otherwise(x["problems"]).alias("problems"),
-        F.when(is_plain, empty_sections).otherwise(x["sections"]).alias("sections"),
-        F.when(is_plain, empty_int_arr)
-        .otherwise(x["repaired_pages"]).alias("repaired_pages"),
-        F.when(is_plain, F.lit(True)).otherwise(x["valid"]).alias("valid"),
+        *[c for c in df.columns if c != "text"],
+        *[x[f].alias(f) for f in fields],
     )
     return result.withColumn("n_chars", F.length("extracted_text"))
 

@@ -79,7 +79,6 @@ def curate_stages(
 def iter_curate_stages(
     transcripts: DataFrame,
     benchmark: DataFrame | None = None,
-    materialize: bool = True,
 ):
     """``curate`` as a generator of (stage_name, frame) — the last frame
     IS curate's output.
@@ -102,12 +101,9 @@ def iter_curate_stages(
     text plus its whitespace word split ``ws``, which feeds both the
     recomputed n_words and the repetition gate's gram build (no re-split
     per gate). The final stage is yielded lazy for the consumer to sink."""
-    ck = (
-        (lambda df: df.localCheckpoint(eager=True))
-        if materialize
-        else (lambda df: df)
-    )
-    assembled = ck(assemble_conversations(extract_transcripts(transcripts)))
+    assembled = assemble_conversations(
+        extract_transcripts(transcripts)
+    ).localCheckpoint(eager=True)
     yield ("extract_assemble", assembled)
 
     # the same word statistics the oracle-gated q_gopher_quality uses; the
@@ -125,15 +121,13 @@ def iter_curate_stages(
         ).alias("lines"),
         *word_stats_exprs("conversation_markdown"),
     )
-    kept = ck(
-        scored.where(
-            (F.col("n_words") >= MIN_WORDS)
-            & (F.col("n_words") <= MAX_WORDS)
-            & (F.col("sum_chars") >= 3 * F.col("n_words"))
-            & (F.col("sum_chars") <= 12 * F.col("n_words"))
-            & (5 * F.col("n_alpha_words") >= 4 * F.col("n_words"))
-        )
-    )
+    kept = scored.where(
+        (F.col("n_words") >= MIN_WORDS)
+        & (F.col("n_words") <= MAX_WORDS)
+        & (F.col("sum_chars") >= 3 * F.col("n_words"))
+        & (F.col("sum_chars") <= 12 * F.col("n_words"))
+        & (5 * F.col("n_alpha_words") >= 4 * F.col("n_words"))
+    ).localCheckpoint(eager=True)
     yield ("quality_gate", kept)
 
     # C4 line rule verbatim on the assembled markdown (real newlines here):
@@ -151,13 +145,14 @@ def iter_curate_stages(
         F.col("clean_text").alias("text"),
         F.col("n_removed").alias("n_boiler_lines"),
     )
-    cleaned = ck(
+    cleaned = (
         kept.drop("lines", "n_words")
         .join(boiler, "conv_id")
         .withColumn(
             "ws", F.filter(F.split("text", r"\s+"), lambda x: x != "")
         )
         .withColumn("n_words", F.size("ws"))
+        .localCheckpoint(eager=True)
     )
     yield ("boilerplate_c4", cleaned)
 
@@ -170,16 +165,17 @@ def iter_curate_stages(
     # lambdas then re-evaluate the captured sort per ELEMENT — measured as
     # a >40x blowup (8 s -> stuck) on the bench corpus. The frame is 8
     # small columns per conversation, so the checkpoint is cheap.
-    rep_sig = ck(
-        repetition_filters(
-            cleaned.select(F.col("conv_id").alias("doc_id"), "ws"),
-            words=F.col("ws"),
-        )
-    )
+    rep_sig = repetition_filters(
+        cleaned.select(F.col("conv_id").alias("doc_id"), "ws"),
+        words=F.col("ws"),
+    ).localCheckpoint(eager=True)
     rep_keep = rep_sig.where("keep").select(
         F.col("doc_id").alias("conv_id")
     )
-    gated = ck(cleaned.drop("ws").join(rep_keep, "conv_id", "left_semi"))
+    gated = (
+        cleaned.drop("ws").join(rep_keep, "conv_id", "left_semi")
+        .localCheckpoint(eager=True)
+    )
     yield ("repetition_gate", gated)
 
     # span-level benchmark decontamination (eval-overlap scrubbing): only
@@ -205,11 +201,12 @@ def iter_curate_stages(
             F.col("n_removed").alias("n_decon_words"),
             (F.col("n_words") - F.col("n_removed")).alias("n_kept_words"),
         )
-        gated = ck(
+        gated = (
             gated.drop("text", "n_words")
             .join(scrubbed, "conv_id")
             .withColumnRenamed("clean_text", "text")
             .withColumnRenamed("n_kept_words", "n_words")
+            .localCheckpoint(eager=True)
         )
         yield ("decontaminate", gated)
     else:

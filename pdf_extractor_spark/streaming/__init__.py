@@ -5,7 +5,8 @@ watermarks, event-time windows, or state stores exist in its semantics.
 Incremental processing in this engine is therefore manifest-based resume
 (plans/manifest.py) rather than Structured Streaming. For a true streaming
 deployment the per-turn extraction map is stateless and drops into
-``readStream -> withColumn(extract_turn_udf) -> writeStream`` unchanged;
-only the per-conversation assembly would need a watermark on ``ts`` plus
-``applyInPandasWithState`` — see streaming/micro_batch.py.
+``readStream -> plans.pipeline.extract_transcripts -> writeStream``
+unchanged (the JVM payload router included, so plain turns never reach
+Python); only the per-conversation assembly needs state, kept per
+conversation with ``applyInPandasWithState`` — see streaming/stateful.py.
 """

@@ -1,26 +1,15 @@
-"""Structured-Streaming adapter for the stateless extraction map.
+"""Structured-Streaming adapters around the stateless extraction map.
 
-The per-turn extraction is a pure map, so it runs identically under
-micro-batch execution; assembly is windowed on event time with a watermark
-for late turns. This adapter exists to demonstrate the streaming path — the
-reference itself has no streaming semantics (SURVEY.md §2.10).
+The per-turn extraction (``plans.pipeline.extract_transcripts``) is a pure
+map, so it runs unchanged on a ``readStream`` frame, JVM router included;
+the operators here add what a stream needs on top: watermarked dedup and
+event-time windows for late turns. They exist to demonstrate the streaming
+path — the reference itself has no streaming semantics (SURVEY.md §2.10).
 """
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.udfs import extract_turn_udf
-
-
-def extract_stream(transcript_stream: DataFrame) -> DataFrame:
-    """readStream-compatible extraction map (stateless, watermark-free)."""
-    return transcript_stream.withColumn("x", extract_turn_udf(F.col("text"))).select(
-        "conv_id", "turn_idx", "ts",
-        F.col("x.kind").alias("kind"),
-        F.col("x.extracted_text").alias("extracted_text"),
-        F.col("x.problems").alias("problems"),
-    )
 
 
 def dedup_stream(

@@ -35,16 +35,62 @@ def test_mentioning_html_keeps_text_verbatim():
     assert r["extracted_text"] == text
 
 
+def _result_fields(r):
+    """One extract_transcripts row in the kernel's result shape."""
+    return {
+        "kind": r["kind"],
+        "n_pages": r["n_pages"],
+        "extracted_text": r["extracted_text"],
+        "spans": [(sp["offset"], sp["length"]) for sp in r["spans"]],
+        "problems": list(r["problems"]),
+        "sections": [
+            (s["title"], s["page"], s["end_page"]) for s in r["sections"]
+        ],
+        "repaired_pages": list(r["repaired_pages"]),
+        "valid": r["valid"],
+    }
+
+
+def _kernel_fields(text):
+    g = extract_turn(text)
+    g["sections"] = [
+        (s["title"], s["page"], s["end_page"]) for s in g["sections"]
+    ]
+    return g
+
+
 def test_router_expr_matches_kernel(spark):
-    rows = [("c", i, "assistant", t, None, None) for i, (t, _) in enumerate(CASES)]
+    """Every result field, plain rows included: the JVM router plus the
+    one plain-row struct must agree with the kernel, null and empty text
+    too."""
+    texts = [t for t, _ in CASES] + [None]  # CASES holds "" already
+    rows = [("c", i, "assistant", t, None, None) for i, t in enumerate(texts)]
     df = spark.createDataFrame(
         rows,
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp",
     )
     got = {
-        r["turn_idx"]: r["kind"]
-        for r in extract_transcripts(df).select("turn_idx", "kind").collect()
+        r["turn_idx"]: _result_fields(r)
+        for r in extract_transcripts(df).collect()
     }
     for i, (text, expected) in enumerate(CASES):
-        assert got[i] == expected, text[:40]
+        assert got[i]["kind"] == expected, text[:40]
+    for i, text in enumerate(texts):
+        assert got[i] == _kernel_fields(text), repr(text)[:40]
+
+
+def test_every_field_matches_kernel_on_generated_corpus(spark):
+    """The golden corpus through extract_transcripts: sections, repaired
+    pages and validity agree with the kernel too, not only text and spans."""
+    from pdf_extractor_spark.sources.transcripts import generate_local, transcripts_df
+
+    golden = generate_local(12, 42)
+    got = {
+        (r["conv_id"], r["turn_idx"]): _result_fields(r)
+        for r in extract_transcripts(transcripts_df(spark, 12, 42)).collect()
+    }
+    assert len(got) == len(golden)
+    for row in golden:
+        key = (row["conv_id"], row["turn_idx"])
+        assert got[key] == _kernel_fields(row["text"]), key

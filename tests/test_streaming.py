@@ -5,11 +5,9 @@ import os
 
 import pytest
 
+from pdf_extractor_spark.plans.pipeline import extract_transcripts
 from pdf_extractor_spark.sources.transcripts import TRANSCRIPT_SCHEMA, transcripts_df
-from pdf_extractor_spark.streaming.micro_batch import (
-    extract_stream,
-    windowed_problem_counts,
-)
+from pdf_extractor_spark.streaming.micro_batch import windowed_problem_counts
 
 N_CONVS = 10
 SEED = 42
@@ -25,7 +23,7 @@ def corpus_dir(spark, tmp_path_factory):
 def test_extract_stream_matches_batch(spark, corpus_dir, tmp_path):
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(corpus_dir)
     q = (
-        extract_stream(stream)
+        extract_transcripts(stream)
         .writeStream.format("memory")
         .queryName("extracted_stream")
         .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt1"))
@@ -37,19 +35,23 @@ def test_extract_stream_matches_batch(spark, corpus_dir, tmp_path):
         "SELECT kind, count(*) AS n FROM extracted_stream GROUP BY kind"
     ).collect()
     batch = spark.read.parquet(corpus_dir)
-    from pdf_extractor_spark.plans.pipeline import extract_transcripts
-
     expected = {
         r["kind"]: r["count"]
         for r in extract_transcripts(batch).groupBy("kind").count().collect()
     }
     assert {r["kind"]: r["n"] for r in got} == expected
     assert expected.get("pdf", 0) > 0  # payloads actually streamed
+    # same rows as the batch map, event time carried through
+    cols = ["conv_id", "turn_idx", "ts", "extracted_text"]
+    streamed = spark.sql(f"SELECT {', '.join(cols)} FROM extracted_stream")
+    assert sorted(map(tuple, streamed.collect())) == sorted(
+        map(tuple, extract_transcripts(batch).select(*cols).collect())
+    )
 
 
 def test_windowed_aggregate_with_watermark(spark, corpus_dir, tmp_path):
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(corpus_dir)
-    agg = windowed_problem_counts(extract_stream(stream))
+    agg = windowed_problem_counts(extract_transcripts(stream))
     q = (
         agg.writeStream.format("memory")
         .queryName("windowed_problems")

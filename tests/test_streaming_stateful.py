@@ -7,7 +7,6 @@ import pytest
 
 from pdf_extractor_spark.plans.pipeline import assemble_conversations, extract_transcripts
 from pdf_extractor_spark.sources.transcripts import TRANSCRIPT_SCHEMA, transcripts_df
-from pdf_extractor_spark.streaming.micro_batch import extract_stream
 from pdf_extractor_spark.streaming.stateful import assemble_stream
 
 N_CONVS = 8
@@ -29,7 +28,7 @@ def test_stateful_assembly_matches_batch(spark, corpus_dir, tmp_path):
         .parquet(corpus_dir)
     )
     q = (
-        assemble_stream(extract_stream(stream))
+        assemble_stream(extract_transcripts(stream))
         .writeStream.format("memory")
         .queryName("assembled_snapshots")
         .outputMode("update")
