@@ -7,9 +7,9 @@ to match Python semantics and is pinned by tests.
 """
 from __future__ import annotations
 
-from typing import Dict, List, Optional
+from typing import Dict, List, Optional, Sequence
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import (
@@ -117,6 +117,50 @@ def floordiv_duck(a: str, b: int) -> str:
     pair on these two helpers so neither engine's native negative-division
     semantics is ever load-bearing."""
     return f"((({a}) - (((({a}) % {b}) + {b}) % {b})) // {b})"
+
+
+TOP_K_SALT = 16
+
+
+def top_k(
+    df: DataFrame,
+    k: int,
+    order: Sequence,
+    spread: Sequence[str],
+    by: Sequence[str] = (),
+    rank: str = "rk",
+) -> DataFrame:
+    """The first ``k`` rows of each ``by`` group (of the whole frame when
+    ``by`` is empty) under ``order``, numbered 1..k as a bigint ``rank``
+    column — the salted two-stage rank behind every top-K in the registry.
+
+    Stage 1 ranks inside each shard ``(*by, pmod(xxhash64(*spread),
+    TOP_K_SALT))`` and keeps rank <= k; stage 2 ranks the survivors per
+    ``by`` group and keeps rank <= k again. The result equals the
+    single-window form: a row in its group's top-k has fewer than k rows
+    ahead of it in the group, so fewer than k in its shard, and survives
+    stage 1 (top-K distributes over the shard union). No stage-1 task sorts
+    more than its shard of a group, and stage 2 sees at most
+    TOP_K_SALT * k rows per group — a single window would sort a whole hot
+    group, or with no ``by`` the whole frame, in one task.
+
+    ``order`` must be a total order (end it on a unique key), or ties make
+    the kept rows depend on the partitioning. scripts/plan_check.py pins
+    the two-Window + pmod shape for every TWO_STAGE_RANK query."""
+    shard = F.pmod(F.xxhash64(*spread), F.lit(TOP_K_SALT))
+    return (
+        df.withColumn(
+            rank,
+            F.row_number().over(Window.partitionBy(*by, shard).orderBy(*order)),
+        )
+        .where(F.col(rank) <= k)
+        .withColumn(
+            rank,
+            F.row_number().over(Window.partitionBy(*by).orderBy(*order))
+            .cast("long"),
+        )
+        .where(F.col(rank) <= k)
+    )
 
 
 def chunk_id_expr(page_idx: Column, pages_per_chunk: int = 15) -> Column:

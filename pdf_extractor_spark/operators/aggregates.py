@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import MARKDOWN_SECTION_SEPARATOR
-from ..functions.expressions import floordiv_duck, floordiv_sql
+from ..functions.expressions import floordiv_duck, floordiv_sql, top_k
 
 
 def q_status_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -467,7 +467,6 @@ ORACLES["rollup_incremental"] = ORACLES["rollup_two_level"]
 
 Q3_SEGMENT_DATE = "1995-03-15"
 Q3_TOP_K = 10
-Q3_SALT = 16
 
 
 def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -475,11 +474,9 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer |X| orders |X| lineitem with date predicates on BOTH fact
     sides (pushed to the scans), the small filtered customer side
     broadcast, revenue in exact integer micro-units (cents x basis-point
-    discount, the pricing_summary idiom), and the final top-K via the
-    salted two-stage rank (the per-orderkey group count is order-of-orders
-    — a single-partition ORDER BY would be the 100 TB bottleneck).
+    discount, the pricing_summary idiom), and the final top-K via
+    :func:`top_k` (the per-orderkey group count is order-of-orders).
     Deterministic total order: revenue desc, orderkey asc."""
-    from pyspark.sql import Window
     from . import load
 
     orders = load(spark, sf_dir, "orders").where(
@@ -502,26 +499,12 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(rev_u4).alias("revenue_u4"))
     )
     order = (F.desc("revenue_u4"), F.asc("l_orderkey"))
-    w_salt = Window.partitionBy("salt").orderBy(*order)
-    survivors = (
-        grouped.withColumn(
-            "salt", F.pmod(F.xxhash64("l_orderkey"), F.lit(Q3_SALT))
-        )
-        .withColumn("rk", F.row_number().over(w_salt))
-        .where(F.col("rk") <= Q3_TOP_K)
-        .drop("rk", "salt")
-    )
-    w = Window.partitionBy(F.lit(0)).orderBy(*order)
-    return (
-        survivors.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= Q3_TOP_K)
-        .select(
-            F.col("rk").cast("long").alias("rk"),
-            "l_orderkey",
-            F.col("o_orderdate").cast("string").alias("o_orderdate"),
-            "o_orderpriority",
-            "revenue_u4",
-        )
+    return top_k(grouped, Q3_TOP_K, order, ["l_orderkey"]).select(
+        "rk",
+        "l_orderkey",
+        F.col("o_orderdate").cast("string").alias("o_orderdate"),
+        "o_orderpriority",
+        "revenue_u4",
     )
 
 
@@ -1271,7 +1254,6 @@ ORACLES["seasonal_anomaly"] = f"""
 # --- Recency-decayed leaderboard -----------------------------------------------------
 DECAY_HALF_LIFE_DAYS = 7
 DECAY_TOP_K = 10
-DECAY_SALT = 16
 
 
 def q_decayed_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1285,9 +1267,7 @@ def q_decayed_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: age comes from a 1-row broadcast horizon; the score is
     one map-side-combined groupBy (weights are per-row expressions);
-    the top-K is the salted two-stage rank (plan_check pins the
-    2-window + pmod shape). Output: rk, user_id, score, n_events."""
-    from pyspark.sql import Window
+    the top-K is :func:`top_k`. Output: rk, user_id, score, n_events."""
     from . import load
 
     day = F.datediff(
@@ -1311,25 +1291,8 @@ def q_decayed_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     order = (F.desc("score"), F.asc("user_id"))
-    w_salt = Window.partitionBy("salt").orderBy(*order)
-    survivors = (
-        scores.withColumn(
-            "salt", F.pmod(F.xxhash64("user_id"), F.lit(DECAY_SALT))
-        )
-        .withColumn("rk", F.row_number().over(w_salt))
-        .where(F.col("rk") <= DECAY_TOP_K)
-        .drop("rk", "salt")
-    )
-    w_f = Window.partitionBy(F.lit(0)).orderBy(*order)
-    return (
-        survivors.withColumn("rk", F.row_number().over(w_f))
-        .where(F.col("rk") <= DECAY_TOP_K)
-        .select(
-            F.col("rk").cast("long").alias("rk"),
-            "user_id",
-            "score",
-            "n_events",
-        )
+    return top_k(scores, DECAY_TOP_K, order, ["user_id"]).select(
+        "rk", "user_id", "score", "n_events"
     )
 
 

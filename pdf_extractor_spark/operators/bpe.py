@@ -7,8 +7,8 @@ never iterates over the corpus — it iterates over the WORD-FREQUENCY
 table. One corpus scan builds (word, count); every merge step is then a
 small groupBy over per-word symbol pairs weighted by count, a 1-row argmax
 collect, and a pure map rewriting each word's symbol array. At 10^12-turn
-scale the word table is capped to the top-V words by the salted two-stage
-top-K (the standard fastBPE-style cut; uncapped here — the driver corpus
+scale the word table is capped to the top-V words by
+``functions.expressions.top_k`` (the standard fastBPE-style cut; uncapped here — the driver corpus
 vocabulary is tiny).
 
 Merge semantics (pinned identically in both engines): repeated LEFTMOST

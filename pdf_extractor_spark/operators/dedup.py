@@ -2352,15 +2352,17 @@ def shingle_pair_suite_parts(
     (the "never silent" contract — drops are the SUM across the Jaccard,
     LSH-band, and containment cuts); one (cut, pair)-keyed count shuffle
     replaces the three per-cut shuffles and only that small flat frame is
-    materialized for reuse (persist + a metrics-firing count).
+    materialized for reuse (an eager localCheckpoint, which also delivers
+    the Observation; nothing is left in the cache).
 
     Returns {"jaccard": ..., "jaccard_scored": ..., "pred": ...,
     "containment": ...} ("jaccard_scored" keeps the integer shared count
     alongside the score for checksumming); "jaccard"/"pred"/"containment"
     are pinned row-identical to their standalone queries by
     tests/test_round5_ops.py."""
-    pair_counts = _suite_pair_counts(docs, observation).persist()
-    pair_counts.count()
+    pair_counts = _suite_pair_counts(docs, observation).localCheckpoint(
+        eager=True
+    )
     real = F.col("doc_a").isNotNull()
     scored = (
         pair_counts.where((F.col("cut") == "jac") & real)

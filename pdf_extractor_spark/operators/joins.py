@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.expressions import floordiv_duck, floordiv_sql
+from ..functions.expressions import floordiv_duck, floordiv_sql, top_k
 
 N_PAGES = 20
 WORD_W, WORD_H = 4, 3
@@ -590,7 +590,6 @@ QUERIES["interval_overlap_join"] = q_interval_overlap_join
 
 # --- Join-key skew profiler ---------------------------------------------------
 SKEW_TOP_K = 20
-SKEW_SALT = 32
 
 
 def q_join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -607,11 +606,10 @@ def q_join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-side-combined groupBy produces the per-key
     counts (one row per distinct key crosses the shuffle); the global
     scalars are a 1-row aggregate OVER the counts frame (never a second
-    corpus scan) cross-joined back as a broadcast; the top-K rank is the
-    salted two-stage form (partial rank per hash(key) % SKEW_SALT
-    partition, final rank over <= SKEW_SALT * SKEW_TOP_K survivors) — at
-    10^12 rows the distinct-key count is O(billions) and a single global
-    ORDER BY would be the bottleneck this very profiler exists to detect.
+    corpus scan) cross-joined back as a broadcast; the top-K rank is
+    :func:`top_k` — at 10^12 rows the distinct-key count is O(billions) and
+    a single global ORDER BY would be the bottleneck this very profiler
+    exists to detect.
 
     Overflow: cnt <= 10^12 so cnt * 1000 <= 10^15 fits BIGINT with 3
     decimal orders to spare; the mean ratio divides by mean_cnt =
@@ -620,7 +618,6 @@ def q_join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically in Spark `div` and DuckDB `//` (both operands positive).
 
     Output: rk, user_id, cnt, share_permille, xmean_permille."""
-    from pyspark.sql import Window
     from . import load
 
     counts = (
@@ -633,22 +630,11 @@ def q_join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_keys"),
     )
     order = (F.desc("cnt"), F.asc("user_id"))
-    w_salt = Window.partitionBy("salt").orderBy(*order)
-    survivors = (
-        counts.withColumn(
-            "salt", F.pmod(F.xxhash64("user_id"), F.lit(SKEW_SALT))
-        )
-        .withColumn("rk", F.row_number().over(w_salt))
-        .where(F.col("rk") <= SKEW_TOP_K)
-        .drop("rk", "salt")
-    )
-    w = Window.partitionBy(F.lit(0)).orderBy(*order)
     return (
-        survivors.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= SKEW_TOP_K)
+        top_k(counts, SKEW_TOP_K, order, ["user_id"])
         .crossJoin(F.broadcast(totals))
         .select(
-            F.col("rk").cast("long").alias("rk"),
+            "rk",
             "user_id",
             "cnt",
             F.expr("cnt * 1000 div total_rows").alias("share_permille"),

@@ -586,9 +586,7 @@ def q_budget_apportion(spark: SparkSession, sf_dir: str) -> DataFrame:
     leftover = d.agg(
         (F.lit(APPORTION_BUDGET) - F.sum("base_quota")).alias("r")
     )
-    win = Window.partitionBy(F.lit(0)).orderBy(
-        F.desc("rem"), F.asc("source")
-    )
+    win = Window.orderBy(F.desc("rem"), F.asc("source"))
     return (
         d.withColumn("rk", F.row_number().over(win))
         .crossJoin(F.broadcast(leftover))

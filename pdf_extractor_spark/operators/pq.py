@@ -11,11 +11,10 @@ Scale shape: codebooks are M x KSUB x DS integers — driver/broadcast-sized
 artifacts, exactly like the IVF centroids. Encoding is a pure per-row
 expression map over one scan. ADC scoring joins the code frame against the
 BROADCAST per-query LUTs on (q_id, code) equi-keys — the corpus never
-shuffles — and the per-query top-K is the salted TWO-STAGE rank (partial
-min-K per (q_id, salt) partition, final rank over the survivors), so a
-query's candidate list never sorts in one task. At 10^9+ vectors the codes
-frame is 64x smaller than the raw embeddings, which is the point: the scan
-that ADC streams is the compressed one.
+shuffles — and the per-query top-K is ``functions.expressions.top_k`` by
+q_id, so a query's candidate list never sorts in one task. At 10^9+ vectors
+the codes frame is 64x smaller than the raw embeddings, which is the point:
+the scan that ADC streams is the compressed one.
 
 Cross-engine determinism: the same integer quantization contract as
 kmeans_fit (operators/similarity_search.py) — exact integer distances,
@@ -27,6 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..functions.expressions import top_k
 from .similarity_search import (
     _C_SCALE,
     _VQ_SCALE,
@@ -48,7 +48,6 @@ PQ_KSUB = 16        # codebook entries per subspace
 PQ_ITERS = 2        # Lloyd rounds per codebook (mirrors KMEANS_ITERS)
 PQ_TOP_K = 3
 PQ_RERANK = 60      # ADC shortlist size re-ranked with exact distances
-PQ_SALT = 8         # salt width for the two-stage ADC top-K
 
 
 def _l2(a_col, b_col) -> F.Column:
@@ -240,7 +239,7 @@ def _recall_from_candidates(
     code0..code{M-1}) candidate pairs (self-matches already excluded) —
     the full cross product for flat PQ, only the probed cells' members
     for IVF-PQ. ADC-scores them via broadcast LUT equi-joins, takes the
-    salted two-stage top-R shortlist, re-ranks the shortlist with exact
+    :func:`top_k` shortlist, re-ranks the shortlist with exact
     distances, and reports integer recall vs the exact full-corpus
     top-K."""
     spark = ev.sparkSession
@@ -265,20 +264,10 @@ def _recall_from_candidates(
         d = F.col(f"d{m}")
         adist = d if adist is None else adist + d
     scored = adc.select("q_id", "vec_id", adist.alias("adist"))
-    # two-stage top-R shortlist: a query's candidate list never sorts in
-    # one task (top-R distributes over the salt-partition union)
-    w_salt = Window.partitionBy("q_id", "salt").orderBy("adist", "vec_id")
-    w_final = Window.partitionBy("q_id").orderBy("adist", "vec_id")
-    shortlist = (
-        scored.withColumn(
-            "salt", F.pmod(F.xxhash64("vec_id"), F.lit(PQ_SALT))
-        )
-        .withColumn("rk", F.row_number().over(w_salt))
-        .where(F.col("rk") <= PQ_RERANK)
-        .withColumn("rk2", F.row_number().over(w_final))
-        .where(F.col("rk2") <= PQ_RERANK)
-        .select("q_id", "vec_id")
-    )
+    # top-R shortlist: a query's candidate list never sorts in one task
+    shortlist = top_k(
+        scored, PQ_RERANK, ["adist", "vec_id"], ["vec_id"], by=["q_id"]
+    ).select("q_id", "vec_id")
 
     # exact integer-L2 distance form, shared by the re-rank and the truth
     edist = F.aggregate(

@@ -26,20 +26,19 @@ what makes the top-K *oracle-checkable*.
 Scale shape: tf is one (doc, term) hash-groupBy on the query-filtered
 explode (the filter cuts the corpus to rows containing query terms BEFORE
 any shuffle); df/T/N are term-keyed/1-row broadcasts; dl rides a doc-keyed
-join; the final rank is the salted two-stage top-K (plan-pinned — never a
-single-task global sort).
+join; the final rank is ``functions.expressions.top_k``.
 """
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..functions.expressions import top_k
 from .text_analysis import _DUCK_TOKS, _tokens_expr
 
 QUERY_TERMS = ["dup", "query", "window"]  # rare + common: exercises idf
 BM25_TOP_K = 10
 BM25_SCALE = 10**12
-BM25_SALT = 16
 
 _D38 = "DECIMAL(38,0)"
 
@@ -81,23 +80,9 @@ def bm25_top_k(
             F.count("*").alias("n_terms"),
         )
     )
-    order = (F.desc("score"), F.asc("doc_id"))
-    w_salt = Window.partitionBy("salt").orderBy(*order)
-    survivors = (
-        scored.withColumn(
-            "salt", F.pmod(F.xxhash64("doc_id"), F.lit(BM25_SALT))
-        )
-        .withColumn("rk", F.row_number().over(w_salt))
-        .where(F.col("rk") <= k)
-        .drop("rk", "salt")
-    )
-    w = Window.partitionBy(F.lit(0)).orderBy(*order)
-    return (
-        survivors.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select(F.col("rk").cast("long").alias("rk"), "doc_id", "score",
-                "n_terms")
-    )
+    return top_k(
+        scored, k, (F.desc("score"), F.asc("doc_id")), ["doc_id"]
+    ).select("rk", "doc_id", "score", "n_terms")
 
 
 def q_bm25_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,7 +106,7 @@ FUSED_TOP_K = BM25_TOP_K
 def _semantic_top_k(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
     """Cosine top-k of the corpus against the vec_id-0 query embedding
     (doc_id == vec_id in the driver tables): 1-row broadcast query side,
-    salted two-stage rank — the bm25_top_k global-top-K recipe."""
+    ranked by :func:`top_k`."""
     from ..functions.expressions import cosine_similarity_expr
     from .similarity_search import _emb
 
@@ -139,22 +124,9 @@ def _semantic_top_k(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
             ).alias("sim"),
         )
     )
-    order = (F.desc("sim"), F.asc("doc_id"))
-    w_salt = Window.partitionBy("salt").orderBy(*order)
-    survivors = (
-        scored.withColumn(
-            "salt", F.pmod(F.xxhash64("doc_id"), F.lit(BM25_SALT))
-        )
-        .withColumn("rk", F.row_number().over(w_salt))
-        .where(F.col("rk") <= k)
-        .drop("rk", "salt")
-    )
-    w = Window.partitionBy(F.lit(0)).orderBy(*order)
-    return (
-        survivors.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select(F.col("rk").cast("long").alias("rank"), "doc_id")
-    )
+    return top_k(
+        scored, k, (F.desc("sim"), F.asc("doc_id")), ["doc_id"], rank="rank"
+    ).select("rank", "doc_id")
 
 
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -184,9 +156,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_systems"),
         )
     )
-    w = Window.partitionBy(F.lit(0)).orderBy(
-        F.desc("rrf_score"), F.asc("doc_id")
-    )
+    w = Window.orderBy(F.desc("rrf_score"), F.asc("doc_id"))
     return (
         fused.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= FUSED_TOP_K)

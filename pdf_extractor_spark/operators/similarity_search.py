@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.expressions import cosine_similarity_expr
+from ..functions.expressions import cosine_similarity_expr, top_k
 
 N_QUERIES = 10
 TOP_K = 3
@@ -609,7 +609,6 @@ ORACLES["ann_recall"] = f"""
 
 
 TOP_TERMS = 5
-TERMS_SALT = 8
 
 
 def q_cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -617,8 +616,8 @@ def q_cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents join their trained k-means cluster (doc_id == vec_id in the
     driver tables), unigram counts roll up per (cluster, gram) with
     map-side combine, and each cluster reports its TOP_TERMS most frequent
-    terms via the salted two-stage rank (a big cluster's gram list never
-    sorts in one task). Output: cluster, rk, gram, cnt — the human-readable
+    terms via :func:`top_k` (a big cluster's gram list never sorts in one
+    task). Output: cluster, rk, gram, cnt — the human-readable
     signature of each embedding cluster.
 
     Scale shape: one doc-keyed equi-join (labels onto the corpus scan, the
@@ -644,22 +643,10 @@ def q_cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = words.groupBy("cluster", "gram").agg(
         F.count("*").alias("cnt")
     )
-    w_salt = Window.partitionBy("cluster", "salt").orderBy(
-        F.desc("cnt"), F.asc("gram")
-    )
-    w_final = Window.partitionBy("cluster").orderBy(
-        F.desc("cnt"), F.asc("gram")
-    )
-    return (
-        counts.withColumn(
-            "salt", F.pmod(F.xxhash64("gram"), F.lit(TERMS_SALT))
-        )
-        .withColumn("rk", F.row_number().over(w_salt))
-        .where(F.col("rk") <= TOP_TERMS)
-        .withColumn("rk", F.row_number().over(w_final))
-        .where(F.col("rk") <= TOP_TERMS)
-        .select("cluster", F.col("rk").cast("long").alias("rk"), "gram", "cnt")
-    )
+    order = (F.desc("cnt"), F.asc("gram"))
+    return top_k(
+        counts, TOP_TERMS, order, ["gram"], by=["cluster"]
+    ).select("cluster", "rk", "gram", "cnt")
 
 
 def _cluster_top_terms_oracle() -> str:

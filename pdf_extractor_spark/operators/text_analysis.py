@@ -7,7 +7,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.expressions import normalize_for_comparison_expr, token_count_expr
+from ..functions.expressions import (
+    normalize_for_comparison_expr,
+    token_count_expr,
+    top_k,
+)
 from ..functions.udfs import detect_language_udf, quality_score_udf
 from .text_ops import SPLIT_TEST_PCT, SPLIT_VAL_PCT
 
@@ -289,12 +293,6 @@ def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 VOCAB_TOP_K = 100
-# Salt width for the two-stage top-K: the partial rank runs per
-# (n, hash(gram) % VOCAB_SALT) partition, so no single task ever sorts the
-# full distinct-gram set. Any gram in the global top-K is necessarily in the
-# top-K of its salt partition (ranking a subset can only improve its rank),
-# so the final rank over the <= VOCAB_SALT * VOCAB_TOP_K survivors is exact.
-VOCAB_SALT = 32
 
 
 def q_vocab_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -305,17 +303,10 @@ def q_vocab_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from zipping the token array with its shifted self — never a
     per-element lambda over a recomputed split (CLAUDE.md perf rule).
 
-    The rank is TWO-STAGE: a salted partial top-K per (n, hash(gram) %
-    VOCAB_SALT) partition, then a final top-K over the S*K survivors —
-    at 100 TB the distinct gram count is O(billions) and a single
+    The rank is :func:`top_k` by n, spread on gram — at 100 TB the
+    distinct gram count is O(billions) and a single
     Window.partitionBy("n") with n in {1,2} would funnel everything into
-    two tasks; the salted stage bounds every sort to ~1/S of the grams and
-    the final window sees at most VOCAB_SALT * VOCAB_TOP_K rows per n.
-    Result is identical to the single-window form (top-K distributes over
-    the salt partition union); scripts/plan_check.py pins the two-window
-    shape."""
-    from pyspark.sql import Window
-
+    two tasks."""
     d = _docs(spark, sf_dir).select(_tokens_expr().alias("toks"))
     n = F.size("toks")
     uni = d.select(F.explode("toks").alias("gram")).withColumn(
@@ -339,18 +330,8 @@ def q_vocab_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
     )
     order = (F.desc("cnt"), F.asc("gram"))
-    w_salt = Window.partitionBy("n", "salt").orderBy(*order)
-    survivors = (
-        counts.withColumn("salt", F.pmod(F.xxhash64("gram"), F.lit(VOCAB_SALT)))
-        .withColumn("rk", F.row_number().over(w_salt))
-        .where(F.col("rk") <= VOCAB_TOP_K)
-        .drop("rk", "salt")
-    )
-    w = Window.partitionBy("n").orderBy(*order)
-    return (
-        survivors.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= VOCAB_TOP_K)
-        .select("n", F.col("rk").cast("long").alias("rk"), "gram", "cnt")
+    return top_k(counts, VOCAB_TOP_K, order, ["gram"], by=["n"]).select(
+        "n", "rk", "gram", "cnt"
     )
 
 
@@ -758,7 +739,6 @@ def _fluency_oracle() -> str:
 
 
 POSTINGS_K = 20  # doc_ids kept per posting list
-POSTINGS_SALT = 16  # salt width for the two-stage postings rank
 
 
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -774,14 +754,10 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     index-build intermediate a production job persists anyway; here it is
     localCheckpointed once so the stats aggregate and the postings rank
     share it instead of re-exploding the corpus per side (the self-join
-    recompute rule). Postings use the salted two-stage min-K (min-K
-    distributes over the salt-partition union, same argument as
-    vocab_top_ngrams' top-K): a token with a hundred-million-doc posting
-    list never sorts in one task — the per-(token, salt) window bounds
-    every sort, the final window sees ≤ SALT·K rows per token, and the
-    collect only ever sees the ≤ K survivors."""
-    from pyspark.sql import Window
-
+    recompute rule). Postings are the first K doc_ids per token via
+    :func:`top_k`: a token with a hundred-million-doc posting list never
+    sorts in one task, and the collect only ever sees the ≤ K
+    survivors."""
     td = (
         _docs(spark, sf_dir)
         .select("doc_id", F.explode(_tokens_expr()).alias("tok"))
@@ -792,18 +768,8 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = td.groupBy("tok").agg(
         F.count("*").alias("df"), F.sum("c").alias("cnt")
     )
-    w_salt = Window.partitionBy(
-        "tok", F.pmod(F.xxhash64("doc_id"), F.lit(POSTINGS_SALT))
-    ).orderBy("doc_id")
-    survivors = (
-        td.withColumn("rk", F.row_number().over(w_salt))
-        .where(F.col("rk") <= POSTINGS_K)
-        .drop("rk")
-    )
-    w_tok = Window.partitionBy("tok").orderBy("doc_id")
     postings = (
-        survivors.withColumn("rk", F.row_number().over(w_tok))
-        .where(F.col("rk") <= POSTINGS_K)
+        top_k(td, POSTINGS_K, ["doc_id"], ["doc_id"], by=["tok"])
         .groupBy("tok")
         .agg(
             F.array_join(
@@ -1148,7 +1114,6 @@ PMI_MIN_PAIR = 5     # min pair count — kills one-off noise
 PMI_MIN_TERM = 20    # min unigram count for a term to participate
 PMI_TOP_K = 20
 PMI_SCALE = 10**6
-PMI_SALT = 16
 
 
 def q_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1164,8 +1129,8 @@ def q_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     per distance (never a positional self-join, the repo's
     zip-shifted-arrays rule) — feeding one (x, y) hash count; unigram
     counts join back on the TERM key (vocabulary-sized, not broadcast);
-    the global top-K is the salted two-stage rank. DECIMAL(38,0)
-    numerators carry 10^12-token corpora."""
+    the global top-K is :func:`top_k`. DECIMAL(38,0) numerators carry
+    10^12-token corpora."""
     docs = _docs(spark, sf_dir)
     toks = docs.select(
         F.filter(
@@ -1222,22 +1187,8 @@ def q_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     order = (F.desc("score"), F.asc("x"), F.asc("y"))
-    w_salt = Window.partitionBy("salt").orderBy(*order)
-    survivors = (
-        scored.withColumn(
-            "salt", F.pmod(F.xxhash64("x", "y"), F.lit(PMI_SALT))
-        )
-        .withColumn("rk", F.row_number().over(w_salt))
-        .where(F.col("rk") <= PMI_TOP_K)
-        .drop("rk", "salt")
-    )
-    w = Window.partitionBy(F.lit(0)).orderBy(*order)
-    return (
-        survivors.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= PMI_TOP_K)
-        .select(
-            F.col("rk").cast("long").alias("rk"), "x", "y", "n_xy", "score"
-        )
+    return top_k(scored, PMI_TOP_K, order, ["x", "y"]).select(
+        "rk", "x", "y", "n_xy", "score"
     )
 
 
@@ -1646,8 +1597,6 @@ def q_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
     global sort of the corpus) and stage 2 runs the same scan over the
     tiny union of survivors. plan_check's two-window + pmod assertion
     family applies verbatim. Output: doc_id, n_chars, uniq_permille."""
-    from pyspark.sql import Window
-
     ws = F.filter(F.split("text", r"\s+"), lambda x: x != "")
     d = (
         _docs(spark, sf_dir)
@@ -1683,7 +1632,7 @@ def q_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ["salt"],
     ).drop("salt")
-    return skyline(survivors.withColumn("g", F.lit(0)), ["g"]).select(
+    return skyline(survivors, []).select(
         "doc_id", "n_chars", "uniq_permille"
     )
 

@@ -15,6 +15,7 @@ from ..functions.expressions import (
     levenshtein_similarity_expr,
     normalize_for_comparison_expr,
     page_header_expr,
+    top_k,
     workflow_router_expr,
 )
 from ..functions.udfs import extract_numbers_udf
@@ -561,7 +562,6 @@ def q_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 STRAT_K = 10  # docs kept per source
-STRAT_SALT = 8  # salt width for the partial rank
 
 
 def stratified_sample(docs: DataFrame, k: int = STRAT_K) -> DataFrame:
@@ -572,35 +572,16 @@ def stratified_sample(docs: DataFrame, k: int = STRAT_K) -> DataFrame:
     hash-threshold (approximate counts, one pass): this one is exact-count
     at the cost of a rank.
 
-    The rank is TWO-STAGE like vocab_top_ngrams: a partial top-K per
-    (source, pmod(xxhash64(doc_id), STRAT_SALT)) partition bounds every
-    sort to ~1/S of a source's docs (a hot source never lands in one
-    task), then the final rank sees at most S*K rows per source. Top-K
-    distributes over the salt-partition union, so the result is identical
-    to the single-window form.
+    The rank is :func:`top_k` by source, spread on doc_id, so a hot
+    source never lands in one task.
 
     Output: source, doc_id, rk (1..K in md5 order)."""
-    from pyspark.sql import Window
-
-    order_key = F.md5(F.col("doc_id").cast("string"))
     base = docs.select(
-        "source",
-        "doc_id",
-        order_key.alias("okey"),
-        F.pmod(F.xxhash64(F.col("doc_id")), F.lit(STRAT_SALT)).alias("salt"),
+        "source", "doc_id", F.md5(F.col("doc_id").cast("string")).alias("okey")
     )
-    w_salt = Window.partitionBy("source", "salt").orderBy("okey", "doc_id")
-    survivors = (
-        base.withColumn("rk", F.row_number().over(w_salt))
-        .where(F.col("rk") <= k)
-        .drop("rk", "salt")
-    )
-    w_final = Window.partitionBy("source").orderBy("okey", "doc_id")
-    return (
-        survivors.withColumn("rk", F.row_number().over(w_final))
-        .where(F.col("rk") <= k)
-        .select("source", "doc_id", F.col("rk").cast("long").alias("rk"))
-    )
+    return top_k(
+        base, k, ["okey", "doc_id"], ["doc_id"], by=["source"]
+    ).select("source", "doc_id", "rk")
 
 
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:

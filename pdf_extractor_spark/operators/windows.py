@@ -1212,8 +1212,7 @@ def q_survival_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = grid.agg(F.sum(F.col("n_conv") + F.col("n_cens")).alias("tot"))
     w = (
-        Window.partitionBy(F.lit(0))
-        .orderBy("d")
+        Window.orderBy("d")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     return (

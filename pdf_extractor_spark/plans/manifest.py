@@ -106,13 +106,15 @@ def run_resumable(
     todo = pending_work(spark, transcripts, manifest_path, n_buckets)
     extracted = extract_transcripts(todo, salt_partitions)
     extracted.cache()
-    n = extracted.count()
-    if n:
-        # writer-scoped dynamic overwrite (idempotent re-runs replace only
-        # this run's buckets) — never a session-level conf mutation
-        (extracted.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy(BUCKET_COL).parquet(output_path))
-        record_metrics(extracted, manifest_path, run_id)
-    extracted.unpersist()
+    try:
+        n = extracted.count()
+        if n:
+            # writer-scoped dynamic overwrite (idempotent re-runs replace
+            # only this run's buckets) — never a session-level conf mutation
+            (extracted.write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .partitionBy(BUCKET_COL).parquet(output_path))
+            record_metrics(extracted, manifest_path, run_id)
+    finally:
+        extracted.unpersist()
     return n

@@ -9,6 +9,9 @@ in plan shape fails loudly rather than silently costing a shuffle at 100 TB:
   baselines + bounded 1-row combine crossJoins);
 - every query additionally carries a shape rule (RULES entry or
   TWO_STAGE_RANK membership) — the script fails if one is missing;
+- a window with no partition key (one task sorts its whole input) appears
+  only in TWO_STAGE_RANK queries or in BOUNDED_GLOBAL_WINDOW, which names
+  the bound on that window's input;
 - parquet scans carry PushedFilters + pruned ReadSchema where expected;
 - dimension joins broadcast (revenue_by_nation, knn_cosine, repair_coalesce);
 - the extraction pipeline has exactly one Exchange (the per-conversation
@@ -18,6 +21,7 @@ Usage: python scripts/plan_check.py [sf_dir]
 """
 from __future__ import annotations
 
+import json
 import re
 import sys
 
@@ -417,15 +421,38 @@ NLJ_ALLOWED = {
 GENERIC_FORBIDDEN = [r"CartesianProduct", r"BatchEvalPython",
                      r"FlatMapCoGroupsInPandas"]
 
-# Ops built on the salted two-stage top-K: exactly two Window nodes (the
-# salted partial rank + the small final rank) and a pmod salt in the plan —
-# one Window would be a single/few-task global sort at 100 TB.
+# Ops built on the salted two-stage top-K (functions.expressions.top_k):
+# exactly two Window nodes (the salted partial rank + the small final rank)
+# and a pmod salt in the plan — one Window would be a single/few-task global
+# sort at 100 TB.
 TWO_STAGE_RANK = ["vocab_top_ngrams", "inverted_index", "stratified_sample",
                   "cluster_top_terms", "bm25_top_k", "shipping_priority",
-                  "join_key_skew_profile",
+                  "join_key_skew_profile", "cooccurrence_pmi",
                   # the skyline distributes like top-K: salted local front
                   # (window 1) + final front over survivors (window 2)
                   "pareto_front", "decayed_leaderboard"]
+
+# Queries outside TWO_STAGE_RANK allowed a window with no partition key,
+# each with the bound that keeps that window's single task small.
+BOUNDED_GLOBAL_WINDOW = {
+    "budget_apportion": "one row per source",
+    "loss_mask_spans": "token_packing's offsets: one row per PACK_BUCKET"
+                       " doc_id range",
+    "rrf_fusion": "<= 2 * FUSED_TOP_K fused rows; each input list is a"
+                  " top_k final rank over <= TOP_K_SALT * k rows",
+    "search_snippets": "bm25_top_k's final rank over <= TOP_K_SALT *"
+                       " BM25_TOP_K rows",
+    "sequence_manifest": "token_packing's offsets: one row per PACK_BUCKET"
+                         " doc_id range",
+    "sequence_shuffle": "token_packing's offsets (one row per PACK_BUCKET"
+                        " doc_id range) and <= 256 hex-prefix bucket rows",
+    "shard_assign": "<= HRW_SHARDS rows",
+    "survival_table": "one row per day of the calendar-bounded day grid",
+    "token_packing": "one row per PACK_BUCKET doc_id range",
+    "token_packing_incremental": "one row per PACK_BUCKET doc_id range of"
+                                 " the new batch",
+    "type_share_drift": "one row per day bucket",
+}
 
 
 def plan_of(df) -> str:
@@ -440,6 +467,18 @@ def plan_tree(df) -> str:
     node counting; the formatted mode lists every node twice)."""
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "simple"
+    )
+
+
+def global_windows(df) -> int:
+    """Number of WindowExec nodes with an empty partitionSpec in the
+    physical plan (a foldable key such as lit(0) is already optimized
+    away there)."""
+    nodes = json.loads(df._jdf.queryExecution().sparkPlan().toJSON())
+    return sum(
+        1 for n in nodes
+        if n.get("class", "").endswith(".WindowExec")
+        and not n.get("partitionSpec")
     )
 
 
@@ -460,6 +499,9 @@ def main() -> int:
     uncovered = sorted(set(queries) - set(RULES) - set(TWO_STAGE_RANK))
     if uncovered:
         failures.append(f"queries with no plan rule: {uncovered}")
+    stale = sorted(set(BOUNDED_GLOBAL_WINDOW) - set(queries))
+    if stale:
+        failures.append(f"BOUNDED_GLOBAL_WINDOW names no query: {stale}")
 
     for name in sorted(queries):
         df = queries[name](spark, sf_dir)
@@ -497,6 +539,19 @@ def main() -> int:
                 failures.append(
                     f"{name}: salted partial rank missing (no pmod in plan)"
                 )
+        n_global = global_windows(df)
+        if n_global and not (name in TWO_STAGE_RANK
+                             or name in BOUNDED_GLOBAL_WINDOW):
+            failures.append(
+                f"{name}: {n_global} Window(s) with no partition key — one"
+                f" task sorts the whole input (add a key, or name the bound"
+                f" in BOUNDED_GLOBAL_WINDOW)"
+            )
+        if not n_global and name in BOUNDED_GLOBAL_WINDOW:
+            failures.append(
+                f"{name}: listed in BOUNDED_GLOBAL_WINDOW but has no"
+                f" partition-less Window"
+            )
         print(f"checked {name}")
 
     # Pipeline shape: exactly one Exchange (assembly regroup), one Arrow UDF

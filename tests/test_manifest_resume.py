@@ -2,7 +2,9 @@
 process zero rows and leave the output byte-identical; a partially
 completed run must re-run only the missing buckets."""
 import pyspark.sql.functions as F
+import pytest
 
+from pdf_extractor_spark.plans import manifest
 from pdf_extractor_spark.plans.manifest import (
     completed_buckets,
     pending_work,
@@ -74,3 +76,23 @@ def test_empty_manifest_dir_reads_as_no_manifest(spark, tmp_path):
     # the successful append committed the manifest: second run is a no-op
     n2 = run_resumable(spark, t, out, str(man), run_id="r2", n_buckets=8)
     assert n2 == 0
+
+
+def test_failed_run_releases_its_cache(spark, tmp_path, monkeypatch):
+    """A run whose manifest append raises must not leave its extraction
+    cached: a retry in the same session would otherwise reuse the failed
+    run's blocks, and a long-lived session would keep every failed run's
+    extraction in executor memory."""
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("manifest append failed")
+
+    monkeypatch.setattr(manifest, "record_metrics", boom)
+    spark.catalog.clearCache()
+    t = transcripts_df(spark, 6, seed=3)
+    with pytest.raises(RuntimeError, match="manifest append failed"):
+        run_resumable(
+            spark, t, str(tmp_path / "out"), str(tmp_path / "manifest"),
+            run_id="r1", n_buckets=8,
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

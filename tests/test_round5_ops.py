@@ -37,7 +37,10 @@ def test_shingle_pair_suite_parts_pinned(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text"
     )
+    spark.catalog.clearCache()
     parts = shingle_pair_suite_parts(docs)
+    # the shared pair-counts frame is checkpointed, not left in the cache
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     assert _same_rows(parts["jaccard"], q_dedup_ngram_jaccard(spark, SF_DIR))
     assert _same_rows(parts["pred"], minhash_lsh_pairs(docs))
     assert _same_rows(
@@ -75,8 +78,8 @@ def test_shingle_pair_suite_drops_all_cuts_observed(spark):
     )
     docs = hot.unionByName(pair)
     suite_obs = Observation()
-    # parts() materializes the observed pair-counts frame (persist + a
-    # metrics-firing count) at construction, so metrics are collected here
+    # parts() materializes the observed pair-counts frame (an eager
+    # localCheckpoint) at construction, so metrics are collected here
     D.shingle_pair_suite_parts(docs, suite_obs)
     got = suite_obs.get
 

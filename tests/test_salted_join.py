@@ -24,7 +24,13 @@ def test_equals_plain_join_under_hot_key(spark):
 
 
 def test_salt_spreads_hot_key(spark):
+    import inspect
+
     from pdf_extractor_spark.operators.joins import SKEW_SALT
+
+    # SKEW_SALT is the width salted_join actually uses
+    salt_param = inspect.signature(salted_join).parameters["salt"]
+    assert salt_param.default == SKEW_SALT
 
     big = spark.createDataFrame(
         [(i, 7) for i in range(400)], "row_id long, k long"
