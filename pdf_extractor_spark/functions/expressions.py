@@ -128,10 +128,9 @@ def top_k(
     order: Sequence,
     spread: Sequence[str],
     by: Sequence[str] = (),
-    rank: str = "rk",
 ) -> DataFrame:
     """The first ``k`` rows of each ``by`` group (of the whole frame when
-    ``by`` is empty) under ``order``, numbered 1..k as a bigint ``rank``
+    ``by`` is empty) under ``order``, numbered 1..k as a bigint ``rk``
     column — the salted two-stage rank behind every top-K in the registry.
 
     Stage 1 ranks inside each shard ``(*by, pmod(xxhash64(*spread),
@@ -150,16 +149,16 @@ def top_k(
     shard = F.pmod(F.xxhash64(*spread), F.lit(TOP_K_SALT))
     return (
         df.withColumn(
-            rank,
+            "rk",
             F.row_number().over(Window.partitionBy(*by, shard).orderBy(*order)),
         )
-        .where(F.col(rank) <= k)
+        .where(F.col("rk") <= k)
         .withColumn(
-            rank,
+            "rk",
             F.row_number().over(Window.partitionBy(*by).orderBy(*order))
             .cast("long"),
         )
-        .where(F.col(rank) <= k)
+        .where(F.col("rk") <= k)
     )
 
 

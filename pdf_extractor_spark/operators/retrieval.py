@@ -125,8 +125,8 @@ def _semantic_top_k(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
         )
     )
     return top_k(
-        scored, k, (F.desc("sim"), F.asc("doc_id")), ["doc_id"], rank="rank"
-    ).select("rank", "doc_id")
+        scored, k, (F.desc("sim"), F.asc("doc_id")), ["doc_id"]
+    ).select("rk", "doc_id")
 
 
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -140,15 +140,13 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final window is bounded by construction, never corpus-sized.
 
     Output: rk, doc_id, rrf_score, n_systems."""
-    lex = q_bm25_top_k(spark, sf_dir).select(
-        "doc_id", F.col("rk").alias("rank")
-    )
+    lex = q_bm25_top_k(spark, sf_dir).select("doc_id", "rk")
     sem = _semantic_top_k(spark, sf_dir, FUSED_TOP_K)
     fused = (
-        lex.unionByName(sem.select("doc_id", "rank"))
+        lex.unionByName(sem.select("doc_id", "rk"))
         .select(
             "doc_id",
-            F.expr(f"div({RRF_SCALE}, {RRF_K} + rank)").alias("c"),
+            F.expr(f"div({RRF_SCALE}, {RRF_K} + rk)").alias("c"),
         )
         .groupBy("doc_id")
         .agg(

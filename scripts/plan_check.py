@@ -10,8 +10,9 @@ in plan shape fails loudly rather than silently costing a shuffle at 100 TB:
 - every query additionally carries a shape rule (RULES entry or
   TWO_STAGE_RANK membership) — the script fails if one is missing;
 - a window with no partition key (one task sorts its whole input) appears
-  only in TWO_STAGE_RANK queries or in BOUNDED_GLOBAL_WINDOW, which names
-  the bound on that window's input;
+  only as the final rank of a whole-frame TWO_STAGE_RANK query (a grouped
+  one has none) or in BOUNDED_GLOBAL_WINDOW, which names the bound on that
+  window's input;
 - parquet scans carry PushedFilters + pruned ReadSchema where expected;
 - dimension joins broadcast (revenue_by_nation, knn_cosine, repair_coalesce);
 - the extraction pipeline has exactly one Exchange (the per-conversation
@@ -424,13 +425,16 @@ GENERIC_FORBIDDEN = [r"CartesianProduct", r"BatchEvalPython",
 # Ops built on the salted two-stage top-K (functions.expressions.top_k):
 # exactly two Window nodes (the salted partial rank + the small final rank)
 # and a pmod salt in the plan — one Window would be a single/few-task global
-# sort at 100 TB.
-TWO_STAGE_RANK = ["vocab_top_ngrams", "inverted_index", "stratified_sample",
-                  "cluster_top_terms", "bm25_top_k", "shipping_priority",
-                  "join_key_skew_profile", "cooccurrence_pmi",
+# sort at 100 TB. Each maps to its rank's group key, or None when it ranks
+# the whole frame: only then may the final rank (over <= TOP_K_SALT * k
+# rows) have no partition key; a grouped rank must keep its key in both.
+TWO_STAGE_RANK = {"vocab_top_ngrams": "n", "inverted_index": "tok",
+                  "stratified_sample": "source", "cluster_top_terms": "cluster",
+                  "bm25_top_k": None, "shipping_priority": None,
+                  "join_key_skew_profile": None, "cooccurrence_pmi": None,
                   # the skyline distributes like top-K: salted local front
                   # (window 1) + final front over survivors (window 2)
-                  "pareto_front", "decayed_leaderboard"]
+                  "pareto_front": None, "decayed_leaderboard": None}
 
 # Queries outside TWO_STAGE_RANK allowed a window with no partition key,
 # each with the bound that keeps that window's single task small.
@@ -540,8 +544,15 @@ def main() -> int:
                     f"{name}: salted partial rank missing (no pmod in plan)"
                 )
         n_global = global_windows(df)
-        if n_global and not (name in TWO_STAGE_RANK
-                             or name in BOUNDED_GLOBAL_WINDOW):
+        if name in TWO_STAGE_RANK:
+            want = 0 if TWO_STAGE_RANK[name] else 1
+            if n_global != want:
+                failures.append(
+                    f"{name}: expected {want} Window(s) with no partition"
+                    f" key (rank group {TWO_STAGE_RANK[name]!r}), found"
+                    f" {n_global}"
+                )
+        elif n_global and name not in BOUNDED_GLOBAL_WINDOW:
             failures.append(
                 f"{name}: {n_global} Window(s) with no partition key — one"
                 f" task sorts the whole input (add a key, or name the bound"
