@@ -119,46 +119,32 @@ def floordiv_duck(a: str, b: int) -> str:
     return f"((({a}) - (((({a}) % {b}) + {b}) % {b})) // {b})"
 
 
-TOP_K_SALT = 16
-
-
 def top_k(
-    df: DataFrame,
-    k: int,
-    order: Sequence,
-    spread: Sequence[str],
-    by: Sequence[str] = (),
+    df: DataFrame, k: int, order: Sequence, by: Sequence[str] = ()
 ) -> DataFrame:
     """The first ``k`` rows of each ``by`` group (of the whole frame when
     ``by`` is empty) under ``order``, numbered 1..k as a bigint ``rk``
-    column — the salted two-stage rank behind every top-K in the registry.
+    column — the one top-K behind every ranked top-K in the registry.
 
-    Stage 1 ranks inside each shard ``(*by, pmod(xxhash64(*spread),
-    TOP_K_SALT))`` and keeps rank <= k; stage 2 ranks the survivors per
-    ``by`` group and keeps rank <= k again. The result equals the
-    single-window form: a row in its group's top-k has fewer than k rows
-    ahead of it in the group, so fewer than k in its shard, and survives
-    stage 1 (top-K distributes over the shard union). No stage-1 task sorts
-    more than its shard of a group, and stage 2 sees at most
-    TOP_K_SALT * k rows per group — a single window would sort a whole hot
-    group, or with no ``by`` the whole frame, in one task.
+    One ``row_number()`` window filtered to ``rk <= k``. Spark's
+    InferWindowGroupLimit rule (SPARK-37099) plans it as a two-stage
+    top-K: a grouped rank gets a ``WindowGroupLimit … Partial`` before the
+    Exchange (no task ships more than k rows per group) and a ``Final``
+    after it; a whole-frame rank becomes ``TakeOrderedAndProject`` (each
+    task keeps its own top k; one task merges them). The rule fires only
+    while k <= ``spark.sql.optimizer.windowGroupLimitThreshold`` (default
+    1000) and the window spec carries no other function; the largest k in
+    the registry is VOCAB_TOP_K = 100. scripts/plan_check.py pins the
+    native shape for every caller.
 
     ``order`` must be a total order (end it on a unique key), or ties make
-    the kept rows depend on the partitioning. scripts/plan_check.py pins
-    the two-Window + pmod shape for every TWO_STAGE_RANK query."""
-    shard = F.pmod(F.xxhash64(*spread), F.lit(TOP_K_SALT))
+    the kept rows depend on the partitioning."""
     return (
         df.withColumn(
-            "rk",
-            F.row_number().over(Window.partitionBy(*by, shard).orderBy(*order)),
+            "rk", F.row_number().over(Window.partitionBy(*by).orderBy(*order))
         )
         .where(F.col("rk") <= k)
-        .withColumn(
-            "rk",
-            F.row_number().over(Window.partitionBy(*by).orderBy(*order))
-            .cast("long"),
-        )
-        .where(F.col("rk") <= k)
+        .withColumn("rk", F.col("rk").cast("long"))
     )
 
 

@@ -499,7 +499,7 @@ def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(rev_u4).alias("revenue_u4"))
     )
     order = (F.desc("revenue_u4"), F.asc("l_orderkey"))
-    return top_k(grouped, Q3_TOP_K, order, ["l_orderkey"]).select(
+    return top_k(grouped, Q3_TOP_K, order).select(
         "rk",
         "l_orderkey",
         F.col("o_orderdate").cast("string").alias("o_orderdate"),
@@ -1206,15 +1206,11 @@ def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_d"), F.sum("x").alias("sum_d")
     )
     dev = F.expr("abs(x * n_d - sum_d) * 1000 div sum_d")
-    w = Window.partitionBy("event_type").orderBy(
-        F.desc("dev_permille"), F.asc("day")
+    scored = daily.join(dowm, ["event_type", "dow"]).select(
+        "event_type", "day", "dow", "x", dev.alias("dev_permille")
     )
-    return (
-        daily.join(dowm, ["event_type", "dow"])
-        .select("event_type", "day", "dow", "x", dev.alias("dev_permille"))
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .where(F.col("rk") <= ANOMALY_TOP_K)
-    )
+    order = (F.desc("dev_permille"), F.asc("day"))
+    return top_k(scored, ANOMALY_TOP_K, order, by=["event_type"])
 
 
 QUERIES["seasonal_anomaly"] = q_seasonal_anomaly
@@ -1291,7 +1287,7 @@ def q_decayed_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     order = (F.desc("score"), F.asc("user_id"))
-    return top_k(scores, DECAY_TOP_K, order, ["user_id"]).select(
+    return top_k(scores, DECAY_TOP_K, order).select(
         "rk", "user_id", "score", "n_events"
     )
 

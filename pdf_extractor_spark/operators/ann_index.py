@@ -22,7 +22,7 @@ module adds that split on the fsio commit protocol (plans/fsio.py):
 
 * ``ann_index_serve(ev, snap)``: the query path against a loaded
   snapshot — probes from the STORED coarse centroids, ADC over the
-  STORED codes via broadcast LUT equi-joins, salted two-stage shortlist,
+  STORED codes via broadcast LUT equi-joins, a top_k shortlist,
   exact re-rank reading raw vectors by id. No fit anywhere; collecting
   the snapshot's model rows is bounded model-state driver traffic
   (the broadcast-Lloyd layout's contract).
@@ -152,8 +152,8 @@ def ann_index_load(spark: SparkSession, store_root: str) -> DataFrame:
 def ann_index_serve(ev: DataFrame, snap: DataFrame) -> DataFrame:
     """IVF-PQ retrieval against a loaded snapshot: stored coarse centroids
     give each query its IVF_NPROBE probe cells, stored codes give the
-    candidates (broadcast equi-join on the cell id), ADC + salted
-    two-stage shortlist + exact re-rank are the shared bounded machinery.
+    candidates (broadcast equi-join on the cell id), ADC + top_k
+    shortlist + exact re-rank are the shared bounded machinery.
     Output: q_id, k, n_hits (the ann_ivfpq_recall contract)."""
     model = snap.where(F.col("part") != "code").select(
         "part", "m", "cid", "cvec"

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import MAX_OUTLINES, MAX_PAGES_PER_CHUNK
-from ..functions.expressions import chunk_id_expr, safe_filename_expr
+from ..functions.expressions import chunk_id_expr, safe_filename_expr, top_k
 
 
 def q_chunk_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,19 +54,19 @@ def q_outline_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("p_partkey") % 97).alias("page"),
         F.col("p_name").alias("title"),
     )
-    w = Window.partitionBy("doc").orderBy("page", "title")
     # total_pages must be computed BEFORE the MAX_OUTLINES cap (the reference
     # spans the last kept section to the document end, pdf_processor.py:174-181
     # — not to the last *kept* outline's page).
-    ranked = (
-        outlines.withColumn("total_pages", F.max("page").over(Window.partitionBy("doc")))
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= MAX_OUTLINES)
+    ranked = top_k(
+        outlines.withColumn("total_pages", F.max("page").over(Window.partitionBy("doc"))),
+        MAX_OUTLINES,
+        ["page", "title"],
+        by=["doc"],
     )
     w2 = Window.partitionBy("doc").orderBy("page", "title")
     sec = ranked.select(
         "doc",
-        "rk",
+        F.col("rk").cast("int").alias("rk"),
         "title",
         "page",
         F.coalesce(F.lead("page").over(w2), F.col("total_pages")).alias("end_page"),

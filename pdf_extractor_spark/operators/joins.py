@@ -631,7 +631,7 @@ def q_join_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     order = (F.desc("cnt"), F.asc("user_id"))
     return (
-        top_k(counts, SKEW_TOP_K, order, ["user_id"])
+        top_k(counts, SKEW_TOP_K, order)
         .crossJoin(F.broadcast(totals))
         .select(
             "rk",

@@ -24,7 +24,7 @@ argmin ties to the smaller cid, centroid updates as round(int_sum * 1000.0
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.expressions import top_k
 from .similarity_search import (
@@ -207,14 +207,14 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Honest accuracy metric for the full IVF-PQ retrieval layout: ADC
     over the compressed codes builds a PQ_RERANK-candidate shortlist
-    (broadcast LUT equi-joins + salted two-stage top-R — the corpus never
-    shuffles and no task sorts a query's full candidate list), the
-    shortlist alone is re-ranked with exact distances (PQ_RERANK rows per
-    query — the standard refine step), and the metric is how many of the
-    exact integer-L2 top-K survive. Measured at sf0.01: recall@3 = 0.90
-    re-ranked vs 0.20 raw-ADC — the re-rank is what makes the compressed
-    scan usable, at PQ_RERANK exact computations per query instead of a
-    full-corpus scan.
+    (broadcast LUT equi-joins + a top_k top-R whose partial
+    WindowGroupLimit ships at most PQ_RERANK rows per query from each task
+    — the corpus never shuffles), the shortlist alone is re-ranked with
+    exact distances (PQ_RERANK rows per query — the standard refine
+    step), and the metric is how many of the exact integer-L2 top-K
+    survive. Measured at sf0.01: recall@3 = 0.90 re-ranked vs 0.20
+    raw-ADC — the re-rank is what makes the compressed scan usable, at
+    PQ_RERANK exact computations per query instead of a full-corpus scan.
 
     Output: q_id, k, n_hits (integers; corpus recall@k = sum/sum)."""
     ev = _quantized_vecs(_emb(spark, sf_dir)).localCheckpoint(eager=True)
@@ -266,7 +266,7 @@ def _recall_from_candidates(
     scored = adc.select("q_id", "vec_id", adist.alias("adist"))
     # top-R shortlist: a query's candidate list never sorts in one task
     shortlist = top_k(
-        scored, PQ_RERANK, ["adist", "vec_id"], ["vec_id"], by=["q_id"]
+        scored, PQ_RERANK, ["adist", "vec_id"], by=["q_id"]
     ).select("q_id", "vec_id")
 
     # exact integer-L2 distance form, shared by the re-rank and the truth
@@ -279,13 +279,13 @@ def _recall_from_candidates(
 
     # refine: exact distances on the shortlist only (N_QUERIES x PQ_RERANK
     # rows — the shortlist broadcasts, the corpus side is an equi-join)
-    w_rerank = Window.partitionBy("q_id").orderBy("edist", "vec_id")
-    approx = (
+    reranked = (
         ev.join(F.broadcast(shortlist), "vec_id")
         .join(F.broadcast(qside), "q_id")
         .select("q_id", "vec_id", edist.alias("edist"))
-        .withColumn("rk", F.row_number().over(w_rerank))
-        .where(F.col("rk") <= PQ_TOP_K)
+    )
+    approx = (
+        top_k(reranked, PQ_TOP_K, ["edist", "vec_id"], by=["q_id"])
         .select("q_id", "vec_id")
         .withColumn("hit", F.lit(1))
     )
@@ -295,12 +295,9 @@ def _recall_from_candidates(
         ev.join(F.broadcast(qside), F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id", edist.alias("edist"))
     )
-    w_exact = Window.partitionBy("q_id").orderBy("edist", "vec_id")
-    exact = (
-        exact_scored.withColumn("rk", F.row_number().over(w_exact))
-        .where(F.col("rk") <= PQ_TOP_K)
-        .select("q_id", "vec_id")
-    )
+    exact = top_k(
+        exact_scored, PQ_TOP_K, ["edist", "vec_id"], by=["q_id"]
+    ).select("q_id", "vec_id")
     return (
         exact.join(F.broadcast(approx), ["q_id", "vec_id"], "left")
         .groupBy("q_id")

@@ -31,7 +31,7 @@ join; the final rank is ``functions.expressions.top_k``.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.expressions import top_k
 from .text_analysis import _DUCK_TOKS, _tokens_expr
@@ -80,9 +80,9 @@ def bm25_top_k(
             F.count("*").alias("n_terms"),
         )
     )
-    return top_k(
-        scored, k, (F.desc("score"), F.asc("doc_id")), ["doc_id"]
-    ).select("rk", "doc_id", "score", "n_terms")
+    return top_k(scored, k, (F.desc("score"), F.asc("doc_id"))).select(
+        "rk", "doc_id", "score", "n_terms"
+    )
 
 
 def q_bm25_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,9 +124,9 @@ def _semantic_top_k(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
             ).alias("sim"),
         )
     )
-    return top_k(
-        scored, k, (F.desc("sim"), F.asc("doc_id")), ["doc_id"]
-    ).select("rk", "doc_id")
+    return top_k(scored, k, (F.desc("sim"), F.asc("doc_id"))).select(
+        "rk", "doc_id"
+    )
 
 
 def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -135,9 +135,9 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum(RRF_SCALE // (RRF_K + rank)) over the lists it appears in; the
     fused top-FUSED_TOP_K is returned with its system coverage.
 
-    Scale shape: each system already bounds its own output to K rows with
-    plan-pinned two-stage ranks, so the fusion operates on <= 2K rows —
-    the final window is bounded by construction, never corpus-sized.
+    Scale shape: each system bounds its own output to K rows with a
+    :func:`top_k` that plans as TakeOrderedAndProject, so the fusion
+    operates on <= 2K rows, and its final rank is one more top_k.
 
     Output: rk, doc_id, rrf_score, n_systems."""
     lex = q_bm25_top_k(spark, sf_dir).select("doc_id", "rk")
@@ -154,16 +154,9 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_systems"),
         )
     )
-    w = Window.orderBy(F.desc("rrf_score"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= FUSED_TOP_K)
-        .select(
-            F.col("rk").cast("long").alias("rk"),
-            "doc_id",
-            "rrf_score",
-            "n_systems",
-        )
+    order = (F.desc("rrf_score"), F.asc("doc_id"))
+    return top_k(fused, FUSED_TOP_K, order).select(
+        "rk", "doc_id", "rrf_score", "n_systems"
     )
 
 

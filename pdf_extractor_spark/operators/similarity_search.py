@@ -26,6 +26,17 @@ def _emb(spark, sf_dir):
     )
 
 
+def _top_neighbors(scored: DataFrame, k: int, *extra: str) -> DataFrame:
+    """The k most similar neighbors of each q_id (sim desc, neighbor_id
+    asc) via :func:`top_k`, as (q_id, int rank, neighbor_id, *extra,
+    sim)."""
+    order = (F.desc("sim"), F.asc("neighbor_id"))
+    return top_k(scored, k, order, by=["q_id"]).select(
+        "q_id", F.col("rk").cast("int").alias("rank"), "neighbor_id",
+        *extra, "sim",
+    )
+
+
 def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k for the first N_QUERIES vectors. The query
     side is tiny -> broadcast it; the big side streams once."""
@@ -40,12 +51,7 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"),
         F.round(cosine_similarity_expr(F.col("q_emb"), F.col("embedding")), 4).alias("sim"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("q_id", "rank", "neighbor_id", "sim")
-    )
+    return _top_neighbors(scored, TOP_K)
 
 
 def _sign_bucket(emb_col):
@@ -93,12 +99,7 @@ def q_ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"),
         F.round(cosine_similarity_expr(F.col("q_emb"), F.col("embedding")), 4).alias("sim"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("q_id", "rank", "neighbor_id", "sim")
-    )
+    return _top_neighbors(scored, TOP_K)
 
 
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -554,12 +555,7 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sim"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("q_id", "rank", "neighbor_id", "sim")
-    )
+    return _top_neighbors(scored, TOP_K)
 
 
 def _ann_ivf_trained_oracle() -> str:
@@ -644,9 +640,9 @@ def q_cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("cnt")
     )
     order = (F.desc("cnt"), F.asc("gram"))
-    return top_k(
-        counts, TOP_TERMS, order, ["gram"], by=["cluster"]
-    ).select("cluster", "rk", "gram", "cnt")
+    return top_k(counts, TOP_TERMS, order, by=["cluster"]).select(
+        "cluster", "rk", "gram", "cnt"
+    )
 
 
 def _cluster_top_terms_oracle() -> str:
@@ -727,12 +723,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine_similarity_expr(F.col("q_emb"), F.col("embedding")), 4
         ).alias("sim"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= HN_TOP_K)
-        .select("q_id", "rank", "neighbor_id", "neg_label", "sim")
-    )
+    return _top_neighbors(scored, HN_TOP_K, "neg_label")
 
 
 ORACLES["hard_negatives"] = (

@@ -12,12 +12,13 @@ Reference parity targets (file:line in /root/reference):
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.expressions import (
     jaccard_words_expr,
     levenshtein_similarity_expr,
+    top_k,
 )
 
 QUICK_SIM_THRESHOLD = 0.95
@@ -206,11 +207,9 @@ def q_frequency_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.filter(F.split("text", r"\s+"), lambda x: x != "")).alias("word"),
     )
     counts = words.groupBy("lang", "word").agg(F.count("*").alias("cnt"))
-    w = Window.partitionBy("lang").orderBy(F.desc("cnt"), F.asc("word"))
-    return (
-        counts.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_WORDS)
-        .select("lang", "rank", "word", "cnt")
+    order = (F.desc("cnt"), F.asc("word"))
+    return top_k(counts, TOP_WORDS, order, by=["lang"]).select(
+        "lang", F.col("rk").cast("int").alias("rank"), "word", "cnt"
     )
 
 

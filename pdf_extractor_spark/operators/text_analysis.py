@@ -303,10 +303,9 @@ def q_vocab_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from zipping the token array with its shifted self — never a
     per-element lambda over a recomputed split (CLAUDE.md perf rule).
 
-    The rank is :func:`top_k` by n, spread on gram — at 100 TB the
-    distinct gram count is O(billions) and a single
-    Window.partitionBy("n") with n in {1,2} would funnel everything into
-    two tasks."""
+    The rank is :func:`top_k` by n — at 100 TB the distinct gram count is
+    O(billions), and its partial WindowGroupLimit keeps each map task to
+    VOCAB_TOP_K rows per n before the two n groups meet in two tasks."""
     d = _docs(spark, sf_dir).select(_tokens_expr().alias("toks"))
     n = F.size("toks")
     uni = d.select(F.explode("toks").alias("gram")).withColumn(
@@ -330,7 +329,7 @@ def q_vocab_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
     )
     order = (F.desc("cnt"), F.asc("gram"))
-    return top_k(counts, VOCAB_TOP_K, order, ["gram"], by=["n"]).select(
+    return top_k(counts, VOCAB_TOP_K, order, by=["n"]).select(
         "n", "rk", "gram", "cnt"
     )
 
@@ -769,7 +768,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("df"), F.sum("c").alias("cnt")
     )
     postings = (
-        top_k(td, POSTINGS_K, ["doc_id"], ["doc_id"], by=["tok"])
+        top_k(td, POSTINGS_K, ["doc_id"], by=["tok"])
         .groupBy("tok")
         .agg(
             F.array_join(
@@ -1094,18 +1093,9 @@ def q_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n))
         .select("doc_id", "term", "tf", "df", score.alias("score"))
     )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= KEYWORDS_K)
-        .select(
-            "doc_id",
-            F.col("rk").cast("long").alias("rk"),
-            "term",
-            "tf",
-            "df",
-            "score",
-        )
+    order = (F.desc("score"), F.asc("term"))
+    return top_k(scored, KEYWORDS_K, order, by=["doc_id"]).select(
+        "doc_id", "rk", "term", "tf", "df", "score"
     )
 
 
@@ -1187,7 +1177,7 @@ def q_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     order = (F.desc("score"), F.asc("x"), F.asc("y"))
-    return top_k(scored, PMI_TOP_K, order, ["x", "y"]).select(
+    return top_k(scored, PMI_TOP_K, order).select(
         "rk", "x", "y", "n_xy", "score"
     )
 
@@ -1595,8 +1585,10 @@ def q_pareto_front(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition's local skyline (sort by x desc within salt, keep rows
     whose y exceeds the running max — one window per salt, never a
     global sort of the corpus) and stage 2 runs the same scan over the
-    tiny union of survivors. plan_check's two-window + pmod assertion
-    family applies verbatim. Output: doc_id, n_chars, uniq_permille."""
+    tiny union of survivors. Unlike a top-K, Spark cannot limit the
+    running-max window, so the salt stays; plan_check pins its pmod and
+    names the final window's bound in BOUNDED_GLOBAL_WINDOW. Output:
+    doc_id, n_chars, uniq_permille."""
     ws = F.filter(F.split("text", r"\s+"), lambda x: x != "")
     d = (
         _docs(spark, sf_dir)

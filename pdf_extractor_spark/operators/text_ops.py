@@ -572,16 +572,16 @@ def stratified_sample(docs: DataFrame, k: int = STRAT_K) -> DataFrame:
     hash-threshold (approximate counts, one pass): this one is exact-count
     at the cost of a rank.
 
-    The rank is :func:`top_k` by source, spread on doc_id, so a hot
-    source never lands in one task.
+    The rank is :func:`top_k` by source: each map task ships at most K
+    rows per source, so a hot source never lands in one task.
 
     Output: source, doc_id, rk (1..K in md5 order)."""
     base = docs.select(
         "source", "doc_id", F.md5(F.col("doc_id").cast("string")).alias("okey")
     )
-    return top_k(
-        base, k, ["okey", "doc_id"], ["doc_id"], by=["source"]
-    ).select("source", "doc_id", "rk")
+    return top_k(base, k, ["okey", "doc_id"], by=["source"]).select(
+        "source", "doc_id", "rk"
+    )
 
 
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -653,8 +653,7 @@ def _temperature_oracle() -> str:
 
 ORACLES["mixture_resample"] = _mixture_oracle()
 ORACLES["temperature_mixture"] = _temperature_oracle()
-# The salted partial rank never changes the result (top-K distributes over
-# the salt union), so the oracle is the plain single-window form.
+# top_k is the plain single-window rank, so the oracle spells it the same.
 ORACLES["stratified_sample"] = f"""
         SELECT source, doc_id, rk FROM (
             SELECT source, doc_id,

@@ -21,7 +21,9 @@ no windows, no Python.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
+
+from ..functions.expressions import top_k
 
 # Registered domains rejected outright (license/abuse lists in production).
 BLOCKED_DOMAINS = ["example.net"]
@@ -128,10 +130,8 @@ def anchor_text_agg(links: DataFrame) -> DataFrame:
         F.countDistinct("src_host").alias("n_src_hosts"),
     )
     ac = links.groupBy("tgt", "anchor").agg(F.count("*").alias("cnt"))
-    w = Window.partitionBy("tgt").orderBy(F.desc("cnt"), F.asc("anchor"))
     top = (
-        ac.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= ANCHOR_TOP_K)
+        top_k(ac, ANCHOR_TOP_K, (F.desc("cnt"), F.asc("anchor")), by=["tgt"])
         .groupBy("tgt")
         .agg(
             F.array_join(

@@ -68,14 +68,6 @@ def curate(
     return out
 
 
-def curate_stages(
-    transcripts: DataFrame, benchmark: DataFrame | None = None
-) -> list[tuple[str, DataFrame]]:
-    """``iter_curate_stages`` drained to a list (materializes everything
-    but the final stage at call time)."""
-    return list(iter_curate_stages(transcripts, benchmark))
-
-
 def iter_curate_stages(
     transcripts: DataFrame,
     benchmark: DataFrame | None = None,

@@ -7,12 +7,13 @@ in plan shape fails loudly rather than silently costing a shuffle at 100 TB:
   Python (BatchEvalPython), no cogrouped-Pandas nodes, and no
   BroadcastNestedLoopJoin outside the explicit NLJ_ALLOWED set (exact
   baselines + bounded 1-row combine crossJoins);
-- every query additionally carries a shape rule (RULES entry or
-  TWO_STAGE_RANK membership) — the script fails if one is missing;
-- a window with no partition key (one task sorts its whole input) appears
-  only as the final rank of a whole-frame TWO_STAGE_RANK query (a grouped
-  one has none) or in BOUNDED_GLOBAL_WINDOW, which names the bound on that
-  window's input;
+- every query additionally carries a RULES shape rule — the script fails
+  if one is missing; every top_k rank keeps Spark's native two-stage
+  shape (a partial WindowGroupLimit per group, TakeOrderedAndProject over
+  the whole frame);
+- a window with no partition key (one task sorts its whole input) sits
+  directly on a TakeOrderedAndProject (its input is at most k rows) or is
+  in BOUNDED_GLOBAL_WINDOW, which names the bound on that window's input;
 - parquet scans carry PushedFilters + pruned ReadSchema where expected;
 - dimension joins broadcast (revenue_by_nation, knn_cosine, repair_coalesce);
 - the extraction pipeline has exactly one Exchange (the per-conversation
@@ -86,15 +87,15 @@ RULES = {
     # gram stream; selection is windowless integer arithmetic
     "dsir_select": ([r"BroadcastHashJoin"], [r"SortMergeJoin", r"\bWindow\b", r"ArrowEvalPython"]),
     # PQ encode is a pure map after the fit (1-row broadcast codebook);
-    # ADC recall must keep the salted two-stage shortlist + broadcast LUTs
+    # ADC recall must keep the broadcast LUTs (its shortlist is a top_k)
     "pq_codes": ([], [r"SortMergeJoin", r"\bWindow\b", r"ArrowEvalPython"]),
-    "pq_adc_recall": ([r"BroadcastHashJoin", r"pmod"], [r"SortMergeJoin", r"ArrowEvalPython"]),
-    "ann_ivfpq_recall": ([r"BroadcastHashJoin", r"pmod"], [r"SortMergeJoin", r"ArrowEvalPython"]),
+    "pq_adc_recall": ([r"BroadcastHashJoin"], [r"SortMergeJoin", r"ArrowEvalPython"]),
+    "ann_ivfpq_recall": ([r"BroadcastHashJoin"], [r"SortMergeJoin", r"ArrowEvalPython"]),
     # train-once/serve-many: the serve path must keep the IVF-PQ shape —
-    # broadcast LUT equi-joins + salted two-stage rank — with model/code
-    # inputs read from the committed snapshot (a parquet scan, no refit
-    # in the served plan)
-    "ann_index_query": ([r"BroadcastHashJoin", r"pmod"], [r"SortMergeJoin", r"ArrowEvalPython"]),
+    # broadcast LUT equi-joins + top_k shortlist — with model/code inputs
+    # read from the committed snapshot (a parquet scan, no refit in the
+    # served plan)
+    "ann_index_query": ([r"BroadcastHashJoin"], [r"SortMergeJoin", r"ArrowEvalPython"]),
     # the build inventory is committed-snapshot scans + hash aggregates
     "ann_index_build": ([r"HashAggregate"], [r"SortMergeJoin", r"ArrowEvalPython", r"\bWindow\b"]),
     # composed pair family: ONE fused linear plan (tagged bucket union ->
@@ -171,8 +172,8 @@ RULES = {
                           [r"BroadcastNestedLoopJoin", r"SortMergeJoin",
                            r"ArrowEvalPython"]),
     # fusion operates on the two bounded top-K lists; the corpus-sized
-    # work stays inside each system (their own salted two-stage ranks)
-    "rrf_fusion": ([r"pmod"], [r"SortMergeJoin", r"ArrowEvalPython"]),
+    # work stays inside each system (their own top_k ranks)
+    "rrf_fusion": ([], [r"SortMergeJoin", r"ArrowEvalPython"]),
     # per-user window + hash aggregate, join-free (the sessionize layout)
     "time_weighted_avg": ([r"\bWindow\b", r"HashAggregate"],
                           [r"Join", r"ArrowEvalPython"]),
@@ -190,8 +191,8 @@ RULES = {
     "search_snippets": ([r"BroadcastHashJoin"],
                         [r"SortMergeJoin", r"ArrowEvalPython"]),
     # pair generation is a shifted-slice MAP (never a positional
-    # self-join); the global top-K must keep the salted two-stage shape
-    "cooccurrence_pmi": ([r"pmod"], [r"ArrowEvalPython"]),
+    # self-join); the global top-K is a top_k
+    "cooccurrence_pmi": ([], [r"ArrowEvalPython"]),
     # SemDeDup: the block-count and dropped-id joins are keyed broadcasts;
     # pair generation is groupBy+collect_list (no self-join, no window)
     "semantic_dedup": ([r"BroadcastHashJoin"],
@@ -422,30 +423,44 @@ NLJ_ALLOWED = {
 GENERIC_FORBIDDEN = [r"CartesianProduct", r"BatchEvalPython",
                      r"FlatMapCoGroupsInPandas"]
 
-# Ops built on the salted two-stage top-K (functions.expressions.top_k):
-# exactly two Window nodes (the salted partial rank + the small final rank)
-# and a pmod salt in the plan — one Window would be a single/few-task global
-# sort at 100 TB. Each maps to its rank's group key, or None when it ranks
-# the whole frame: only then may the final rank (over <= TOP_K_SALT * k
-# rows) have no partition key; a grouped rank must keep its key in both.
-TWO_STAGE_RANK = {"vocab_top_ngrams": "n", "inverted_index": "tok",
-                  "stratified_sample": "source", "cluster_top_terms": "cluster",
-                  "bm25_top_k": None, "shipping_priority": None,
-                  "join_key_skew_profile": None, "cooccurrence_pmi": None,
-                  # the skyline distributes like top-K: salted local front
-                  # (window 1) + final front over survivors (window 2)
-                  "pareto_front": None, "decayed_leaderboard": None}
+# Ranked top-Ks, all on functions.expressions.top_k: one row_number() <= k
+# window that Spark's InferWindowGroupLimit plans in two stages. A grouped
+# rank gets a partial WindowGroupLimit before the Exchange (the pattern
+# matches its formatted Arguments line), so no group's whole input reaches
+# one task; a whole-frame rank becomes TakeOrderedAndProject. The rule
+# stops firing when k exceeds spark.sql.optimizer.windowGroupLimitThreshold
+# or the window spec carries a second function, and these patterns catch it.
+GROUPED_TOP_K = [
+    "vocab_top_ngrams", "inverted_index", "stratified_sample",
+    "cluster_top_terms", "pq_adc_recall", "ann_ivfpq_recall",
+    "ann_index_query", "seasonal_anomaly", "anchor_text_agg",
+    "doc_keywords", "knn_cosine", "ann_ivf_cosine", "ann_ivf_trained",
+    "ann_recall", "hard_negatives", "frequency_map",
+]
+WHOLE_FRAME_TOP_K = [
+    "bm25_top_k", "shipping_priority", "join_key_skew_profile",
+    "cooccurrence_pmi", "decayed_leaderboard", "search_snippets",
+    "rrf_fusion",
+]
+for _n in GROUPED_TOP_K:
+    RULES.setdefault(_n, ([], []))[0].append(r"row_number\(\), \d+, Partial")
+for _n in WHOLE_FRAME_TOP_K:
+    RULES.setdefault(_n, ([], []))[0].append(r"TakeOrderedAndProject")
+# outline_sections' input is already partitioned by doc (the total_pages
+# window), so its rank plans only the Final limit.
+RULES["outline_sections"][0].append(r"WindowGroupLimit")
+# the skyline distributes like top-K, but Spark cannot limit its
+# running-max window: the salted local fronts must stay in the plan
+RULES["pareto_front"] = ([r"pmod"], [])
 
-# Queries outside TWO_STAGE_RANK allowed a window with no partition key,
-# each with the bound that keeps that window's single task small.
+# Queries allowed a window with no partition key that does not sit on a
+# TakeOrderedAndProject, each with the bound that keeps that window's
+# single task small.
 BOUNDED_GLOBAL_WINDOW = {
     "budget_apportion": "one row per source",
     "loss_mask_spans": "token_packing's offsets: one row per PACK_BUCKET"
                        " doc_id range",
-    "rrf_fusion": "<= 2 * FUSED_TOP_K fused rows; each input list is a"
-                  " top_k final rank over <= TOP_K_SALT * k rows",
-    "search_snippets": "bm25_top_k's final rank over <= TOP_K_SALT *"
-                       " BM25_TOP_K rows",
+    "pareto_front": "the union of the PARETO_SALT local skylines",
     "sequence_manifest": "token_packing's offsets: one row per PACK_BUCKET"
                          " doc_id range",
     "sequence_shuffle": "token_packing's offsets (one row per PACK_BUCKET"
@@ -474,15 +489,18 @@ def plan_tree(df) -> str:
     )
 
 
-def global_windows(df) -> int:
-    """Number of WindowExec nodes with an empty partitionSpec in the
-    physical plan (a foldable key such as lit(0) is already optimized
-    away there)."""
+def unbounded_global_windows(df) -> int:
+    """Number of WindowExec nodes with an empty partitionSpec (a foldable
+    key such as lit(0) is already optimized away there) whose child is not
+    a TakeOrderedAndProjectExec, the one child that caps the window's
+    input at k rows. The JSON lists the nodes in pre-order, so a window's
+    only child is the next node."""
     nodes = json.loads(df._jdf.queryExecution().sparkPlan().toJSON())
     return sum(
-        1 for n in nodes
+        1 for n, child in zip(nodes, nodes[1:])
         if n.get("class", "").endswith(".WindowExec")
         and not n.get("partitionSpec")
+        and not child["class"].endswith(".TakeOrderedAndProjectExec")
     )
 
 
@@ -498,9 +516,9 @@ def main() -> int:
     failures = []
     queries = entry_mod.queries()
 
-    # Coverage audit: every registered query must carry a rule (a RULES
-    # entry or TWO_STAGE_RANK membership) on top of the generic sweep.
-    uncovered = sorted(set(queries) - set(RULES) - set(TWO_STAGE_RANK))
+    # Coverage audit: every registered query must carry a RULES entry on
+    # top of the generic sweep.
+    uncovered = sorted(set(queries) - set(RULES))
     if uncovered:
         failures.append(f"queries with no plan rule: {uncovered}")
     stale = sorted(set(BOUNDED_GLOBAL_WINDOW) - set(queries))
@@ -532,36 +550,18 @@ def main() -> int:
                 if not re.search(pat, plan, re.DOTALL):
                     failures.append(
                         f"{name}: required pattern {pat!r} missing")
-        if name in TWO_STAGE_RANK:
-            n_windows = len(re.findall(r"\bWindow\b", plan_tree(df)))
-            if n_windows != 2:
-                failures.append(
-                    f"{name}: expected 2 Window nodes (salted partial rank"
-                    f" + final rank), found {n_windows}"
-                )
-            if not re.search(r"pmod", plan):
-                failures.append(
-                    f"{name}: salted partial rank missing (no pmod in plan)"
-                )
-        n_global = global_windows(df)
-        if name in TWO_STAGE_RANK:
-            want = 0 if TWO_STAGE_RANK[name] else 1
-            if n_global != want:
-                failures.append(
-                    f"{name}: expected {want} Window(s) with no partition"
-                    f" key (rank group {TWO_STAGE_RANK[name]!r}), found"
-                    f" {n_global}"
-                )
-        elif n_global and name not in BOUNDED_GLOBAL_WINDOW:
+        n_unbounded = unbounded_global_windows(df)
+        if n_unbounded and name not in BOUNDED_GLOBAL_WINDOW:
             failures.append(
-                f"{name}: {n_global} Window(s) with no partition key — one"
-                f" task sorts the whole input (add a key, or name the bound"
+                f"{name}: {n_unbounded} Window(s) with no partition key and"
+                f" no TakeOrderedAndProject under them — one task sorts the"
+                f" whole input (add a key, rank with top_k, or name the bound"
                 f" in BOUNDED_GLOBAL_WINDOW)"
             )
-        if not n_global and name in BOUNDED_GLOBAL_WINDOW:
+        if not n_unbounded and name in BOUNDED_GLOBAL_WINDOW:
             failures.append(
                 f"{name}: listed in BOUNDED_GLOBAL_WINDOW but has no"
-                f" partition-less Window"
+                f" partition-less Window outside a TakeOrderedAndProject"
             )
         print(f"checked {name}")
 

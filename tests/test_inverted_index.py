@@ -1,4 +1,4 @@
-"""Capped inverted index: df/cnt stats + first-K postings, two-stage rank."""
+"""Capped inverted index: df/cnt stats + first-K postings via top_k."""
 import pyspark.sql.functions as F
 
 from pdf_extractor_spark.operators.text_analysis import (

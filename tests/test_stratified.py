@@ -1,5 +1,7 @@
 """Exact-K stratified sampling: identical to the single-window form, exact
 counts, stable membership."""
+import re
+
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
@@ -42,3 +44,16 @@ def test_membership_stable(spark):
     a = sorted(r["doc_id"] for r in stratified_sample(docs).collect())
     b = sorted(r["doc_id"] for r in stratified_sample(docs).collect())
     assert a == b
+
+
+def test_plans_partial_limit_before_shuffle(spark):
+    """The rank is one window that Spark limits on the map side: a partial
+    WindowGroupLimit under the Exchange and no hash salt. Explain only —
+    no job runs."""
+    df = stratified_sample(_docs(spark, {"a": 200, "b": 35}))
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple")
+    assert len(re.findall(r"\bWindow\b", plan)) == 1
+    assert "pmod" not in plan
+    partial = re.search(r"WindowGroupLimit .*, Partial", plan)
+    assert partial and plan.index("Exchange") < partial.start(), plan
