@@ -163,11 +163,22 @@ def token_count_expr(text: Column) -> Column:
     )
 
 
-# Python str.strip() strips everything str.isspace() accepts: the Unicode
-# White_Space set (Java regex (?U)\s) PLUS the \x1c-\x1f separators, which
-# are NOT White_Space. Java's plain \s is ASCII-only and would break byte
-# parity on NBSP/ /... inputs.
-PY_STRIP_CLASS = r"(?U)[\s\x1c-\x1f]"
+# Every code point str.isspace() accepts, i.e. what Python's str.strip()
+# strips: the Unicode White_Space set plus the \x1c-\x1f separators, which
+# are not White_Space. Written out so that no import enumerates 0x110000
+# code points; tests/test_unicode_parity.py pins it to that enumeration.
+PY_WHITESPACE = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a"
+    "\u2028\u2029\u202f\u205f\u3000"
+)
+
+
+def py_strip(col: Column) -> Column:
+    """Python ``str.strip()`` as a JVM expression. ``btrim`` only looks at the
+    two ends; an anchored whitespace regex is tried at every whitespace run
+    of the whole text."""
+    return F.btrim(col, F.lit(PY_WHITESPACE))
 
 
 def combine_sections_expr(
@@ -176,15 +187,11 @@ def combine_sections_expr(
     empty_message: str = "# No content extracted\n\n",
 ) -> Column:
     """A1 in pure SQL: strip each, drop empties, join; singleton as-is;
-    empty -> message. The strip regex reproduces Python ``str.strip()``
-    exactly, including Unicode whitespace (see PY_STRIP_CLASS)."""
-    stripped = F.transform(
-        sections_array,
-        lambda s: F.regexp_replace(
-            s, f"^{PY_STRIP_CLASS}+|{PY_STRIP_CLASS}+$", ""
-        ),
+    empty -> message. ``py_strip`` reproduces Python ``str.strip()``
+    exactly, including Unicode whitespace."""
+    nonempty = F.filter(
+        F.transform(sections_array, py_strip), lambda s: s != ""
     )
-    nonempty = F.filter(stripped, lambda s: s != "")
     return (
         F.when(F.size(sections_array) == 0, F.lit(empty_message))
         .when(F.size(sections_array) == 1, F.element_at(sections_array, 1))

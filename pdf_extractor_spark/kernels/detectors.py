@@ -1,49 +1,67 @@
-"""Quality-problem detectors (14 patterns) for extracted markdown pages.
+r"""Quality-problem detectors (14 patterns) for extracted markdown pages.
 
 Behavioral parity target: /root/reference/src/services/validation/problem_detector.py
 (thresholds at :33,:78,:103,:130,:146,:178,:207,:224,:236,:292,:317,:339-348,:376,:394).
-Each detector is a pure ``str -> bool``; ``detect_problems`` fuses the enabled
-set into one call so the Spark side can run it as a single vectorized UDF.
+
+Every detector reads one ``PageStats`` record instead of rescanning the page
+for the figures several of them share:
+
+- ``length`` and ``pipes`` (the ``|`` count);
+- ``alnum`` and ``common``: the ``str.isalnum`` characters and the
+  ``_COMMON_CHARS`` characters. An ASCII page (``str.isascii()``) is counted
+  by two ``bytes.translate(None, delete)`` calls; any other page by summing
+  the runs of ``[^\W_]`` and of the common-char class. CPython's re
+  classifies ``\w`` with the predicate ``str.isalnum`` uses plus ``_``, so
+  ``[^\W_]`` matches exactly the isalnum characters (pinned by hypothesis
+  tests in test_kernels_detectors);
+- ``table_lines``: the stripped lines that start with ``|``, built only when
+  the page has at least 2 pipes, since each such line holds one and no
+  reader looks at fewer than 2 lines.
+
+``detect_problems`` builds the record once per page and runs the enabled set;
+each ``DETECTOR_REGISTRY`` entry stays a ``str -> bool`` that builds the
+record itself. Guards in front of the regexes are necessary conditions, so
+they skip a page only when the regex could not match it:
+
+- ``empty_tables`` needs 15 pipes: five lines of three literal ``|`` each;
+- the table repeat of ``repetitive_numbers`` needs 4 pipes: one before the
+  number, one after it and one per repeat, of which there are at least two;
+- its text repeat needs a digit, whitespace and a digit (``\d\s+\d``): the
+  end of the first number, the gap and the start of the second;
+- ``missing_numbers`` needs ``pipes / 4 >= 5``, which is ``pipes >= 20``,
+  before it looks for a number;
+- ``markdown_images`` needs the literal ``![``.
+
+Two patterns are rewritten so that ``sre`` can skip to the characters a
+match starts with instead of trying every position; each accepts exactly
+the pages the old form did:
+
+- ``empty_tables``: ``(X){5,}`` is written ``X(?:X){4,}``, which starts
+  with a literal ``|``;
+- the text repeat writes ``\b\d+`` as ``\d(?<!\w\d)\d*``: a digit is a
+  word character, so a boundary before it means "the character before is
+  not a word character", which the lookbehind tests.
 """
 from __future__ import annotations
 
 import re
 from collections import Counter
-from functools import lru_cache
-from typing import List, Optional, Tuple
+from typing import Callable, Dict, List, Optional, Tuple
 
 from ..config import DEFAULT_ENABLED_PROBLEMS
-from .numbers import extract_numbers, has_extractable_number
+from .numbers import has_extractable_number
 
-_EMPTY_TABLE_RE = re.compile(r"(\|\s*\|\s*\|.*\n){5,}")
+_EMPTY_TABLE_RE = re.compile(r"\|\s*\|\s*\|.*\n(?:\|\s*\|\s*\|.*\n){4,}")
 _REPEAT_CHAR_RE = re.compile(r"(.)\1{9,}")
 _REPEAT_CHAR_ALLOWED = {" ", "-", "_", "=", "*", "\n"}
 _COMMON_CHARS = set(" \n\t.,;:!?-()[]{}\"'/\\|")
-# C-speed character counting for the two per-char detectors. CPython's re
-# classifies \w with the same predicate str.isalnum uses (Py_UNICODE_ISALNUM)
-# plus '_', so [^\W_] matches EXACTLY the isalnum characters — equivalence is
-# pinned by a hypothesis property test (test_kernels_detectors).
 _ALNUM_RUN_RE = re.compile(r"[^\W_]+")
 _COMMON_RUN_RE = re.compile("[" + re.escape("".join(sorted(_COMMON_CHARS))) + "]+")
-
-
-@lru_cache(maxsize=8)
-def _table_lines(content: str) -> tuple:
-    """Stripped pipe-prefixed lines — shared by four detectors that each
-    scanned the page independently; cached per page object (see
-    _alnum_count on why the repeat lookup is ~free)."""
-    return tuple(
-        s for ln in content.split("\n") if (s := ln.strip()).startswith("|")
-    )
-
-
-@lru_cache(maxsize=8)
-def _alnum_count(content: str) -> int:
-    # two detectors (density, garbled) count the same page back-to-back;
-    # CPython caches str hashes, so the repeat lookup is ~free
-    return sum(map(len, _ALNUM_RUN_RE.findall(content)))
+_ASCII_ALNUM = bytes(c for c in range(128) if chr(c).isalnum())
+_COMMON_BYTES = "".join(sorted(_COMMON_CHARS)).encode("ascii")
 _TABLE_NUM_REPEAT_RE = re.compile(r"\|\s*(\d+(?:[.,]\d+)?)\s*\|(?:\s*\1\s*\|){2,}")
-_TEXT_NUM_REPEAT_RE = re.compile(r"\b(\d+(?:[.,]\d+)?)\s+(?:\1\s+){2,}")
+_TEXT_NUM_REPEAT_RE = re.compile(r"(\d(?<!\w\d)\d*(?:[.,]\d+)?)\s+(?:\1\s+){2,}")
+_DIGIT_GAP_RE = re.compile(r"\d\s+\d")
 _UNKNOWN_CHARS = ["□", "�", "☐", "▯", "▢", "▣"]
 _STANDALONE_Q_RE = re.compile(r"\s\?\s")
 _MD_IMAGE_RE = re.compile(r"!\[([^\]]*)\]\(([^\)]+)\)")
@@ -59,62 +77,99 @@ FINANCIAL_KEYWORDS = [
 ]
 
 
-def detect_empty_tables(content: str) -> bool:
+class PageStats:
+    """The per-page figures the detectors share, computed once."""
+
+    __slots__ = ("text", "length", "pipes", "alnum", "common", "table_lines")
+
+    def __init__(self, text: str):
+        self.text = text
+        self.length = len(text)
+        self.pipes = text.count("|")
+        if text.isascii():
+            raw = text.encode("ascii")
+            self.alnum = self.length - len(raw.translate(None, _ASCII_ALNUM))
+            self.common = self.length - len(raw.translate(None, _COMMON_BYTES))
+        else:
+            self.alnum = sum(map(len, _ALNUM_RUN_RE.findall(text)))
+            self.common = sum(map(len, _COMMON_RUN_RE.findall(text)))
+        self.table_lines: Tuple[str, ...] = tuple(
+            s for ln in text.split("\n")
+            if "|" in ln and (s := ln.strip()).startswith("|")
+        ) if self.pipes >= 2 else ()
+
+
+# name -> the detector over a PageStats record / over the page text
+_ON_STATS: Dict[str, Callable[[PageStats], bool]] = {}
+DETECTOR_REGISTRY: Dict[str, Callable[[str], bool]] = {}
+
+
+def _detector(name: str):
+    """Register a ``PageStats -> bool`` detector under *name* and return its
+    ``str -> bool`` form, which builds the record itself."""
+    def register(on_stats: Callable[[PageStats], bool]) -> Callable[[str], bool]:
+        _ON_STATS[name] = on_stats
+
+        def on_text(content: str) -> bool:
+            return on_stats(PageStats(content))
+
+        on_text.__name__ = on_stats.__name__
+        on_text.__doc__ = on_stats.__doc__
+        DETECTOR_REGISTRY[name] = on_text
+        return on_text
+    return register
+
+
+@_detector("empty_tables")
+def detect_empty_tables(p: PageStats) -> bool:
     """>=5 consecutive mostly-empty table lines ``| | |``."""
-    return bool(content) and _EMPTY_TABLE_RE.search(content) is not None
+    return p.pipes >= 15 and _EMPTY_TABLE_RE.search(p.text) is not None
 
 
-def detect_low_content_density(content: str) -> bool:
+@_detector("low_content_density")
+def detect_low_content_density(p: PageStats) -> bool:
     """Fewer than 100 alphanumeric characters (empty content counts)."""
-    if not content:
-        return True
-    return _alnum_count(content) < 100
+    return p.alnum < 100
 
 
-def detect_missing_numbers(content: str) -> bool:
+@_detector("missing_numbers")
+def detect_missing_numbers(p: PageStats) -> bool:
     """Roughly >=5 table rows (pipes/4) but zero extractable numbers."""
-    if not content:
-        return False
-    approx_rows = content.count("|") / 4
-    return approx_rows >= 5 and not has_extractable_number(content)
+    return p.pipes >= 20 and not has_extractable_number(p.text)
 
 
-def detect_inconsistent_columns(content: str) -> bool:
+@_detector("inconsistent_columns")
+def detect_inconsistent_columns(p: PageStats) -> bool:
     """More than 2 distinct per-row column counts among pipe-rows."""
-    if not content:
-        return False
-    table_lines = _table_lines(content)
-    if len(table_lines) < 3:
-        return False
-    return len({ln.count("|") - 1 for ln in table_lines}) > 2
+    lines = p.table_lines
+    return len(lines) >= 3 and len({ln.count("|") - 1 for ln in lines}) > 2
 
 
-def detect_repeated_characters(content: str) -> bool:
+@_detector("repeated_characters")
+def detect_repeated_characters(p: PageStats) -> bool:
     """Same char repeated 10+ times, excluding intentional fillers."""
-    if not content:
-        return False
-    return any(m not in _REPEAT_CHAR_ALLOWED for m in _REPEAT_CHAR_RE.findall(content))
+    return any(
+        m not in _REPEAT_CHAR_ALLOWED for m in _REPEAT_CHAR_RE.findall(p.text)
+    )
 
 
-def detect_garbled_text(content: str) -> bool:
+@_detector("garbled_text")
+def detect_garbled_text(p: PageStats) -> bool:
     """Special-char to alphanumeric ratio above 0.2."""
-    if not content:
+    if not p.length:
         return False
-    alnum = _alnum_count(content)
-    if alnum == 0:
+    if p.alnum == 0:
         return True
     # every char is alnum XOR common XOR special (common chars are all
-    # non-alnum), so special falls out of two C-speed counts
-    common = sum(map(len, _COMMON_RUN_RE.findall(content)))
-    special = len(content) - alnum - common
-    return special / alnum > 0.2
+    # non-alnum), so special falls out of the two counts
+    special = p.length - p.alnum - p.common
+    return special / p.alnum > 0.2
 
 
-def detect_header_only_tables(content: str) -> bool:
+@_detector("header_only_tables")
+def detect_header_only_tables(p: PageStats) -> bool:
     """Table with a separator row but <=1 data row after it."""
-    if not content:
-        return False
-    lines = _table_lines(content)
+    lines = p.table_lines
     if len(lines) < 2:
         return False
     sep_indices = [i for i, ln in enumerate(lines) if "---" in ln]
@@ -123,40 +178,37 @@ def detect_header_only_tables(content: str) -> bool:
     return len(lines) - sep_indices[0] - 1 <= 1
 
 
-def detect_very_short_pages(content: str) -> bool:
+@_detector("very_short_pages")
+def detect_very_short_pages(p: PageStats) -> bool:
     """Stripped length under 200 characters (empty counts)."""
-    if not content:
-        return True
-    return len(content.strip()) < 200
+    return len(p.text.strip()) < 200
 
 
-def detect_missing_keywords(content: str) -> bool:
+@_detector("missing_keywords")
+def detect_missing_keywords(p: PageStats) -> bool:
     """Substantial page (>=500 chars) containing no financial keyword."""
-    if not content or len(content) < 500:
+    if p.length < 500:
         return False
-    lower = content.lower()
+    lower = p.text.lower()
     return not any(kw in lower for kw in FINANCIAL_KEYWORDS)
 
 
-def detect_malformed_structure(content: str) -> bool:
+@_detector("malformed_structure")
+def detect_malformed_structure(p: PageStats) -> bool:
     """A table separator row where >30% of parts aren't dashes/spaces."""
-    if not content:
+    if len(p.table_lines) < 2:
         return False
-    table_lines = _table_lines(content)
-    if len(table_lines) < 2:
-        return False
-    for sep in (ln for ln in table_lines if "-" in ln):
-        flags = [set(p.strip()) <= {"-", " "} for p in sep.split("|") if p.strip()]
+    for sep in (ln for ln in p.table_lines if "-" in ln):
+        flags = [set(s.strip()) <= {"-", " "} for s in sep.split("|") if s.strip()]
         if flags and sum(flags) / len(flags) < 0.7:
             return True
     return False
 
 
-def detect_duplicate_content(content: str) -> bool:
+@_detector("duplicate_content")
+def detect_duplicate_content(p: PageStats) -> bool:
     """Same >50-char paragraph appearing 3+ times."""
-    if not content:
-        return False
-    paragraphs = [p.strip() for p in content.split("\n\n") if p.strip()]
+    paragraphs = [s.strip() for s in p.text.split("\n\n") if s.strip()]
     if len(paragraphs) < 3:
         return False
     return any(
@@ -164,45 +216,29 @@ def detect_duplicate_content(content: str) -> bool:
     )
 
 
-def detect_repetitive_numbers(content: str) -> bool:
-    """Same number 3+ times adjacent, in table cells or space-separated text."""
-    if not content:
-        return False
-    if _TABLE_NUM_REPEAT_RE.search(content):
-        return True
-    return _TEXT_NUM_REPEAT_RE.search(content) is not None
-
-
-def detect_unknown_characters(content: str) -> bool:
+@_detector("unknown_characters")
+def detect_unknown_characters(p: PageStats) -> bool:
     """Ratio of replacement glyphs + standalone '?' above 5%."""
-    if not content:
+    if not p.length:
         return False
-    unknown = sum(content.count(ch) for ch in _UNKNOWN_CHARS)
-    unknown += len(_STANDALONE_Q_RE.findall(content))
-    return unknown / len(content) > 0.05
+    unknown = sum(p.text.count(ch) for ch in _UNKNOWN_CHARS)
+    unknown += len(_STANDALONE_Q_RE.findall(p.text))
+    return unknown / p.length > 0.05
 
 
-def detect_markdown_images(content: str) -> bool:
+@_detector("repetitive_numbers")
+def detect_repetitive_numbers(p: PageStats) -> bool:
+    """Same number 3+ times adjacent, in table cells or space-separated text."""
+    if p.pipes >= 4 and _TABLE_NUM_REPEAT_RE.search(p.text):
+        return True
+    return (_DIGIT_GAP_RE.search(p.text) is not None
+            and _TEXT_NUM_REPEAT_RE.search(p.text) is not None)
+
+
+@_detector("markdown_images")
+def detect_markdown_images(p: PageStats) -> bool:
     """Any markdown image reference ``![alt](path)``."""
-    return bool(content) and _MD_IMAGE_RE.search(content) is not None
-
-
-DETECTOR_REGISTRY = {
-    "empty_tables": detect_empty_tables,
-    "low_content_density": detect_low_content_density,
-    "missing_numbers": detect_missing_numbers,
-    "inconsistent_columns": detect_inconsistent_columns,
-    "repeated_characters": detect_repeated_characters,
-    "garbled_text": detect_garbled_text,
-    "header_only_tables": detect_header_only_tables,
-    "very_short_pages": detect_very_short_pages,
-    "missing_keywords": detect_missing_keywords,
-    "malformed_structure": detect_malformed_structure,
-    "duplicate_content": detect_duplicate_content,
-    "unknown_characters": detect_unknown_characters,
-    "repetitive_numbers": detect_repetitive_numbers,
-    "markdown_images": detect_markdown_images,
-}
+    return "![" in p.text and _MD_IMAGE_RE.search(p.text) is not None
 
 
 def detect_problems(
@@ -217,8 +253,9 @@ def detect_problems(
         return ["empty_content"]
     if enabled is None:
         enabled = DEFAULT_ENABLED_PROBLEMS
+    stats = PageStats(content)
     return [name for name in enabled
-            if name in DETECTOR_REGISTRY and DETECTOR_REGISTRY[name](content)]
+            if name in _ON_STATS and _ON_STATS[name](stats)]
 
 
 def has_any_problem(

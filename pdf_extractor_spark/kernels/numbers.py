@@ -11,9 +11,10 @@ import re
 from typing import List, Optional
 
 _CURRENCY_RE = re.compile(r"[₪$€£¥₹₪]")
-# Optional minus, digits, optional 3-digit groups split by , . or space,
-# optional decimal tail, optional %.
-_NUMBER_RE = re.compile(r"-?\d+(?:[,\.\s]\d{3})*(?:[,\.]\d+)?%?")
+# Digits, optional 3-digit groups split by , . or space, optional decimal
+# tail, optional %; _NUMBER_RE adds the optional minus.
+_UNSIGNED_NUMBER_RE = re.compile(r"\d+(?:[,\.\s]\d{3})*(?:[,\.]\d+)?%?")
+_NUMBER_RE = re.compile("-?" + _UNSIGNED_NUMBER_RE.pattern)
 
 
 def _normalize_separators(num: str) -> str:
@@ -62,11 +63,14 @@ def extract_numbers(text: str) -> List[str]:
 def has_extractable_number(text: str) -> bool:
     """True iff ``extract_numbers(text)`` would be non-empty, stopping at the
     first surviving match instead of materializing them all (the hot caller,
-    detect_missing_numbers, only needs emptiness)."""
+    detect_missing_numbers, only needs emptiness). It scans for unsigned
+    matches: a sign moves neither where the digits match nor whether
+    float() accepts them, and a pattern that starts with a digit class lets
+    sre skip straight to the digits."""
     if not text:
         return False
     cleaned = _CURRENCY_RE.sub("", text)
-    for match in _NUMBER_RE.finditer(cleaned):
+    for match in _UNSIGNED_NUMBER_RE.finditer(cleaned):
         num = _normalize_separators(match.group().rstrip("%")).replace(" ", "")
         try:
             float(num)

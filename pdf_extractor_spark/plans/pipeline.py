@@ -36,7 +36,7 @@ from ..config import (
     VALIDATION_COST_PER_1K_TOKENS,
     VALIDATION_TOKENS_PER_PAGE,
 )
-from ..functions.expressions import combine_sections_expr
+from ..functions.expressions import combine_sections_expr, py_strip
 from ..functions.udfs import EXTRACTION_TYPE, extract_turn_udf
 from ..kernels.segment import PDF_PAYLOAD_PREFIX
 
@@ -162,11 +162,7 @@ def assemble_conversations(
         )
 
     from ..config import MARKDOWN_SECTION_SEPARATOR
-    from ..functions.expressions import PY_STRIP_CLASS
 
-    strip = lambda s: F.regexp_replace(  # noqa: E731
-        s, f"^{PY_STRIP_CLASS}+|{PY_STRIP_CLASS}+$", ""
-    )
     ordered = F.sort_array(
         F.collect_list(F.struct("turn_idx", "extracted_text"))
     )
@@ -179,7 +175,7 @@ def assemble_conversations(
             # partial combine: strip + drop empties + join (NO singleton
             # special case at bucket level — that applies to the whole conv)
             F.array_join(
-                F.filter(F.transform(texts, strip), lambda s: s != ""),
+                F.filter(F.transform(texts, py_strip), lambda s: s != ""),
                 MARKDOWN_SECTION_SEPARATOR,
             ).alias("partial_md"),
             # raw first element, for the 1-turn-conversation as-is semantics

@@ -110,19 +110,28 @@ def test_registry_complete():
 
 # --- C-speed counting parity (the [^\W_] == isalnum equivalence) ---
 
-from hypothesis import given, settings
+import re
+
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
+
+from pdf_extractor_spark.config import DEFAULT_ENABLED_PROBLEMS
+from pdf_extractor_spark.kernels.numbers import extract_numbers
 
 _text = st.text(
     alphabet=st.characters(codec="utf-8"),
     max_size=400,
 )
+# PageStats counts ASCII pages on bytes and the rest with regex runs
+_ascii_text = st.text(alphabet=st.characters(max_codepoint=127), max_size=400)
 
 
-@given(_text)
+@given(st.one_of(_text, _ascii_text))
 @settings(max_examples=300, deadline=None)
 def test_alnum_count_matches_isalnum(s):
-    assert d._alnum_count(s) == sum(c.isalnum() for c in s)
+    stats = d.PageStats(s)
+    assert stats.alnum == sum(c.isalnum() for c in s)
+    assert stats.common == sum(c in d._COMMON_CHARS for c in s)
 
 
 @given(_text)
@@ -150,4 +159,110 @@ def test_low_density_matches_per_char_reference(s):
 
 def test_counting_on_mixed_scripts():
     s = 'דוח כספי 2024 — total: 1,234.56 ₪ (☐□) "quoted"\n| a | b |'
-    assert d._alnum_count(s) == sum(c.isalnum() for c in s)
+    assert d.PageStats(s).alnum == sum(c.isalnum() for c in s)
+
+
+# --- fused detectors == the one-regex definitions they replaced ---
+
+def _spec_table_lines(s):
+    return [ln.strip() for ln in s.split("\n") if ln.strip().startswith("|")]
+
+
+def _spec_garbled(s):
+    alnum = sum(c.isalnum() for c in s)
+    if alnum == 0:
+        return True
+    special = sum((not c.isalnum()) and c not in d._COMMON_CHARS for c in s)
+    return special / alnum > 0.2
+
+
+def _spec_header_only(s):
+    lines = _spec_table_lines(s)
+    seps = [i for i, ln in enumerate(lines) if "---" in ln]
+    return len(lines) >= 2 and bool(seps) and len(lines) - seps[0] - 1 <= 1
+
+
+def _spec_malformed(s):
+    lines = _spec_table_lines(s)
+    if len(lines) < 2:
+        return False
+    for sep in (ln for ln in lines if "-" in ln):
+        flags = [set(p.strip()) <= {"-", " "} for p in sep.split("|") if p.strip()]
+        if flags and sum(flags) / len(flags) < 0.7:
+            return True
+    return False
+
+
+def _spec_duplicate(s):
+    paras = [p.strip() for p in s.split("\n\n") if p.strip()]
+    return len(paras) >= 3 and any(
+        paras.count(p) >= 3 and len(p) > 50 for p in paras
+    )
+
+
+def _spec_unknown(s):
+    unknown = sum(s.count(ch) for ch in "□�☐▯▢▣")
+    unknown += len(re.findall(r"\s\?\s", s))
+    return unknown / len(s) > 0.05
+
+
+# each detector as it read before the per-page stats record: one scan of
+# the page per figure, with no guards
+_SPEC = {
+    "empty_tables": lambda s: re.search(r"(\|\s*\|\s*\|.*\n){5,}", s) is not None,
+    "low_content_density": lambda s: sum(c.isalnum() for c in s) < 100,
+    "missing_numbers": lambda s: s.count("|") / 4 >= 5 and not extract_numbers(s),
+    "inconsistent_columns": lambda s: len(_spec_table_lines(s)) >= 3 and len(
+        {ln.count("|") - 1 for ln in _spec_table_lines(s)}) > 2,
+    "repeated_characters": lambda s: any(
+        m not in " -_=*\n" for m in re.findall(r"(.)\1{9,}", s)),
+    "garbled_text": _spec_garbled,
+    "header_only_tables": _spec_header_only,
+    "very_short_pages": lambda s: len(s.strip()) < 200,
+    "missing_keywords": lambda s: len(s) >= 500 and not any(
+        kw in s.lower() for kw in d.FINANCIAL_KEYWORDS),
+    "malformed_structure": _spec_malformed,
+    "duplicate_content": _spec_duplicate,
+    "unknown_characters": _spec_unknown,
+    "repetitive_numbers": lambda s: bool(
+        re.search(r"\|\s*(\d+(?:[.,]\d+)?)\s*\|(?:\s*\1\s*\|){2,}", s)
+        or re.search(r"\b(\d+(?:[.,]\d+)?)\s+(?:\1\s+){2,}", s)),
+    "markdown_images": lambda s: re.search(r"!\[([^\]]*)\]\(([^\)]+)\)", s) is not None,
+}
+
+# pieces that reach the table, number and image regexes far more often than
+# arbitrary text does: st.characters almost never yields "| 7 | 7 | 7 |"
+_PIECES = [
+    "|", "|", "| ", " |", "|  |  |  |\n", "---", "-", "7", "7", "42", "0",
+    "1,5", "3.25", ".", ",", " ", " ", "  ", "\n", "\n", "\t", "![", "](",
+    "]", ")", "x.png", "a", "Ab", "total", "□", "?", " ? ", "ש", "\xa0", "_",
+    "-3", "%", "₪",
+]
+_pages = st.lists(st.sampled_from(_PIECES), max_size=120).map("".join)
+_enabled = st.one_of(
+    st.just(DEFAULT_ENABLED_PROBLEMS),
+    st.lists(st.sampled_from(ALL_PROBLEMS), unique=True),
+)
+
+
+@given(_pages, _enabled)
+# pages at the edge of each guard in kernels/detectors.py, which random
+# pages seldom hit
+@example("|  |  |\n" * 5, ["empty_tables"])  # 15 pipes
+@example("| a | b | c | d |\n" * 4, ["missing_numbers"])  # 20 pipes
+@example("| 7 | 7 | 7 |", ["repetitive_numbers"])  # 4 pipes
+@example("7\t7\n7 ", ["repetitive_numbers"])  # the digit gap is not a space
+@example("x7 7 7 _7 7 7 ", ["repetitive_numbers"])  # no boundary before a 7
+@example("|---\n|x", ALL_PROBLEMS)  # two table lines from two pipes
+@example("![b](c)", ["markdown_images"])
+@settings(max_examples=600, deadline=None)
+def test_detect_problems_matches_one_regex_spec(page, enabled):
+    expect = ["empty_content"] if not page else [
+        n for n in enabled if _SPEC[n](page)
+    ]
+    assert d.detect_problems(page, enabled) == expect
+    for name in enabled:
+        assert d.DETECTOR_REGISTRY[name](page) == (
+            _SPEC[name](page) if page else name in ("low_content_density",
+                                                    "very_short_pages")
+        )
