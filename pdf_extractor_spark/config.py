@@ -12,11 +12,9 @@ EMPTY_CONTENT_MESSAGE = "# No content extracted\n\n"
 
 # Chunking (reference: src/core/constants.py:19-20, src/core/config.py:36)
 MAX_PAGES_PER_CHUNK = 15
-API_MAX_PAGES_LIMIT = 30
 MAX_OUTLINES = 4  # reference: src/services/pdf_processor.py:56-59
 
 # Input guardrails (reference: src/core/config.py:40-42)
-MAX_UPLOAD_BYTES = 25 * 1024 * 1024
 MAX_BASE64_LENGTH = 40_000_000
 MAX_PDF_PAGES = 600
 
@@ -24,7 +22,6 @@ MAX_PDF_PAGES = 600
 VALIDATION_SAMPLE_RATE = 5
 VALIDATION_SIMILARITY_THRESHOLD = 0.95
 VALIDATION_SIMILARITY_METHOD = "number_frequency"  # or "levenshtein"
-VALIDATION_SKIP_SAMPLE_IF_CLEAN = True
 
 # Validation cost model (reference: validation_orchestrator.py:51-53)
 VALIDATION_COST_PER_1K_TOKENS = 0.01

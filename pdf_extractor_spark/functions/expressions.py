@@ -7,7 +7,7 @@ to match Python semantics and is pinned by tests.
 """
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -88,11 +88,6 @@ def sampling_predicate_expr(
     (seeded hash replaces the reference's random.randint for rerun
     determinism)."""
     return F.pmod(turn_idx - offset, F.lit(rate)) == 0
-
-
-def doc_offset_expr(doc_id: Column, rate: int = VALIDATION_SAMPLE_RATE) -> Column:
-    """Deterministic per-document sampling offset in [0, rate)."""
-    return F.pmod(F.xxhash64(doc_id.cast("string")), F.lit(rate)).cast("int")
 
 
 def floordiv_sql(a: str, b: int) -> str:

@@ -3,10 +3,11 @@
 UDFs are the slow path: everything expressible with built-in functions lives
 in ``expressions.py`` instead. What remains here is genuinely non-SQL logic:
 the extraction kernel (payload decode + segmentation + detect/repair +
-byte-exact assembly), the fused detector suite, EU/US number disambiguation,
-number-frequency similarity, and SimHash. All are column->column (one Arrow
-round trip per batch, no per-row Python at the Spark API level); the
-extraction kernel is an Arrow UDF, the rest are pandas UDFs.
+byte-exact assembly, with the fused detector suite and number-frequency
+similarity inside it), EU/US number disambiguation, and SimHash. All are
+column->column (one Arrow round trip per batch, no per-row Python at the
+Spark API level); the extraction kernel is an Arrow UDF, the rest are pandas
+UDFs.
 """
 from __future__ import annotations
 
@@ -27,10 +28,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernels.detectors import detect_problems
 from ..kernels.numbers import extract_numbers, parse_number
 from ..kernels.segment import extract_turn
-from ..kernels.similarity import calculate_similarity
 from ..kernels.textstats import detect_language, quality_score, simhash64
 
 SPAN_TYPE = StructType([
@@ -68,21 +67,6 @@ def extract_turn_udf(text: pa.Array) -> pa.Array:
         [None if t is None else extract_turn(t) for t in text.to_pylist()],
         type=_EXTRACTION_ARROW_TYPE,
     )
-
-
-@pandas_udf(ArrayType(StringType()))
-def detect_problems_udf(content: pd.Series) -> pd.Series:
-    """Fused 14-pattern detector suite with the default-enabled set."""
-    return content.map(lambda c: detect_problems(c or ""))
-
-
-def detect_problems_udf_for(enabled: List[str]):
-    """Detector UDF bound to an explicit enabled set (constant-folded into
-    the closure, mirroring the reference's enabled-patterns pruning)."""
-    @pandas_udf(ArrayType(StringType()))
-    def _udf(content: pd.Series) -> pd.Series:
-        return content.map(lambda c: detect_problems(c or "", enabled))
-    return _udf
 
 
 @pandas_udf(ArrayType(StringType()))
@@ -129,15 +113,6 @@ def table_cascade_udf(text: pd.Series) -> pd.DataFrame:
         }
 
     return pd.DataFrame([f(t) for t in text])
-
-
-@pandas_udf(DoubleType())
-def similarity_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Full similarity dispatcher (quick Jaccard early-exit + configured
-    method)."""
-    return pd.Series([
-        calculate_similarity(x or "", y or "") for x, y in zip(a, b)
-    ])
 
 
 @pandas_udf(StringType())

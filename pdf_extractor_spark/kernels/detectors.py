@@ -256,10 +256,3 @@ def detect_problems(
     stats = PageStats(content)
     return [name for name in enabled
             if name in _ON_STATS and _ON_STATS[name](stats)]
-
-
-def has_any_problem(
-    content: str, enabled: Optional[List[str]] = None
-) -> Tuple[bool, List[str]]:
-    detected = detect_problems(content, enabled)
-    return bool(detected), detected

@@ -226,10 +226,7 @@ def html_payload_start(text: str) -> int:
     return min(hits) if hits else -1
 
 
-def extract_turn(
-    text: Optional[str],
-    enabled_problems: Optional[List[str]] = None,
-) -> Dict:
+def extract_turn(text: Optional[str]) -> Dict:
     """Extract one transcript turn. Returns a plain dict (Arrow-friendly):
 
     kind: str, n_pages: int, extracted_text: str,
@@ -321,7 +318,7 @@ def extract_turn(
     repaired: List[int] = []
     page_strings: List[str] = []
     for idx, page_body in pages:
-        detected = detect_problems(page_body, enabled_problems)
+        detected = detect_problems(page_body)
         for name in detected:
             problems.append(f"page{idx}:{name}")
         final_body = page_body

@@ -567,12 +567,6 @@ ORACLES["loss_mask_spans"] = f"""
 CONV_TURNS = 5          # documents grouped into 5-turn conversations
 CONV_WINDOW = 96        # context-window token budget
 
-_TURN_PACK_ACC = (
-    "struct<win:bigint,fill:bigint,"
-    "out:array<struct<turn_idx:int,n:bigint,trunc:boolean,"
-    "win:bigint,off:bigint>>>"
-)
-
 
 def q_conv_window_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-turn conversations packed into fixed context windows WITHOUT

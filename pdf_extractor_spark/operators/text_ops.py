@@ -15,6 +15,7 @@ from ..functions.expressions import (
     levenshtein_similarity_expr,
     normalize_for_comparison_expr,
     page_header_expr,
+    sampling_predicate_expr,
     top_k,
     workflow_router_expr,
 )
@@ -67,7 +68,7 @@ def q_sampling_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (len(source) % 5 stands in for the reference's random offset)."""
     docs = _docs(spark, sf_dir)
     offset = F.length("source") % 5
-    return docs.where(F.pmod(F.col("doc_id") - offset, F.lit(5)) == 0).select(
+    return docs.where(sampling_predicate_expr(F.col("doc_id"), offset)).select(
         "doc_id", "source"
     )
 

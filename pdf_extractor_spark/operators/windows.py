@@ -1161,7 +1161,6 @@ ORACLES["position_attribution"] = f"""
 
 
 # --- Survival life table (time-to-conversion) ----------------------------------------
-DAY_US = 86_400_000_000
 
 
 def q_survival_table(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,8 +9,6 @@ only the missing slices and output writes stay idempotent
 """
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -94,7 +92,6 @@ def run_resumable(
     manifest_path: str,
     run_id: str,
     n_buckets: int = DEFAULT_N_BUCKETS,
-    salt_partitions: Optional[int] = None,
 ) -> int:
     """Resumable extraction: process only pending buckets, write output
     partitioned by bucket (dynamic overwrite = idempotent re-runs), then
@@ -104,7 +101,7 @@ def run_resumable(
     from .pipeline import extract_transcripts
 
     todo = pending_work(spark, transcripts, manifest_path, n_buckets)
-    extracted = extract_transcripts(todo, salt_partitions)
+    extracted = extract_transcripts(todo)
     extracted.cache()
     try:
         n = extracted.count()

@@ -17,17 +17,15 @@ Scale notes (10^12 turns):
 - **No pre-shuffle.** The per-turn map runs on scan-native partitions:
   parquet/Iceberg splits are byte-balanced (``files.maxPartitionBytes``),
   which defuses long-document skew better than a row-hash repartition —
-  a row-count-balanced salt would co-locate many heavy payload rows. The
-  optional ``salt_partitions`` hash-redistributes rows only for pathological
-  source layouts (one file per giant conversation, no splittable format).
+  a row-count-balanced salt would co-locate many heavy payload rows. A
+  caller whose source has no splittable layout (one file per giant
+  conversation) repartitions its own input first.
 - The only shuffle is the final per-conversation regroup; AQE coalesces its
   output partitions and splits skewed groups' sort spills.
 - Per-turn results can be written (and resumed) independently of assembly,
   so the expensive stage is checkpointed before the shuffle (plans.manifest).
 """
 from __future__ import annotations
-
-from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,7 +34,7 @@ from ..config import (
     VALIDATION_COST_PER_1K_TOKENS,
     VALIDATION_TOKENS_PER_PAGE,
 )
-from ..functions.expressions import combine_sections_expr, py_strip
+from ..functions.expressions import combine_sections_expr
 from ..functions.udfs import EXTRACTION_TYPE, extract_turn_udf
 from ..kernels.segment import PDF_PAYLOAD_PREFIX
 
@@ -79,10 +77,7 @@ def _plain_result() -> F.Column:
     ).cast(EXTRACTION_TYPE)
 
 
-def extract_transcripts(
-    transcripts: DataFrame,
-    salt_partitions: Optional[int] = None,
-) -> DataFrame:
+def extract_transcripts(transcripts: DataFrame) -> DataFrame:
     """Per-turn extraction map. Returns one row per input turn: every input
     column except ``text`` (conv_id, turn_idx, role, tool, ts, ... pass
     through), then
@@ -90,12 +85,7 @@ def extract_transcripts(
     kind, n_pages, extracted_text, spans, problems, sections,
     repaired_pages, valid, n_chars
     """
-    df = transcripts
-    if salt_partitions:
-        # Only for sources without byte-balanced splits (see module doc).
-        df = df.repartition(salt_partitions, "conv_id", "turn_idx")
-
-    df = df.withColumn("kind", _kind_expr())
+    df = transcripts.withColumn("kind", _kind_expr())
     # Null input for plain rows: the Arrow transfer carries only payload rows'
     # text, and the UDF's null result falls through to the plain struct.
     payload_text = F.when(F.col("kind") != "plain", F.col("text"))
@@ -108,106 +98,34 @@ def extract_transcripts(
     return result.withColumn("n_chars", F.length("extracted_text"))
 
 
-def assemble_conversations(
-    extracted: DataFrame,
-    bucket_turns: Optional[int] = None,
-) -> DataFrame:
+def assemble_conversations(extracted: DataFrame) -> DataFrame:
     """Per-conversation regroup with stable turn ordering — pure built-ins:
-    ``sort_array(collect_list(struct(turn_idx, ...)))`` then the A1 combine
-    expression (byte-parity with kernels.segment.combine_markdown_sections is
-    pinned by tests/test_pipeline_golden.py).
-
-    Default (``bucket_turns=None``): ONE shuffle keyed on conv_id — right
-    when conversation length is bounded (transcript corpora cap out around
-    10^3-10^4 turns), since each text byte crosses the wire once and AQE
-    splits skewed sort spills.
-
-    ``bucket_turns=N``: two-level combine for UNBOUNDED conversation length —
-    a first shuffle on (conv_id, turn_idx div N) builds partial ordered
-    concats (per-task collect_list state bounded by N turns), a second merges
-    the per-bucket partials. A single 10^6-turn mega-conversation is then
-    ~10^6/N bucket rows merged in one cheap final group instead of one
-    collect_list task holding every turn. Byte-equality of the two paths is
-    pinned by tests/test_skew.py (the strip->drop-empties->join combine is
-    associative over pre-stripped partials; the 1-turn as-is special case is
-    preserved via the bucket's raw first element)."""
+    ONE shuffle keyed on conv_id, ``sort_array(collect_list(struct(turn_idx,
+    extracted_text)))``, then the A1 combine expression (byte-parity with
+    kernels.segment.combine_markdown_sections is pinned by
+    tests/test_pipeline_golden.py). Each text byte crosses the wire once and
+    AQE splits skewed groups' sort spills; a 10^5-turn mega-conversation is
+    pinned by tests/test_skew.py (SCALE.md has the timings up to 5*10^6)."""
     base = extracted.select(
         "conv_id", "turn_idx", "extracted_text", "n_pages",
         (F.size("problems") > 0).cast("int").alias("has_problem"),
         F.size("repaired_pages").alias("n_repaired"),
     )
-    report_cols = [
-        F.sum("n_pages").alias("total_pages"),
-        F.sum("has_problem").cast("int").alias("problem_turns"),
-        F.sum("n_repaired").cast("int").alias("repaired_pages"),
-    ]
-
-    if bucket_turns is None:
-        ordered = F.sort_array(
-            F.collect_list(F.struct("turn_idx", "extracted_text"))
-        )
-        agg = base.groupBy("conv_id").agg(
-            F.count("*").cast("int").alias("n_turns"),
-            ordered.alias("ordered"),
-            *report_cols,
-        )
-        texts = F.transform(F.col("ordered"), lambda s: s["extracted_text"])
-        return agg.select(
-            "conv_id",
-            "n_turns",
-            combine_sections_expr(texts).alias("conversation_markdown"),
-            "total_pages",
-            "problem_turns",
-            "repaired_pages",
-        )
-
-    from ..config import MARKDOWN_SECTION_SEPARATOR
-
     ordered = F.sort_array(
         F.collect_list(F.struct("turn_idx", "extracted_text"))
     )
-    texts = F.transform(ordered, lambda s: s["extracted_text"])
-    partials = (
-        base.withColumn("bucket", (F.col("turn_idx") / bucket_turns).cast("long"))
-        .groupBy("conv_id", "bucket")
-        .agg(
-            F.count("*").cast("int").alias("b_turns"),
-            # partial combine: strip + drop empties + join (NO singleton
-            # special case at bucket level — that applies to the whole conv)
-            F.array_join(
-                F.filter(F.transform(texts, py_strip), lambda s: s != ""),
-                MARKDOWN_SECTION_SEPARATOR,
-            ).alias("partial_md"),
-            # raw first element, for the 1-turn-conversation as-is semantics
-            F.element_at(texts, 1).alias("first_raw"),
-            *report_cols,
-        )
+    agg = base.groupBy("conv_id").agg(
+        F.count("*").cast("int").alias("n_turns"),
+        ordered.alias("ordered"),
+        F.sum("n_pages").alias("total_pages"),
+        F.sum("has_problem").cast("int").alias("problem_turns"),
+        F.sum("n_repaired").cast("int").alias("repaired_pages"),
     )
-    parts = F.sort_array(
-        F.collect_list(F.struct("bucket", "partial_md", "first_raw"))
-    )
-    agg = partials.groupBy("conv_id").agg(
-        F.sum("b_turns").cast("int").alias("n_turns"),
-        parts.alias("parts"),
-        F.sum("total_pages").alias("total_pages"),
-        F.sum("problem_turns").cast("int").alias("problem_turns"),
-        F.sum("repaired_pages").cast("int").alias("repaired_pages"),
-    )
-    merged_md = F.when(
-        F.col("n_turns") == 1, F.element_at("parts", 1)["first_raw"]
-    ).otherwise(
-        F.array_join(
-            F.filter(
-                F.transform(F.col("parts"), lambda p: p["partial_md"]),
-                lambda s: s != "",
-            ),
-            MARKDOWN_SECTION_SEPARATOR,
-        )
-    )
+    texts = F.transform(F.col("ordered"), lambda s: s["extracted_text"])
     return agg.select(
         "conv_id",
         "n_turns",
-        merged_md.alias("conversation_markdown"),
+        combine_sections_expr(texts).alias("conversation_markdown"),
         "total_pages",
         "problem_turns",
         "repaired_pages",
@@ -280,11 +198,7 @@ def tool_usage(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def run_pipeline(
-    transcripts: DataFrame,
-    salt_partitions: Optional[int] = None,
-) -> DataFrame:
+def run_pipeline(transcripts: DataFrame) -> DataFrame:
     """Full job: extraction map -> assembly. Returns the assembled
     conversations DataFrame (lazy; caller writes or collects)."""
-    extracted = extract_transcripts(transcripts, salt_partitions)
-    return assemble_conversations(extracted)
+    return assemble_conversations(extract_transcripts(transcripts))

@@ -16,8 +16,7 @@ State growth is bounded two ways:
   out of order and markdown assembly is order-sensitive — a running-concat
   digest would be wrong for late turns. Per-conv state is therefore O(conv
   length); a 10^6-turn conversation belongs on the batch path
-  (assemble_conversations with the two-level combine), not in streaming
-  state. This limitation is inherent to exact out-of-order assembly.
+  (assemble_conversations), not in streaming state. This limitation is inherent to exact out-of-order assembly.
 
 The reference has no streaming analog (SURVEY.md §2.10); this exists for the
 north rule's Structured Streaming surface: stateless map (micro_batch.py),

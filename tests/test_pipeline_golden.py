@@ -35,7 +35,8 @@ def test_generator_distributed_matches_local(spark_transcripts, golden_rows):
 
 
 def test_per_turn_extraction_matches_golden(spark, spark_transcripts, golden_rows):
-    extracted = extract_transcripts(spark_transcripts, salt_partitions=8)
+    extracted = extract_transcripts(
+        spark_transcripts.repartition(8, "conv_id", "turn_idx"))
     got = {(r["conv_id"], r["turn_idx"]): r for r in extracted.collect()}
     assert len(got) == len(golden_rows)
     payload_turns = 0
@@ -69,7 +70,8 @@ def test_spans_point_into_extracted_text(spark_transcripts):
 
 def test_assembly_stable_order_and_bytes(spark, spark_transcripts, golden_rows):
     assembled = {r["conv_id"]: r for r in
-                 run_pipeline(spark_transcripts, salt_partitions=8).collect()}
+                 run_pipeline(spark_transcripts.repartition(
+                     8, "conv_id", "turn_idx")).collect()}
     by_conv = {}
     for row in golden_rows:
         by_conv.setdefault(row["conv_id"], []).append(row)

@@ -54,47 +54,24 @@ def test_giant_conversation_assembles_byte_exact(spark):
     assert len(assembled) == SMALL_CONVS + 1
 
 
-def test_two_level_combine_byte_equal(spark):
-    """bucket_turns path == single-level path byte-for-byte, including the
-    1-turn as-is special case and out-of-order arrival across buckets."""
-    df = spark.createDataFrame(
-        _rows(),
-        "conv_id string, turn_idx int, role string, text string, "
-        "tool string, ts timestamp",
-    ).repartition(16)
-    extracted = extract_transcripts(df).cache()
-    try:
-        single = {
-            r["conv_id"]: r for r in assemble_conversations(extracted).collect()
-        }
-        two_level = {
-            r["conv_id"]: r
-            for r in assemble_conversations(extracted, bucket_turns=64).collect()
-        }
-        assert single.keys() == two_level.keys()
-        for cid in single:
-            for col in ("n_turns", "conversation_markdown", "total_pages",
-                        "problem_turns", "repaired_pages"):
-                assert single[cid][col] == two_level[cid][col], (cid, col)
-    finally:
-        extracted.unpersist()
-
-
-def test_mega_conversation_two_level(spark):
-    """A 10^5-turn conversation assembles through the bucketed path with
-    per-bucket collect_list state bounded by bucket_turns — the scale shape
-    where a single-group collect_list task would hold every turn."""
+def test_mega_conversation_assembles(spark):
+    """A 10^5-turn conversation assembles through the one-shuffle path:
+    every turn, in turn order, in one combined row."""
     n = 100_000
-    df = spark.createDataFrame(
-        [("conv_mega", i, "assistant", f"t{i}", None) for i in range(n)],
-        "conv_id string, turn_idx int, role string, text string, tool string",
-    ).withColumn("ts", F.lit(dt.datetime(2025, 1, 1)))
+    df = spark.range(n).select(
+        F.lit("conv_mega").alias("conv_id"),
+        F.col("id").cast("int").alias("turn_idx"),
+        F.lit("assistant").alias("role"),
+        F.concat(F.lit("t"), F.col("id").cast("string")).alias("text"),
+        F.lit(None).cast("string").alias("tool"),
+        F.lit(dt.datetime(2025, 1, 1)).alias("ts"),
+    )
     extracted = extract_transcripts(df)
-    row = assemble_conversations(extracted, bucket_turns=1024).collect()[0]
+    row = assemble_conversations(extracted).collect()[0]
     assert row["n_turns"] == n
     md = row["conversation_markdown"]
     assert md.startswith("t0") and md.endswith(f"t{n - 1}")
-    # stable ordering spot-check across a bucket boundary
+    # stable ordering spot-check mid-conversation
     assert "t1023\n\n---\n\nt1024" in md
 
 

@@ -5,9 +5,10 @@ classes silently diverging from Python's Unicode semantics. Pins:
    stopwords ('für'), Hebrew/Arabic/CJK scripts, and NBSP whitespace;
 2. the A1 combine expression against the kernel on Unicode whitespace
    (NBSP, NEL, ideographic space, \\x1c-\\x1f separators);
-3. ``PY_WHITESPACE`` against ``str.isspace()``, and both JVM strips (the
-   combine expression and the two-level assembly) against ``str.strip()``
-   on every one of its code points and on non-whitespace lookalikes.
+3. ``PY_WHITESPACE`` against ``str.isspace()``, and the JVM strip (the
+   combine expression, alone and through ``assemble_conversations``)
+   against ``str.strip()`` on every one of its code points and on
+   non-whitespace lookalikes.
 """
 import duckdb
 import pandas as pd
@@ -120,10 +121,9 @@ def test_jvm_strips_match_str_strip_on_every_whitespace(spark):
         "conv_id string, turn_idx int, extracted_text string, n_pages int, "
         "problems array<string>, repaired_pages array<int>",
     )
-    # bucket_turns=2 puts the first two sections in one bucket and the third
-    # in another: two partial combines strip, and the merge joins them
+    # the same strip through the product assembly path
     assembled = {
         r["conv_id"]: r["conversation_markdown"]
-        for r in assemble_conversations(extracted, bucket_turns=2).collect()
+        for r in assemble_conversations(extracted).collect()
     }
     assert [assembled[f"c{i:02d}"] for i in range(len(cases))] == expected
