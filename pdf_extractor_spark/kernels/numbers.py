@@ -10,11 +10,22 @@ from __future__ import annotations
 import re
 from typing import List, Optional
 
-_CURRENCY_RE = re.compile(r"[₪$€£¥₹₪]")
+_CURRENCY_SYMBOLS = "₪$€£¥₹"
+_CURRENCY_RE = re.compile(f"[{re.escape(_CURRENCY_SYMBOLS)}]")
 # Digits, optional 3-digit groups split by , . or space, optional decimal
 # tail, optional %; _NUMBER_RE adds the optional minus.
 _UNSIGNED_NUMBER_RE = re.compile(r"\d+(?:[,\.\s]\d{3})*(?:[,\.]\d+)?%?")
 _NUMBER_RE = re.compile("-?" + _UNSIGNED_NUMBER_RE.pattern)
+
+
+def _strip_currency(text: str) -> str:
+    """``text`` without currency symbols. Most pages hold none, and a
+    substring test per symbol is a memchr (or, for a symbol wider than the
+    string's storage kind, no scan at all), where the regex steps through
+    every character."""
+    if any(c in text for c in _CURRENCY_SYMBOLS):
+        return _CURRENCY_RE.sub("", text)
+    return text
 
 
 def _normalize_separators(num: str) -> str:
@@ -48,7 +59,7 @@ def extract_numbers(text: str) -> List[str]:
     separators, ``.`` decimal point, ``%`` stripped)."""
     if not text:
         return []
-    cleaned = _CURRENCY_RE.sub("", text)
+    cleaned = _strip_currency(text)
     out: List[str] = []
     for match in _NUMBER_RE.findall(cleaned):
         num = _normalize_separators(match.rstrip("%")).replace(" ", "")
@@ -69,7 +80,7 @@ def has_extractable_number(text: str) -> bool:
     sre skip straight to the digits."""
     if not text:
         return False
-    cleaned = _CURRENCY_RE.sub("", text)
+    cleaned = _strip_currency(text)
     for match in _UNSIGNED_NUMBER_RE.finditer(cleaned):
         num = _normalize_separators(match.group().rstrip("%")).replace(" ", "")
         try:

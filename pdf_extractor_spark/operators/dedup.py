@@ -2459,10 +2459,14 @@ def _suite_pair_counts(docs: DataFrame, observation=None) -> DataFrame:
     prunes an observed subtree whose empty filter result feeds a further
     shuffle, and the metrics are then never delivered (obs.get raises) —
     found the hard way; markers flowing THROUGH the aggregations close
-    that hole. Size-1 buckets pair with nothing and are not drops
-    (identical to _capped_buckets' 2..cap keep + >cap count). Marker rows
-    survive the count as (cut, NULL ids) rows; consumers exclude them
-    with doc_a IS NOT NULL (or null-safe conditionals)."""
+    that hole. One more marker, with no cut and n = 0, is added
+    unconditionally, so a corpus with no bucket of size 2 or more (no
+    shared shingle, no band collision, nothing over the cap) still
+    delivers its all-zero drop metrics. Size-1 buckets pair with nothing
+    and are not drops (identical to _capped_buckets' 2..cap keep + >cap
+    count). Marker rows survive the count as (cut, NULL ids) rows;
+    consumers exclude them with doc_a IS NOT NULL (or null-safe
+    conditionals)."""
     b = _suite_tagged_buckets(docs).select(
         "cut", "ids", F.size("ids").alias("n")
     )
@@ -2481,15 +2485,22 @@ def _suite_pair_counts(docs: DataFrame, observation=None) -> DataFrame:
             .otherwise(marker)
         ).alias("p"),
     )
+    # one unconditional marker (no cut, n = 0): the stream is non-empty
+    # even when no bucket reaches size 2 or overflows the cap
+    sentinel = docs.sparkSession.range(1).select(
+        F.lit(None).cast("string").alias("cut"),
+        F.lit(0).alias("n"),
+        marker[0].alias("p"),
+    )
+    rows = rows.unionByName(sentinel)
     if observation is not None:
+        dropped = F.col("n") > MAX_BUCKET_DOCS
         rows = rows.observe(
             observation,
-            F.sum(F.col("p.a.doc_id").isNull().cast("long")).alias(
-                "n_buckets_dropped"
+            F.sum(dropped.cast("long")).alias("n_buckets_dropped"),
+            F.sum(F.when(dropped, F.col("n")).otherwise(0)).alias(
+                "n_ids_dropped"
             ),
-            F.sum(
-                F.when(F.col("p.a.doc_id").isNull(), F.col("n")).otherwise(0)
-            ).alias("n_ids_dropped"),
         )
     return rows.groupBy(
         "cut",
@@ -2508,7 +2519,7 @@ def shingle_pair_suite_summary(
     Marker rows ride to the very end as a single null-id pivot group that
     every output conditional excludes (null-safe thresholds; n_pred
     guarded explicitly), so no stage between the Observation and the
-    final one-row aggregate can go empty while drops exist."""
+    final one-row aggregate can go empty."""
     is_cut = lambda c: F.col("cut") == c  # noqa: E731
     per_pair = (
         _suite_pair_counts(docs, observation)

@@ -21,7 +21,10 @@ Scale notes (10^12 turns):
   caller whose source has no splittable layout (one file per giant
   conversation) repartitions its own input first.
 - The only shuffle is the final per-conversation regroup; AQE coalesces its
-  output partitions and splits skewed groups' sort spills.
+  output partitions and splits skewed groups' sort spills. Its coalescing
+  floor is 64 KB (session.get_spark), so a small regroup still comes out
+  as about one partition per core, not one 1 MB partition: the curate
+  stages that map over this output stay parallel.
 - Per-turn results can be written (and resumed) independently of assembly,
   so the expensive stage is checkpointed before the shuffle (plans.manifest).
 """

@@ -92,7 +92,14 @@ def iter_curate_stages(
     text is not carried twice); the boilerplate stage stores the cleaned
     text plus its whitespace word split ``ws``, which feeds both the
     recomputed n_words and the repetition gate's gram build (no re-split
-    per gate). The final stage is yielded lazy for the consumer to sink."""
+    per gate). The final stage is yielded lazy for the consumer to sink.
+
+    Every stage is a per-conversation map or a shuffle whose output AQE
+    coalesces; the session's 64 KB coalescing floor (session.get_spark)
+    keeps a small corpus at about one partition per core through every
+    stage, so the CPU-dense row work (HOF gram sorts, word stats, PII
+    regexes) runs on all cores. At Spark's 1 MB floor, a corpus whose
+    assembly shuffle was a few MB ran every stage as one task."""
     assembled = assemble_conversations(
         extract_transcripts(transcripts)
     ).localCheckpoint(eager=True)

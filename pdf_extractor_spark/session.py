@@ -4,6 +4,25 @@ Tuned for the engine's workload: wide text rows through Arrow batches, AQE for
 skew/coalescing, and shuffle partitioning sized for local[32] tests while the
 same settings scale to multi-executor clusters (shuffle.partitions is the only
 knob to raise at 100 TB).
+
+AQE's coalescing floor is lowered from Spark's 1 MB to 64 KB. With the
+default ``parallelismFirst``, AQE packs a shuffle's output into partitions of
+``max(total / defaultParallelism, minPartitionSize)`` bytes, so at 1 MB a
+shuffle of a few hundred KB to a few MB collapses into one or two tasks. The
+curate stages after the per-conversation regroup are CPU-dense per-row text
+maps (HOF gram sorts, word stats, PII regexes) whose rows are small on the
+wire: at 1 MB every one of them ran as a single task on local[4]. At 64 KB a
+small shuffle coalesces to about one partition per core instead; a shuffle
+larger than ``defaultParallelism`` MB keeps the partition count it had.
+Sweep on the perfbench curate corpus (seed 1, local[4]): 16 KB and 64 KB
+give 4-5 partitions at every stage, 256 KB leaves the repetition and final
+stages at one.
+
+Module-level UDFs (``functions/udfs.py``) cache the JVM function they build
+for the first session, bound to that session's Python accumulator server.
+``get_spark`` drops those caches so a session started after ``spark.stop()``
+in the same process builds fresh ones; otherwise every task of such a UDF
+logs "Failed to update accumulator ... Broken pipe".
 """
 from __future__ import annotations
 
@@ -19,6 +38,16 @@ def _shm_is_roomy(min_free_bytes: int = 32 * 1024**3) -> bool:
         return st.f_bavail * st.f_frsize >= min_free_bytes
     except OSError:
         return False
+
+
+def _reset_module_udfs() -> None:
+    """Forget the JVM functions the package's module-level UDFs built for an
+    earlier session (see the module docstring)."""
+    from .functions import udfs
+
+    for obj in vars(udfs).values():
+        if hasattr(obj, "_unwrapped"):
+            obj._unwrapped._judf_placeholder = None
 
 
 def get_spark(
@@ -42,6 +71,10 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # coalesce small shuffles to ~one partition per core, not to 1 MB
+        # partitions (see the module docstring)
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+                "64KB")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # Arrow: vectorized pandas-UDF transfer; batch size bounded because
         # payload rows can be hundreds of KB of text each.
@@ -69,6 +102,7 @@ def get_spark(
         builder = builder.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    _reset_module_udfs()
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -57,3 +57,53 @@ def test_query_registration():
 
     assert "dedup_components" in e.queries()
     assert "dedup_components" in e.oracle_sql()
+
+
+def test_incremental_components_no_cap_crossing_bucket_at_sf001(spark):
+    """dedup_components_incremental equals the full recompute only while
+    no LSH band bucket is under MAX_BUCKET_DOCS over the old-only corpus
+    but over it on the union corpus: the stored labels would keep that
+    bucket's edges and the recompute would drop them. Pin that no such
+    bucket exists at the oracle-gated scale, so a generator change that
+    creates one names the bucket here instead of failing the oracle
+    with a bare inequality."""
+    import os
+
+    from pyspark.sql import functions as F
+    from test_cogroup_twin import SF_DIR
+
+    from pdf_extractor_spark.operators import load
+    from pdf_extractor_spark.operators.dedup import (
+        MAX_BUCKET_DOCS,
+        _lsh_band_buckets,
+        _minhash_frame,
+    )
+
+    # the oracle sweep's scale, next to the tests' default sf0.001 data
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    docs = load(spark, sf_dir, "documents")
+    # the query's 80/20 split
+    split = docs.agg(
+        F.expr("(max(doc_id) * 4) div 5").alias("s")
+    ).first()["s"]
+    sigs = _minhash_frame(docs).localCheckpoint(eager=True)
+
+    def sizes(frame, name):
+        return _lsh_band_buckets(frame).select(
+            "band", "h", F.size("ids").alias(name)
+        )
+
+    crossing = (
+        sizes(sigs.where(F.col("doc_id") < split), "n_old")
+        .join(sizes(sigs, "n_union"), ["band", "h"])
+        .where(
+            (F.col("n_old") <= MAX_BUCKET_DOCS)
+            & (F.col("n_union") > MAX_BUCKET_DOCS)
+        )
+        .collect()
+    )
+    assert not crossing, (
+        f"LSH band buckets cross MAX_BUCKET_DOCS={MAX_BUCKET_DOCS} between "
+        "the old-only and union corpora (band, hash, old size, union "
+        f"size): {[tuple(r) for r in crossing]}"
+    )

@@ -88,3 +88,37 @@ def test_has_extractable_number_parity():
         assert has_extractable_number(s) == bool(extract_numbers(s))
 
     prop()
+
+
+def test_currency_strip_parity():
+    """Stripping currency only when a symbol is present gives what the
+    unconditional regex strip gave, for both number scanners."""
+    import re
+
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from pdf_extractor_spark.kernels import numbers as N
+
+    old_re = re.compile(r"[₪$€£¥₹₪]")
+
+    def old_extract(text):
+        if not text:
+            return []
+        out = []
+        for m in N._NUMBER_RE.findall(old_re.sub("", text)):
+            num = N._normalize_separators(m.rstrip("%")).replace(" ", "")
+            try:
+                float(num)
+            except ValueError:
+                continue
+            out.append(num)
+        return out
+
+    @given(st.text(alphabet="0123456789.,-% |ab\nש₪$€£¥₹", max_size=60))
+    @settings(max_examples=400, deadline=None)
+    def prop(s):
+        assert N.extract_numbers(s) == old_extract(s)
+        assert N.has_extractable_number(s) == bool(old_extract(s))
+
+    prop()

@@ -168,6 +168,27 @@ def test_shingle_pair_suite_drops_survive_all_dropped_corpus(spark):
     assert all(v == 0 for v in srow.asDict().values())
 
 
+def test_shingle_pair_suite_observed_on_zero_candidate_corpus(spark):
+    """Three docs that share no shingle (and no doc is a containment
+    plant) leave no bucket of size 2 or more in any cut: the observed
+    stream holds only the unconditional marker row, yet the summary's
+    Observation still delivers its zero drop metrics."""
+    from pyspark.sql.observation import Observation
+
+    from pdf_extractor_spark.operators import dedup as D
+
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{i}x{j}" for j in range(12))) for i in (1, 2, 3)],
+        "doc_id long, text string",
+    )
+    obs = Observation()
+    srow = D.shingle_pair_suite_summary(docs, obs).collect()[0]
+    got = obs.get
+    assert got["n_buckets_dropped"] == 0
+    assert got["n_ids_dropped"] == 0
+    assert all(v == 0 for v in srow.asDict().values())
+
+
 def test_ann_index_roundtrip_matches_inline_fit(spark):
     ev = _quantized_vecs(_emb(spark, SF_DIR)).localCheckpoint(eager=True)
     root = tempfile.mkdtemp(prefix="ann_idx_test_")
