@@ -7,12 +7,9 @@ module adds that split on the fsio commit protocol (plans/fsio.py):
 
 * ``ann_index_build(ev, store_root)``: fit the coarse quantizer
   (N_CENTROIDS-cell Lloyd) + the M PQ codebooks (fused Lloyd), encode the
-  corpus, and publish ONE versioned snapshot ``idx_v<n>/`` — a single
-  atomic parquet write whose ``_SUCCESS`` is the commit point; the
-  predecessor version is pruned only AFTER the successor commits, so a
-  crash anywhere leaves a readable committed store (crash-injected by
-  scripts/fault_drive.py section E). The snapshot holds three row kinds
-  in one schema:
+  corpus, and publish ONE versioned snapshot ``idx_v<n>/`` with
+  ``fsio.publish`` (crash-injected by scripts/fault_drive.py section E).
+  The snapshot holds three row kinds in one schema:
 
   - part='coarse'   (cid, cvec)           — K x D ints, broadcast-sized
   - part='codebook' (m, cid, cvec)        — M x KSUB x DS ints
@@ -53,17 +50,16 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..plans import fsio
 from .pq import (
+    PQ_KSUB,
     PQ_M,
     _cb_flat,
     _encoded,
+    _ivf_candidates,
     _ivfpq_recall_oracle,
     _recall_from_candidates,
     _subspace_fits,
 )
 from .similarity_search import (
-    IVF_NPROBE,
-    N_QUERIES,
-    _centroid_dist_structs,
     _emb,
     _fit_centroids,
     _nearest_centroid,
@@ -121,32 +117,21 @@ def ann_index_frames(ev: DataFrame):
 
 
 def ann_index_build(ev: DataFrame, store_root: str) -> int:
-    """Fit, encode, and publish the next snapshot version; prune the
-    predecessors only after the new version commits. Returns the
+    """Fit, encode, and publish the next snapshot version. Returns the
     committed version number."""
     spark = ev.sparkSession
-    have = fsio.committed_versions(spark, store_root, ANN_IDX_PREFIX)
-    v = (have[-1] + 1) if have else 0
+    _, last = fsio.read_latest(spark, store_root, ANN_IDX_PREFIX)
     _, _, snap = ann_index_frames(ev)
-    # mode("overwrite") here can only ever hit a CRASHED attempt's debris
-    # at this version (an uncommitted dir) — never a committed snapshot
-    snap.write.mode("overwrite").parquet(
-        f"{store_root}/{ANN_IDX_PREFIX}{v}"
-    )
-    prev = [x for x in have if x < v]
-    if prev:
-        fsio.prune_versions_below(spark, store_root, ANN_IDX_PREFIX, v)
-    return v
+    fsio.publish(snap, store_root, ANN_IDX_PREFIX, last + 1)
+    return last + 1
 
 
 def ann_index_load(spark: SparkSession, store_root: str) -> DataFrame:
-    """The highest COMMITTED snapshot (crashed attempts invisible)."""
-    have = fsio.committed_versions(spark, store_root, ANN_IDX_PREFIX)
-    if not have:
+    """The latest committed snapshot; raises on an empty store."""
+    snap, _ = fsio.read_latest(spark, store_root, ANN_IDX_PREFIX)
+    if snap is None:
         raise ValueError(f"no committed {ANN_IDX_PREFIX}* under {store_root}")
-    return spark.read.parquet(
-        f"{store_root}/{ANN_IDX_PREFIX}{have[-1]}"
-    )
+    return snap
 
 
 def ann_index_serve(ev: DataFrame, snap: DataFrame) -> DataFrame:
@@ -167,8 +152,6 @@ def ann_index_serve(ev: DataFrame, snap: DataFrame) -> DataFrame:
         for r in model
         if r["part"] == "codebook"
     }
-    from .pq import PQ_KSUB
-
     fits = [[cb[(m, i)] for i in range(PQ_KSUB)] for m in range(PQ_M)]
     codes = snap.where(F.col("part") == "code").select(
         "vec_id",
@@ -178,25 +161,7 @@ def ann_index_serve(ev: DataFrame, snap: DataFrame) -> DataFrame:
             for m in range(PQ_M)
         ],
     )
-    probes = (
-        ev.where(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.explode(
-                F.slice(
-                    F.sort_array(_centroid_dist_structs(coarse)),
-                    1,
-                    IVF_NPROBE,
-                )
-            ).alias("p"),
-        )
-        .select("q_id", F.col("p.cid").alias("cell"))
-    )
-    cand = (
-        codes.join(F.broadcast(probes), "cell")
-        .where(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", *[f"code{m}" for m in range(PQ_M)])
-    )
+    cand = _ivf_candidates(ev, coarse, codes)
     return _recall_from_candidates(ev, fits, cand)
 
 

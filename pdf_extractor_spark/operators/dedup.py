@@ -159,24 +159,6 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str, observation=None) -> D
     return minhash_lsh_pairs(load(spark, sf_dir, "documents"), observation)
 
 
-def _store_snapshot_files(spark: SparkSession, signature_store: str) -> list:
-    """Pin the store snapshot by file list through the Hadoop FileSystem
-    API — works on any supported filesystem (HDFS/S3/local), unlike a
-    driver-local glob; O(1) driver work, and the append later in the batch
-    cannot leak into a read pinned this way. Returns [] for a missing or
-    empty store (a legitimate first batch with no seed)."""
-    sc = spark.sparkContext
-    hpath = sc._jvm.org.apache.hadoop.fs.Path(signature_store)
-    fs = hpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return []
-    return sorted(
-        f.getPath().toString()
-        for f in fs.listStatus(hpath)
-        if f.getPath().getName().endswith(".parquet")
-    )
-
-
 def _incremental_pair_plan(
     new_docs: DataFrame, stored_sigs: DataFrame, observation=None
 ):
@@ -253,7 +235,9 @@ def incremental_lsh_pairs(
     from ..plans import fsio
 
     spark = new_docs.sparkSession
-    files = _store_snapshot_files(spark, signature_store)
+    # pin the snapshot by file list, so the append later in the batch
+    # cannot leak into this read; [] is a legitimate first batch
+    files = fsio.parquet_files(spark, signature_store)
     if files:
         stored = spark.read.parquet(*files)
     else:

@@ -246,47 +246,37 @@ def incremental_components(
 
 
 CC_LAB_PREFIX = "lab_v"
+_LAB_SCHEMA = "node long, rep long"
 
 
 def components_store_load(spark: SparkSession, store_root: str) -> DataFrame:
-    """The highest COMMITTED label snapshot (node, rep). A store with no
-    committed version is a legitimate first batch and reads as empty —
-    crashed attempts (no ``_SUCCESS``) are invisible either way."""
+    """The latest committed label snapshot (node, rep). An empty store is
+    a legitimate first batch and reads as empty."""
     from ..plans import fsio
 
-    have = fsio.committed_versions(spark, store_root, CC_LAB_PREFIX)
-    if not have:
-        return spark.createDataFrame([], "node long, rep long")
-    return spark.read.parquet(
-        f"{store_root}/{CC_LAB_PREFIX}{have[-1]}"
-    )
+    labels, _ = fsio.read_latest(spark, store_root, CC_LAB_PREFIX)
+    if labels is None:
+        return spark.createDataFrame([], _LAB_SCHEMA)
+    return labels
 
 
 def components_store_update(new_edges: DataFrame, store_root: str) -> int:
     """Fold a batch's verified edges into the committed label store and
-    publish the successor snapshot — the production form of
-    ``incremental_components`` on the fsio commit protocol (the ann_index
-    layout: write ``lab_v<n>`` atomically with ``_SUCCESS`` as the commit
-    point; prune predecessors only AFTER the successor commits; a crashed
-    attempt's versioned debris is invisible to readers and overwritten by
-    the retry — both windows crash-injected by scripts/fault_drive.py
-    section F). Returns the committed version number."""
+    publish the successor snapshot ``lab_v<n>`` — the production form of
+    ``incremental_components`` on the fsio versioned-store protocol
+    (crash-injected by scripts/fault_drive.py section F). Returns the
+    committed version number."""
     from ..plans import fsio
 
     spark = new_edges.sparkSession
-    have = fsio.committed_versions(spark, store_root, CC_LAB_PREFIX)
-    v = (have[-1] + 1) if have else 0
-    labels = incremental_components(
-        components_store_load(spark, store_root), new_edges
+    labels, last = fsio.read_latest(spark, store_root, CC_LAB_PREFIX)
+    if labels is None:
+        labels = spark.createDataFrame([], _LAB_SCHEMA)
+    fsio.publish(
+        incremental_components(labels, new_edges),
+        store_root, CC_LAB_PREFIX, last + 1,
     )
-    # overwrite can only ever hit a crashed attempt's uncommitted debris
-    # at this version — never a committed snapshot
-    labels.write.mode("overwrite").parquet(
-        f"{store_root}/{CC_LAB_PREFIX}{v}"
-    )
-    if have:
-        fsio.prune_versions_below(spark, store_root, CC_LAB_PREFIX, v)
-    return v
+    return last + 1
 
 
 def q_dedup_components_incremental(

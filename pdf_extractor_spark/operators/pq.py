@@ -334,6 +334,15 @@ def q_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[F.col(f"a{m}.cid").alias(f"code{m}") for m in range(PQ_M)],
         )
     )
+    cand = _ivf_candidates(ev, coarse, codes)
+    return _recall_from_candidates(ev, fits, cand)
+
+
+def _ivf_candidates(ev: DataFrame, coarse: list, codes: DataFrame) -> DataFrame:
+    """(q_id, vec_id, code0..) for every query and every coded vector in
+    one of the query's IVF_NPROBE nearest coarse cells: probes come from
+    broadcast-centroid distances (no shuffle), candidates from a broadcast
+    equi-join on the cell id. ``codes`` carries (vec_id, cell, code0..)."""
     probes = (
         ev.where(F.col("vec_id") < N_QUERIES)
         .select(
@@ -348,16 +357,11 @@ def q_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("q_id", F.col("p.cid").alias("cell"))
     )
-    cand = (
+    return (
         codes.join(F.broadcast(probes), "cell")
         .where(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            *[f"code{m}" for m in range(PQ_M)],
-        )
+        .select("q_id", "vec_id", *[f"code{m}" for m in range(PQ_M)])
     )
-    return _recall_from_candidates(ev, fits, cand)
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,20 @@
 """Commit-protocol filesystem primitives over the Hadoop FileSystem API.
 
-Every stateful artifact in this engine (dedup signature store, streaming
-packing high-water mark, continuous-aggregate snapshot) needs the same
-three guarantees on any Hadoop filesystem (HDFS / S3A / local):
+Every versioned store in this engine is a chain of ``<root>/<prefix><n>/``
+parquet snapshots read with ``read_latest`` and advanced with ``publish``:
+
+* the streaming packing high-water mark (``b=<batch_id>``);
+* the streaming CDC state (``v=<batch_id>``);
+* the streaming rollup partials (``v=<batch_id>``), which the CUSUM
+  monitor reads too;
+* the ANN index (``idx_v<n>``);
+* the connected-component labels (``lab_v<n>``).
+
+The flat, append-only dedup signature store is not versioned: its batch
+pins the part files it read with ``parquet_files`` before it appends.
+
+The commit rule, which no caller restates, gives three guarantees on any
+Hadoop filesystem (HDFS / S3A / local):
 
 * **Completed vs crashed writes are distinguishable.** A Spark parquet
   job publishes the job-level ``_SUCCESS`` marker only after every part
@@ -12,20 +24,22 @@ three guarantees on any Hadoop filesystem (HDFS / S3A / local):
 * **State advances by adding a new version, never by rewriting the only
   copy in place.** ``mode("overwrite")`` deletes the target before the
   new write commits; a crash in between destroys the previous state.
-  Writers instead publish ``<root>/<prefix><n>/`` snapshots and readers
-  take the highest committed version (``committed_versions()``).
+  ``publish`` overwrites only its OWN version's directory (so a retry
+  clears a crashed attempt's debris at that version), and readers take
+  the highest committed version (``committed_versions()``), so debris is
+  invisible.
 * **Superseded versions are pruned only after the successor commits**
-  (``delete()``); a crash mid-prune leaves extra old versions that the
-  max-committed read rule ignores.
+  (``prune_versions_below``); a crash mid-prune leaves extra old
+  versions that the max-committed read rule ignores.
 
 Driver-local ``os.path`` / ``glob`` would silently break the moment the
 store moves off the driver's disk — everything here goes through the
 JVM's ``org.apache.hadoop.fs.FileSystem`` resolved from the path's own
-scheme.
+scheme, and no other module touches that API.
 """
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 SUCCESS = "_SUCCESS"
 
@@ -97,3 +111,32 @@ def prune_versions_below(
     for v in committed_versions(spark, root, prefix):
         if v < keep_from:
             delete(spark, f"{root}/{prefix}{v}")
+
+
+def read_latest(spark: SparkSession, root: str, prefix: str):
+    """(frame, version) of the highest committed ``<root>/<prefix><n>/``
+    snapshot; ``(None, -1)`` for an empty store."""
+    vs = committed_versions(spark, root, prefix)
+    if not vs:
+        return None, -1
+    return spark.read.parquet(f"{root}/{prefix}{vs[-1]}"), vs[-1]
+
+
+def publish(df: DataFrame, root: str, prefix: str, version: int) -> None:
+    """Commit ``df`` as snapshot ``version``, then prune every version
+    below it."""
+    df.write.mode("overwrite").parquet(f"{root}/{prefix}{version}")
+    prune_versions_below(df.sparkSession, root, prefix, version)
+
+
+def parquet_files(spark: SparkSession, root: str) -> list[str]:
+    """Sorted paths of the ``*.parquet`` part files directly under
+    ``root``; [] for a missing or empty directory."""
+    fs, hroot, _ = _fs(spark, root)
+    if not fs.exists(hroot):
+        return []
+    return sorted(
+        st.getPath().toString()
+        for st in fs.listStatus(hroot)
+        if st.getPath().getName().endswith(".parquet")
+    )

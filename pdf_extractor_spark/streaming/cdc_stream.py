@@ -13,11 +13,9 @@ last-writer window, one full-outer key-equi join against the stored state,
 a pure-expression classification, and two parquet publishes. History is
 never recomputed.
 
-Exactly-once follows the rollup_stream snapshot-chain protocol: the state
-advances by publishing ``v=<batch_id>`` (readers take the highest
-COMMITTED version; superseded versions are pruned only after the successor
-commits), and the change log appends ``chg=<batch_id>`` dirs. Changes are
-written BEFORE the state publishes: a crash between the two leaves the
+Exactly-once: the state is an fsio versioned store published as
+``v=<batch_id>``, and the change log appends ``chg=<batch_id>`` dirs.
+Changes are written BEFORE the state publishes: a crash between the two leaves the
 change dir present but the state at the previous version, so the replayed
 batch (same input, same stored state — both deterministic) rewrites an
 identical change set in place and then publishes the state. A replay after
@@ -33,20 +31,11 @@ from ..plans import fsio
 _STATE_SCHEMA = "doc_id long, digest string"
 
 
-def _read_state(spark: SparkSession, store_path: str):
-    """(state_df_or_None, last_batch_id) from the highest committed
-    ``v=<id>`` snapshot."""
-    vs = fsio.committed_versions(spark, store_path, "v=")
-    if not vs:
-        return None, -1
-    return spark.read.parquet(f"{store_path}/v={vs[-1]}"), vs[-1]
-
-
 def apply_batch(batch: DataFrame, batch_id: int, store_path: str) -> None:
     """foreachBatch body: classify this batch's writes against the stored
     state, append the change rows, publish the new state snapshot."""
     spark = batch.sparkSession
-    stored, last_id = _read_state(spark, store_path)
+    stored, last_id = fsio.read_latest(spark, store_path, "v=")
     if batch_id <= last_id:
         return  # replay after commit — state and changes already published
     if stored is None:
@@ -101,8 +90,7 @@ def apply_batch(batch: DataFrame, batch_id: int, store_path: str) -> None:
             F.coalesce("new_digest", "old_digest").alias("digest"),
         )
     )
-    new_state.write.mode("overwrite").parquet(f"{store_path}/v={batch_id}")
-    fsio.prune_versions_below(spark, store_path, "v=", batch_id)
+    fsio.publish(new_state, store_path, "v=", batch_id)
 
 
 def cdc_sink(stream: DataFrame, store_path: str):
@@ -117,7 +105,7 @@ def cdc_sink(stream: DataFrame, store_path: str):
 
 def state_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """The read side: the latest committed state (doc_id, digest)."""
-    stored, _ = _read_state(spark, store_path)
+    stored, _ = fsio.read_latest(spark, store_path, "v=")
     return (
         spark.createDataFrame([], _STATE_SCHEMA) if stored is None else stored
     )

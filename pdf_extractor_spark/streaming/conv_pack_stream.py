@@ -48,16 +48,16 @@ STATE_SCHEMA = "turn_idxs array<int>, toks array<bigint>"
 QUIESCENT_EVICT_MS = 5 * 60 * 1000
 
 
-def greedy_pack(pairs, window: int = CONV_WINDOW):
+def greedy_pack(pairs):
     """The batch operator's greedy fill as a pure function over sorted
     (turn_idx, n_tokens) pairs -> [(turn_idx, n_eff, truncated, win, off)].
     Semantics identical to packing.q_conv_window_pack's expression fold."""
     out = []
     win, fill = 0, 0
     for idx, t in sorted(pairs):
-        eff = min(int(t), window)
-        trunc = int(t) > window
-        if fill + eff <= window:
+        eff = min(int(t), CONV_WINDOW)
+        trunc = int(t) > CONV_WINDOW
+        if fill + eff <= CONV_WINDOW:
             out.append((idx, eff, trunc, win, fill))
             fill += eff
         else:

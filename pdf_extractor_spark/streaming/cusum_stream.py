@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.expressions import floordiv_sql
 from ..operators.aggregates import cusum_fold
-from .rollup_stream import _read_store
+from ..plans import fsio
 
 _OUT_SCHEMA = (
     "event_type string, n_days long, base long, max_cusum long,"
@@ -35,7 +35,7 @@ def cusum_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     shifts labels, never fold semantics), then the shared fold. An empty
     store yields an empty frame, not an error — the monitor must be
     schedulable from minute zero."""
-    stored, _ = _read_store(spark, store_path)
+    stored, _ = fsio.read_latest(spark, store_path, "v=")
     if stored is None:
         return spark.createDataFrame([], _OUT_SCHEMA)
     daily = (

@@ -11,11 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.windows import SESSION_GAP_SECONDS
 
-def dedup_stream(
-    transcript_stream: DataFrame,
-    watermark: str = "10 minutes",
-) -> DataFrame:
+TURN_WATERMARK = "10 minutes"  # lateness bound of the transcript streams
+PROBLEM_WINDOW = "5 minutes"
+SESSION_WATERMARK = "1 hour"
+
+
+def dedup_stream(transcript_stream: DataFrame) -> DataFrame:
     """Streaming exact dedup: drop turns whose normalized text was already
     seen, with state bounded by the event-time watermark
     (``dropDuplicatesWithinWatermark``) — the streaming twin of
@@ -28,32 +31,25 @@ def dedup_stream(
     keyed = transcript_stream.withColumn(
         "content_key", F.md5(normalize_for_comparison_expr(F.col("text")))
     )
-    return keyed.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["content_key"]
-    )
+    return keyed.withWatermark(
+        "ts", TURN_WATERMARK
+    ).dropDuplicatesWithinWatermark(["content_key"])
 
 
-def windowed_problem_counts(
-    extracted_stream: DataFrame,
-    watermark: str = "10 minutes",
-    window_size: str = "5 minutes",
-) -> DataFrame:
+def windowed_problem_counts(extracted_stream: DataFrame) -> DataFrame:
     """Event-time windowed problem-rate aggregate with late-data watermark —
     the streaming analog of the validation report."""
     return (
-        extracted_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_size), "kind")
+        extracted_stream.withWatermark("ts", TURN_WATERMARK)
+        .groupBy(F.window("ts", PROBLEM_WINDOW), "kind")
         .agg(
             F.count("*").alias("turns"),
             F.sum(F.size("problems")).alias("problems"),
         )
     )
 
-def session_spend_stream(
-    event_stream: DataFrame,
-    watermark: str = "1 hour",
-    gap_seconds: int = 1800,
-) -> DataFrame:
+
+def session_spend_stream(event_stream: DataFrame) -> DataFrame:
     """Streaming SESSION windows: the exact transform of
     ``windows.q_session_window_agg`` behind ``readStream`` — dynamic-gap
     sessions per user, closed and emitted once the watermark passes the
@@ -66,9 +62,9 @@ def session_spend_stream(
     # render the same wall-clock either way
     tz_stream = event_stream.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        tz_stream.withWatermark("ts", watermark)
+        tz_stream.withWatermark("ts", SESSION_WATERMARK)
         .groupBy(
-            F.session_window("ts", f"{gap_seconds} seconds").alias("w"),
+            F.session_window("ts", f"{SESSION_GAP_SECONDS} seconds").alias("w"),
             "user_id",
         )
         .agg(

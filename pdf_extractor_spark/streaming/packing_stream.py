@@ -27,32 +27,12 @@ from ..plans import fsio
 
 
 def _read_hwm(spark: SparkSession, path: str):
-    """(hwm, last_batch_id) from the highest COMMITTED ``b=<id>`` mark,
-    (0, -1) on first start. Marks are batch-versioned subdirectories —
-    never an in-place rewrite of the only copy — so the debris of a
-    crashed mark write is invisible (no ``_SUCCESS``) and the previous
-    mark keeps serving. Listing goes through the Hadoop FileSystem API
-    (HDFS/S3/local), never a driver-local os.path check."""
-    vs = fsio.committed_versions(spark, path, "b=")
-    if not vs:
+    """(hwm, last_batch_id) from the latest committed ``b=<id>`` mark,
+    (0, -1) on first start."""
+    mark, b = fsio.read_latest(spark, path, "b=")
+    if mark is None:
         return 0, -1
-    b = vs[-1]
-    r = spark.read.parquet(f"{path}/b={b}").first()
-    return int(r["hwm"]), b
-
-
-def _write_hwm(spark: SparkSession, path: str, hwm: int, batch_id: int):
-    """Publish the mark as a NEW ``b=<batch_id>`` snapshot, then prune
-    superseded marks. Crash anywhere: before the snapshot commits, the
-    previous mark still serves (the batch replays against it and
-    overwrites its own output partition byte-identically); mid-prune,
-    extra old marks remain but the max-committed read rule ignores them.
-    Overwrite within the batch's OWN subdir makes a replay of a crashed
-    attempt self-cleaning."""
-    spark.createDataFrame(
-        [(hwm, batch_id)], "hwm long, batch_id long"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/b={batch_id}")
-    fsio.prune_versions_below(spark, path, "b=", batch_id)
+    return int(mark.first()["hwm"]), b
 
 
 def pack_batch(
@@ -79,7 +59,10 @@ def pack_batch(
     packed.write.mode("overwrite").parquet(
         f"{out_path}/batch_id={batch_id}"
     )
-    _write_hwm(spark, hwm_path, hwm + int(batch_tokens), batch_id)
+    mark = spark.createDataFrame(
+        [(hwm + int(batch_tokens), batch_id)], "hwm long, batch_id long"
+    ).coalesce(1)
+    fsio.publish(mark, hwm_path, "b=", batch_id)
 
 
 def packing_sink(stream: DataFrame, hwm_path: str, out_path: str):

@@ -11,15 +11,12 @@ cells — history is never recomputed. Late/out-of-order events are the
 NORMAL case here (a cell absorbs updates whenever its hours resurface),
 which is exactly why rollup state must be mergeable rather than final.
 
-Exactly-once: the store is a chain of batch-versioned snapshots
-(``v=<batch_id>/``) — a new batch publishes a NEW snapshot, readers take
-the highest COMMITTED one (``_SUCCESS``-gated), and superseded snapshots
-are pruned only after the successor commits. A crash mid-write leaves the
-previous snapshot serving untouched; a replayed batch (same id) sees the
-store already at its version and skips. This is the local-parquet
-stand-in for a MERGE INTO on a transactional table (Iceberg/Delta) — the
-snapshot chain IS the transaction log; the cell-keyed merge plan is
-identical either way.
+Exactly-once: the store is an fsio versioned store published as
+``v=<batch_id>``, so a crash mid-write leaves the previous snapshot
+serving and a replayed batch (same id) sees the store already at its
+version and skips. This is the local-parquet stand-in for a MERGE INTO on
+a transactional table (Iceberg/Delta) — the snapshot chain IS the
+transaction log; the cell-keyed merge plan is identical either way.
 """
 from __future__ import annotations
 
@@ -33,31 +30,16 @@ from ..plans import fsio
 _SCHEMA = "event_type string, hour_b long, n long, s long, mn long, mx long"
 
 
-def _read_store(spark: SparkSession, path: str):
-    """(partials_df_or_None, last_batch_id) from the highest committed
-    ``v=<id>`` snapshot; crashed/in-flight snapshots are invisible."""
-    vs = fsio.committed_versions(spark, path, "v=")
-    if not vs:
-        return None, -1
-    v = vs[-1]
-    return spark.read.parquet(f"{path}/v={v}"), v
-
-
 def merge_batch(batch: DataFrame, batch_id: int, store_path: str) -> None:
     """foreachBatch body: aggregate this batch to hourly partials, merge
-    into the stored cells, publish the result as snapshot ``v=batch_id``,
-    then prune superseded snapshots. The previous snapshot is never
-    touched before the new one commits, so every crash window replays
-    cleanly (overwrite within the batch's own version dir clears the
-    debris of a crashed attempt)."""
+    into the stored cells, publish the result as snapshot ``v=batch_id``."""
     spark = batch.sparkSession
-    stored, last_id = _read_store(spark, store_path)
+    stored, last_id = fsio.read_latest(spark, store_path, "v=")
     if batch_id <= last_id:
         return  # replay after commit — already merged
     part = _hourly_partials(_with_ep(batch))
     merged = part if stored is None else merge_partials(stored, part)
-    merged.write.mode("overwrite").parquet(f"{store_path}/v={batch_id}")
-    fsio.prune_versions_below(spark, store_path, "v=", batch_id)
+    fsio.publish(merged, store_path, "v=", batch_id)
 
 
 def rollup_sink(stream: DataFrame, store_path: str):
@@ -78,7 +60,7 @@ def daily_from_store(spark: SparkSession, store_path: str) -> DataFrame:
     """The read side: daily rollup from the maintained partials — the
     same second-level aggregation as q_rollup_two_level. Reads the
     latest committed snapshot; an empty store yields an empty frame."""
-    stored, _ = _read_store(spark, store_path)
+    stored, _ = fsio.read_latest(spark, store_path, "v=")
     if stored is None:
         stored = spark.createDataFrame([], _SCHEMA)
     return (

@@ -17,6 +17,14 @@ commit window and proves the fsio guarantees END-TO-END (not per-unit):
   D. manifest resume — a crash after the bucket output commit but before
      the manifest append reprocesses those buckets idempotently
      (dynamic partition overwrite), landing on the clean-run output.
+  E. ann_index — a crash at the first snapshot write leaves the store
+     unreadable and the rebuild overwrites the debris; a crash mid-prune
+     leaves two committed versions, the reader takes the newer one, and
+     every serve equals the no-fault serve.
+  F. components label store — a crash at the first snapshot write reads
+     as the empty first-batch state; a crash mid-prune leaves two
+     committed versions whose newer one equals the from-scratch union
+     clustering; the next update prunes to one version.
 
 Crashes are injected as exceptions raised at the exact commit-window
 boundary (the on-disk state an OS kill would leave), caught by the
@@ -137,13 +145,7 @@ def main() -> None:
     packing_stream.pack_batch(b1, 0, hwm, outp)
 
     # crash after packed output, before the HWM mark
-    orig_write_hwm = packing_stream._write_hwm
-
-    def crash_hwm(*a, **kw):
-        packing_stream._write_hwm = orig_write_hwm
-        raise CRASH("injected crash before HWM mark (output already written)")
-
-    packing_stream._write_hwm = crash_hwm
+    _arm["path"] = f"{hwm}/b=1"
     expect_crash(packing_stream.pack_batch, b2, 1, hwm, outp)
     assert fsio.committed_versions(spark, hwm, "b=") == [0], \
         "mark must still be at batch 0"

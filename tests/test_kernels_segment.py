@@ -142,3 +142,23 @@ def test_extract_turn_problem_detection_and_repair():
     body = "# Page 1\n\ntiny"
     out = extract_turn(_encode_pdf(body))
     assert any("low_content_density" in p for p in out["problems"])
+
+
+# A page the repair is kept for: the strip of the 40 blank lines shortens
+# the page by more than 5%, so quick_similarity returns 0; after the
+# repair "12\n345" joins into one grouped number that float() rejects, so
+# the number-frequency cosine is 0.0 and the repaired page is adopted.
+REPAIRED_BODY = "| a | b |\nword 12 \n345 more\n" + "   \n" * 40 + "end"
+
+
+def test_extract_turn_adopts_repair():
+    out = extract_turn(_encode_pdf(REPAIRED_BODY))
+    assert out["repaired_pages"] == [0]
+    assert "page0:image_repaired" not in out["problems"]
+
+
+def test_extract_turn_adopts_image_aware_repair():
+    out = extract_turn(_encode_pdf("![chart](fig.png)\n" + REPAIRED_BODY))
+    assert out["repaired_pages"] == [0]
+    assert "page0:image_repair_route" in out["problems"]
+    assert "page0:image_repaired" in out["problems"]

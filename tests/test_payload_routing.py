@@ -94,3 +94,30 @@ def test_every_field_matches_kernel_on_generated_corpus(spark):
     for row in golden:
         key = (row["conv_id"], row["turn_idx"])
         assert got[key] == _kernel_fields(row["text"]), key
+
+
+def test_adopted_repair_reports_problems_fixed(spark):
+    """A turn whose page repair is kept makes its conversation's
+    validation status ``problems_fixed`` through the Spark pipeline."""
+    import base64
+
+    from pdf_extractor_spark.plans.pipeline import validation_report
+
+    body = "| a | b |\nword 12 \n345 more\n" + "   \n" * 40 + "end"
+    payload = "data:application/pdf;base64," + base64.b64encode(
+        ("%PDF-1.7\n" + body).encode()
+    ).decode()
+    df = spark.createDataFrame(
+        [("c", 0, "user", "read this", None, None),
+         ("c", 1, "assistant", payload, None, None)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    extracted = extract_transcripts(df)
+    repaired = {
+        r["turn_idx"]: list(r["repaired_pages"]) for r in extracted.collect()
+    }
+    assert repaired == {0: [], 1: [0]}
+    (report,) = validation_report(extracted).collect()
+    assert report["overall_status"] == "problems_fixed"
+    assert report["n_fixed"] == 1

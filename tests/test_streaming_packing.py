@@ -78,11 +78,13 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
     from pdf_extractor_spark.plans import fsio
     from pdf_extractor_spark.streaming.packing_stream import (
         _read_hwm,
-        _write_hwm,
+        token_count_of,
     )
-    from pdf_extractor_spark.streaming.packing_stream import token_count_of
 
-    _write_hwm(spark, hwm, token_count_of(b0), 0)  # restore b0's mark...
+    mark0 = spark.createDataFrame(
+        [(token_count_of(b0), 0)], "hwm long, batch_id long"
+    )
+    fsio.publish(mark0, hwm, "b=", 0)  # restore b0's mark...
     fsio.delete(spark, f"{hwm}/b=1")  # ...and erase b1's, as if never written
     assert _read_hwm(spark, hwm) == (token_count_of(b0), 0)
     pack_batch(b1, 1, hwm, out)
@@ -116,7 +118,7 @@ def test_crashed_mark_write_is_invisible(spark, tmp_path):
     t0 = token_count_of(b0)
     assert _read_hwm(spark, hwm) == (t0, 0)
 
-    # debris of a crashed _write_hwm for batch 1: no _SUCCESS marker
+    # debris of a crashed mark write for batch 1: no _SUCCESS marker
     os.makedirs(os.path.join(hwm, "b=1", "_temporary"))
     assert _read_hwm(spark, hwm) == (t0, 0)  # still batch 0's mark
 
