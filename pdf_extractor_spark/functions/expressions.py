@@ -20,13 +20,53 @@ from ..config import (
 )
 
 
-def normalize_for_comparison_expr(col: Column) -> Column:
-    """X1: keep only Unicode alphanumerics, lowercase.
+def sql_literal(s: str) -> str:
+    """``s`` as a Spark SQL string literal, for projections written as SQL
+    text. Backslash and quote are escaped and every character outside
+    printable ASCII is written as a ``\\uXXXX`` escape, so regexes,
+    newlines and Unicode whitespace survive the parser's unescaping
+    byte for byte."""
+    out = []
+    for ch in s:
+        if ch in "\\'":
+            out.append("\\" + ch)
+        elif " " <= ch <= "~":
+            out.append(ch)
+        else:
+            b = ch.encode("utf-16-be")
+            out.extend(
+                f"\\u{b[i] << 8 | b[i + 1]:04x}" for i in range(0, len(b), 2)
+            )
+    return "'" + "".join(out) + "'"
 
-    ``\\p{L}\\p{N}`` works identically in Java regex (Spark) and RE2 (DuckDB
-    oracle); matches the Python kernel's ``[\\W_]`` complement.
-    """
-    return F.lower(F.regexp_replace(col, r"[^\p{L}\p{N}]+", ""))
+
+# X1's pattern: ``\p{L}\p{N}`` works identically in Java regex (Spark) and
+# RE2 (DuckDB oracle); matches the Python kernel's ``[\W_]`` complement.
+_NON_ALNUM_RE = r"[^\p{L}\p{N}]+"
+_WHITESPACE_RUN_RE = r"\s+"
+
+
+def normalize_for_comparison_expr(col: Column) -> Column:
+    """X1: keep only Unicode alphanumerics, lowercase."""
+    return F.lower(F.regexp_replace(col, _NON_ALNUM_RE, ""))
+
+
+def normalize_for_comparison_sql(col: str) -> str:
+    """:func:`normalize_for_comparison_expr` as SQL text over column ``col``."""
+    return f"lower(regexp_replace({col}, {sql_literal(_NON_ALNUM_RE)}, ''))"
+
+
+def split_words_sql(col: str) -> str:
+    """The non-empty whitespace-run split of ``col`` (Java ``\\s``) as SQL
+    text: the one word array the Gopher statistics, the repetition gate and
+    the curate stages count over."""
+    return f"filter(split({col}, {sql_literal(_WHITESPACE_RUN_RE)}), x -> x != '')"
+
+
+def nonblank_lines_sql(col: str) -> str:
+    """The non-blank (after ``trim``) newline-separated lines of ``col`` as
+    SQL text: the C4 passage unit and the Gopher bullet-line base."""
+    return f"filter(split({col}, '\\n'), x -> trim(x) != '')"
 
 
 def page_header_expr(page_idx: Column, zero_based: bool = True) -> Column:

@@ -13,7 +13,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.expressions import normalize_for_comparison_expr, word_shingles_expr
+from ..functions.expressions import (
+    normalize_for_comparison_expr,
+    sql_literal,
+    word_shingles_expr,
+)
 from ..functions.udfs import simhash_udf
 
 N_MINHASH = 8  # one hash per band -> P(band collision) == per-hash Jaccard
@@ -577,58 +581,47 @@ def paragraph_dedup(
 
     Output: doc_id, n_paras, n_removed, clean_text."""
     if passages is None:
-        # materialize the split ONCE: F.split inside the transform lambda
+        # materialize the split ONCE: split inside the transform lambda
         # would re-split the text per window element (HOF re-eval rule)
-        docs = docs.select("doc_id", F.split("text", " ").alias("_ws"))
-        passages = F.transform(
-            F.sequence(
-                F.lit(0),
-                F.ceil(F.size("_ws") / PARA_WORDS).cast("int") - 1,
-            ),
-            lambda i: F.array_join(
-                F.slice("_ws", i * PARA_WORDS + 1, PARA_WORDS), " "
-            ),
+        docs = docs.selectExpr("doc_id", "split(text, ' ') AS _ws")
+        passages = F.expr(
+            f"transform(sequence(0, CAST(ceil(size(_ws) / {PARA_WORDS}) AS INT)"
+            f" - 1), i -> array_join(slice(_ws, i * {PARA_WORDS} + 1, "
+            f"{PARA_WORDS}), ' '))"
         )
     # keep the passage array on the doc row; everything shuffled is derived
-    # from the digest array
+    # from the digest array. The projections below are SQL text: one py4j
+    # call each, where Column trees cost several per node.
     base = docs.select("doc_id", passages.alias("_paras"))
-    keys = base.select(
-        "doc_id",
-        F.posexplode(
-            F.transform("_paras", lambda p: F.md5(p))
-        ).alias("p_idx", "pkey"),
+    keys = base.selectExpr(
+        "doc_id", "posexplode(transform(_paras, p -> md5(p))) AS (p_idx, pkey)"
     )
     hot = (
         keys.groupBy("pkey")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .where(F.col("cnt") >= min_count)
+        .agg(F.expr("count(1) AS cnt"))
+        .where(f"cnt >= {min_count}")
         .select("pkey")
     )
     hot_idx = (
         keys.join(hot, "pkey")
         .groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list("p_idx")).alias("_hot"))
+        .agg(F.expr("sort_array(collect_list(p_idx)) AS _hot"))
     )
     # zero-passage docs were invisible to the former groupBy-after-explode
     # shape; keep that contract (callers treat absence as nothing-to-clean)
     joined = (
-        base.where(F.size("_paras") >= 1)
+        base.where("size(_paras) >= 1")
         .join(hot_idx, "doc_id", "left")
-        .select(
-            "doc_id",
-            "_paras",
-            F.coalesce("_hot", F.array().cast("array<int>")).alias("_hot"),
+        .selectExpr(
+            "doc_id", "_paras", "coalesce(_hot, CAST(array() AS ARRAY<INT>)) AS _hot"
         )
     )
-    kept = F.filter(
-        "_paras",
-        lambda p, i: F.array_position(F.col("_hot"), i) == 0,
-    )
-    return joined.select(
+    return joined.selectExpr(
         "doc_id",
-        F.size("_paras").cast("long").alias("n_paras"),
-        F.size("_hot").cast("long").alias("n_removed"),
-        F.array_join(kept, joiner).alias("clean_text"),
+        "CAST(size(_paras) AS BIGINT) AS n_paras",
+        "CAST(size(_hot) AS BIGINT) AS n_removed",
+        "array_join(filter(_paras, (p, i) -> array_position(_hot, i) = 0), "
+        f"{sql_literal(joiner)}) AS clean_text",
     )
 
 

@@ -8,7 +8,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.expressions import (
+    nonblank_lines_sql,
     normalize_for_comparison_expr,
+    split_words_sql,
+    sql_literal,
     token_count_expr,
     top_k,
 )
@@ -236,22 +239,59 @@ def q_token_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def word_stats_exprs(col: str = "text") -> list:
+_LETTER_RE = r"\p{L}"
+_BULLET_RE = r"^[-*•]"
+
+
+def _sum_chars_sql(ws: str) -> str:
+    """Summed word length of the word array ``ws`` as a bigint, SQL text."""
+    return (
+        f"aggregate(transform({ws}, w -> length(w)), CAST(0 AS BIGINT), "
+        "(acc, v) -> acc + v)"
+    )
+
+
+def word_stats_exprs(ws: str = "ws") -> list[str]:
     """The Gopher word statistics (word count, summed word length,
-    alphabetic-word count) as aliased columns — the single definition both
-    q_gopher_quality and plans.training_data.curate use."""
-    ws = F.filter(F.split(col, r"\s+"), lambda x: x != "")
+    alphabetic-word count) as aliased SQL text over the word array column
+    ``ws`` (``split_words_sql`` of the text) — the single definition
+    q_gopher_quality, q_gate_attrition and plans.training_data.curate use.
+
+    Stage ``ws`` in its own projection and select these over it: the
+    three statistics then share one split per row, because CollapseProject
+    keeps a non-cheap alias its consumer references more than once."""
     return [
-        F.size(ws).alias("n_words"),
-        F.aggregate(
-            F.transform(ws, lambda w: F.length(w)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("sum_chars"),
-        F.size(F.filter(ws, lambda w: w.rlike(r"\p{L}"))).alias(
-            "n_alpha_words"
-        ),
+        f"size({ws}) AS n_words",
+        f"{_sum_chars_sql(ws)} AS sum_chars",
+        f"size(filter({ws}, w -> w RLIKE {sql_literal(_LETTER_RE)})) "
+        "AS n_alpha_words",
     ]
+
+
+def _gopher_line_stats(df: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` columns plus the word statistics and the non-blank /
+    bullet line counts of ``text``, for the Gopher document rules. The
+    word and line arrays are staged once, in their own projection."""
+    return df.selectExpr(
+        *keep,
+        f"{split_words_sql('text')} AS ws",
+        f"{nonblank_lines_sql('text')} AS lines",
+    ).selectExpr(
+        *keep,
+        *word_stats_exprs("ws"),
+        "size(lines) AS n_lines",
+        f"size(filter(lines, ln -> trim(ln) RLIKE {sql_literal(_BULLET_RE)})) "
+        "AS n_bullet_lines",
+    )
+
+
+# Gopher document rules, cross-multiplied integer form (SQL text).
+GOPHER_KEEP_SQL = (
+    "n_words >= 5 AND n_words <= 100000"
+    " AND sum_chars >= 3 * n_words AND sum_chars <= 10 * n_words"
+    " AND 5 * n_alpha_words >= 4 * n_words"
+    " AND 10 * n_bullet_lines < 9 * n_lines"
+)
 
 
 def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -261,34 +301,15 @@ def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer comparison (e.g. ``3*n_words <= sum_chars <= 10*n_words``), so
     the keep decision is exact and engine-independent — no float ratios
     near thresholds. Pure JVM map over the scan."""
-    lines = F.filter(F.split("text", "\n"), lambda x: F.trim(x) != "")
-    d = _docs(spark, sf_dir).select(
-        "doc_id",
-        *word_stats_exprs("text"),
-        F.size(lines).alias("n_lines"),
-        F.size(
-            F.filter(
-                lines,
-                lambda ln: F.trim(ln).rlike(r"^[-*•]"),
-            )
-        ).alias("n_bullet_lines"),
-    )
-    keep = (
-        (F.col("n_words") >= 5)
-        & (F.col("n_words") <= 100000)
-        & (F.col("sum_chars") >= 3 * F.col("n_words"))
-        & (F.col("sum_chars") <= 10 * F.col("n_words"))
-        & (5 * F.col("n_alpha_words") >= 4 * F.col("n_words"))
-        & (10 * F.col("n_bullet_lines") < 9 * F.col("n_lines"))
-    )
-    return d.select(
+    d = _gopher_line_stats(_docs(spark, sf_dir), "doc_id")
+    return d.selectExpr(
         "doc_id",
         "n_words",
         "sum_chars",
         "n_alpha_words",
         "n_lines",
         "n_bullet_lines",
-        keep.alias("keep"),
+        f"{GOPHER_KEEP_SQL} AS keep",
     )
 
 
@@ -385,133 +406,96 @@ def repetition_filters(
 
     ``words`` optionally supplies the tokenized array<string> expression
     (e.g. a split the caller already materialized — plans.training_data
-    shares one split across gates); default splits ``text`` on whitespace."""
-    ws0 = (
-        words
-        if words is not None
-        else F.filter(F.split("text", r"\s+"), lambda x: x != "")
-    )
+    shares one split across gates); default splits ``text`` on whitespace.
+
+    Driver side, each staged projection is SQL text in one ``selectExpr``,
+    which the JVM parses in one call. Built from ``F.*`` Columns, the same
+    trees cost several py4j round trips per node (pyspark 4 records the
+    call site of every function call): about 3,000 round trips and half a
+    second per call for this operator's 19 lambdas, before its job
+    started. The SQL builds the same expressions node for node."""
+    ws0 = words if words is not None else F.expr(split_words_sql("text"))
     # separate projection so `ws` materializes once per row: CollapseProject
     # keeps a non-cheap alias referenced many times in its own project
     base = docs.select("doc_id", ws0.alias("ws"))
 
-    def gram_array(n: int) -> F.Column:
+    def gram_array(n: int) -> str:
         # Shifted-zip gram build (the _positional_shingles_col pattern
         # generalized): n slices of the words array happen ONCE per doc,
-        # not once per gram — a per-element F.slice inside the transform
+        # not once per gram — a per-element slice inside the transform
         # lambda would be the interpreted-HOF re-slice tax.
         # All zip inputs are expressions so arrays_zip names them "0".."k".
-        ws = F.col("ws")
-        m = F.size(ws)
-        shifted = [
-            F.slice(ws, k + 1, F.greatest(m - k, F.lit(0)))
+        shifted = ", ".join(
+            f"slice(ws, {k + 1}, greatest(size(ws) - {k}, 0))"
             for k in range(n)
-        ]
-        grams = F.transform(
-            F.arrays_zip(*shifted),
-            lambda s: F.concat_ws(" ", *[s[str(k)] for k in range(n)]),
         )
+        fields = ", ".join(f"s['{k}']" for k in range(n))
+        grams = f"transform(arrays_zip({shifted}), s -> concat_ws(' ', {fields}))"
         # cut the trailing arrays_zip pad entries (partial grams)
-        return F.slice(grams, 1, F.greatest(m - (n - 1), F.lit(0)))
+        return f"slice({grams}, 1, greatest(size(ws) - {n - 1}, 0))"
 
     ns = (*REP_TOP_PCT, 5)
     # proj 2: sorted gram arrays materialized as columns — every later
     # element_at/capture is a cheap attribute reference, never a re-sort
-    sorted_grams = base.select(
+    sorted_grams = base.selectExpr(
         "doc_id",
-        F.size("ws").alias("n_words"),
-        F.size(F.array_distinct("ws")).alias("n_distinct_words"),
-        F.aggregate(
-            F.transform("ws", lambda w: F.length(w)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("sum_chars"),
-        *[F.sort_array(gram_array(n)).alias(f"g{n}") for n in ns],
+        "size(ws) AS n_words",
+        "size(array_distinct(ws)) AS n_distinct_words",
+        f"{_sum_chars_sql('ws')} AS sum_chars",
+        *[f"sort_array({gram_array(n)}) AS g{n}" for n in ns],
     )
 
-    def starts(n: int) -> F.Column:
-        # 0-based indexes where a new run of equal grams begins. The
-        # greatest(i, 1) keeps element_at in range at i=0 (the i==0 arm
-        # wins there regardless of what the compare evaluates to).
-        g = F.col(f"g{n}")
-        return F.filter(
-            F.transform(
-                g,
-                lambda x, i: F.when(
-                    (i == 0)
-                    | (x != F.element_at(g, F.greatest(i, F.lit(1)))),
-                    i,
-                ).otherwise(F.lit(-1)),
-            ),
-            lambda v: v >= 0,
-        )
-
-    # proj 3: run-start index arrays (per-element work: one element_at +
-    # one string compare)
-    with_starts = sorted_grams.select(
+    # proj 3: run-start index arrays — the 0-based indexes where a new run
+    # of equal grams begins (per-element work: one element_at + one string
+    # compare). The greatest(i, 1) keeps element_at in range at i=0 (the
+    # i = 0 arm wins there regardless of what the compare evaluates to).
+    with_starts = sorted_grams.selectExpr(
         "doc_id",
         "n_words",
         "n_distinct_words",
         "sum_chars",
-        *[F.col(f"g{n}") for n in ns],
-        *[starts(n).alias(f"s{n}") for n in ns],
+        *[f"g{n}" for n in ns],
+        *[
+            f"filter(transform(g{n}, (x, i) -> CASE WHEN i = 0 OR "
+            f"x != element_at(g{n}, greatest(i, 1)) THEN i ELSE -1 END), "
+            f"v -> v >= 0) AS s{n}"
+            for n in ns
+        ],
     )
 
-    def run_cover(n: int):
-        """Per-run cover lambda: (next_start - start) * (gram_chars - the
-        n-1 separators). Runs = zip of starts with shifted starts (last
-        run ends at size(g))."""
-        g, s = F.col(f"g{n}"), F.col(f"s{n}")
-        nexts = F.concat(
-            F.slice(s, 2, F.greatest(F.size(s) - 1, F.lit(0))),
-            F.array(F.size(g)),
-        )
-        return g, s, nexts
+    def run_chars(n: int) -> str:
+        """Word characters a run of equal n-grams covers, over the lambda
+        pair (a, b) = (run start, next run start): (b - a) occurrences times
+        (gram chars - the n-1 separators)."""
+        return f"CAST(b - a AS BIGINT) * (length(element_at(g{n}, a + 1)) - {n - 1})"
 
-    def top_cover(n: int) -> F.Column:
-        g, s, nexts = run_cover(n)
-        covers = F.zip_with(
-            s,
-            nexts,
-            lambda a, b: (b - a).cast("long")
-            * (F.length(F.element_at(g, a + 1)) - F.lit(n - 1)),
-        )
-        return F.coalesce(F.array_max(covers), F.lit(0).cast("long"))
+    def per_run(n: int, body: str) -> str:
+        """``body`` per run: runs are the zip of starts with shifted starts
+        (the last run ends at size(g))."""
+        g, s = f"g{n}", f"s{n}"
+        nexts = f"concat(slice({s}, 2, greatest(size({s}) - 1, 0)), array(size({g})))"
+        return f"zip_with({s}, {nexts}, (a, b) -> {body})"
 
-    def dup_cover(n: int) -> F.Column:
-        g, s, nexts = run_cover(n)
-        per_run = F.zip_with(
-            s,
-            nexts,
-            lambda a, b: F.when(
-                b - a >= 2,
-                (b - a).cast("long")
-                * (F.length(F.element_at(g, a + 1)) - F.lit(n - 1)),
-            ).otherwise(F.lit(0).cast("long")),
-        )
-        return F.coalesce(
-            F.aggregate(
-                per_run, F.lit(0).cast("long"), lambda acc, v: acc + v
-            ),
-            F.lit(0).cast("long"),
-        )
-
+    zero = "CAST(0 AS BIGINT)"
     # proj 4: per-run rollups (top for 2/3/4, duplicated-coverage for 5)
-    d = with_starts.select(
+    dup_runs = per_run(5, f"CASE WHEN b - a >= 2 THEN {run_chars(5)} ELSE {zero} END")
+    d = with_starts.selectExpr(
         "doc_id",
         "n_words",
         "n_distinct_words",
         "sum_chars",
-        *[top_cover(n).alias(f"top{n}_cover") for n in REP_TOP_PCT],
-        dup_cover(5).alias("dup5_cover"),
+        *[
+            f"coalesce(array_max({per_run(n, run_chars(n))}), {zero}) AS top{n}_cover"
+            for n in REP_TOP_PCT
+        ],
+        f"coalesce(aggregate({dup_runs}, {zero}, (acc, v) -> acc + v), {zero}) "
+        "AS dup5_cover",
     )
-    keep = F.lit(True)
-    for n, pct in REP_TOP_PCT.items():
-        keep = keep & (
-            100 * F.col(f"top{n}_cover") <= pct * F.col("sum_chars")
-        )
-    keep = keep & (100 * F.col("dup5_cover") <= REP_DUP5_PCT * F.col("sum_chars"))
-    return d.withColumn("keep", keep)
+    keep = " AND ".join(
+        [f"top{n}_cover * 100 <= sum_chars * {pct}" for n, pct in REP_TOP_PCT.items()]
+        + [f"dup5_cover * 100 <= sum_chars * {REP_DUP5_PCT}"]
+    )
+    return d.withColumn("keep", F.expr(keep))
 
 
 def q_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1463,46 +1447,16 @@ def q_gate_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns are monotone non-increasing left to right.
 
     Scale shape: all gates evaluate in ONE pass over the scan (the gate
-    predicates are pure expressions — the same word_stats_exprs the
-    Gopher gate and curate() share), and the funnel is one map-side-
+    predicates are pure expressions — the same word statistics and rules
+    as q_gopher_quality, whose statistics curate() shares), and the funnel is one map-side-
     combined groupBy on source with conditional sums. Adding a gate adds
     a column, never a scan. Output: source, n_docs, n_after_len,
     n_after_gopher, n_after_lang, keep_permille."""
-    # Materialize the split-lines array ONCE (a repeated `lines` expression
-    # in one select would re-run the split per use — the HOF re-eval tax).
-    d = (
-        _docs(spark, sf_dir)
-        .select(
-            "source",
-            "lang",
-            "n_chars",
-            "text",
-            F.filter(
-                F.split("text", "\n"), lambda x: F.trim(x) != ""
-            ).alias("lines"),
-        )
-        .select(
-            "source",
-            "lang",
-            "n_chars",
-            *word_stats_exprs("text"),
-            F.size("lines").alias("n_lines"),
-            F.size(
-                F.filter("lines", lambda ln: F.trim(ln).rlike(r"^[-*•]"))
-            ).alias("n_bullet_lines"),
-        )
-    )
+    d = _gopher_line_stats(_docs(spark, sf_dir), "source", "lang", "n_chars")
     len_ok = (F.col("n_chars") >= ATTRITION_MIN_CHARS) & (
         F.col("n_chars") <= ATTRITION_MAX_CHARS
     )
-    gopher_ok = (
-        (F.col("n_words") >= 5)
-        & (F.col("n_words") <= 100000)
-        & (F.col("sum_chars") >= 3 * F.col("n_words"))
-        & (F.col("sum_chars") <= 10 * F.col("n_words"))
-        & (5 * F.col("n_alpha_words") >= 4 * F.col("n_words"))
-        & (10 * F.col("n_bullet_lines") < 9 * F.col("n_lines"))
-    )
+    gopher_ok = F.expr(GOPHER_KEEP_SQL)
     lang_ok = F.col("lang").isin(*ATTRITION_LANGS)
     g1 = len_ok.cast("long")
     g2 = (len_ok & gopher_ok).cast("long")

@@ -37,7 +37,7 @@ from ..config import (
     VALIDATION_COST_PER_1K_TOKENS,
     VALIDATION_TOKENS_PER_PAGE,
 )
-from ..functions.expressions import combine_sections_expr
+from ..functions.expressions import combine_sections_expr, sql_literal
 from ..functions.udfs import EXTRACTION_TYPE, extract_turn_udf
 from ..kernels.segment import PDF_PAYLOAD_PREFIX
 
@@ -45,39 +45,33 @@ from ..kernels.segment import PDF_PAYLOAD_PREFIX
 def _kind_expr() -> F.Column:
     """JVM replica of kernels.segment.detect_payload_kind — same precedence:
     layout prefix anywhere, else pdf prefix anywhere, else html open marker
-    + closing tag anywhere (case-insensitive), else plain."""
+    + closing tag anywhere (case-insensitive), else plain. SQL text: one
+    py4j call, where the Column tree costs several per node."""
     from ..kernels.layout import LAYOUT_PAYLOAD_PREFIX
     from ..kernels.segment import HTML_CLOSE, HTML_MARKERS
 
-    low = F.lower("text")
-    has_open = F.contains(low, F.lit(HTML_MARKERS[0]))
-    for m in HTML_MARKERS[1:]:
-        has_open = has_open | F.contains(low, F.lit(m))
-    has_html = has_open & F.contains(low, F.lit(HTML_CLOSE))
-    return (
-        F.when(F.col("text").isNull() | (F.col("text") == ""), F.lit("plain"))
-        .when(F.contains("text", F.lit(LAYOUT_PAYLOAD_PREFIX)), F.lit("layout"))
-        .when(F.contains("text", F.lit(PDF_PAYLOAD_PREFIX)), F.lit("pdf"))
-        .when(has_html, F.lit("html"))
-        .otherwise(F.lit("plain"))
+    has_open = " OR ".join(
+        f"contains(lower(text), {sql_literal(m)})" for m in HTML_MARKERS
+    )
+    return F.expr(
+        "CASE WHEN text IS NULL OR text = '' THEN 'plain'"
+        f" WHEN contains(text, {sql_literal(LAYOUT_PAYLOAD_PREFIX)}) THEN 'layout'"
+        f" WHEN contains(text, {sql_literal(PDF_PAYLOAD_PREFIX)}) THEN 'pdf'"
+        f" WHEN ({has_open}) AND contains(lower(text), {sql_literal(HTML_CLOSE)})"
+        " THEN 'html' ELSE 'plain' END"
     )
 
 
-def _plain_result() -> F.Column:
+def _plain_result_sql() -> str:
     """A plain turn's result, built JVM-side (the twin of the kernel's plain
     branch): the text is its own single page, spanned whole; no problems."""
-    has_text = F.col("text").isNotNull() & (F.col("text") != "")
-    return F.struct(
-        F.lit("plain"),
-        has_text.cast("int"),
-        F.coalesce(F.col("text"), F.lit("")),
-        F.when(has_text, F.array(F.struct(F.lit(0), F.length("text"))))
-        .otherwise(F.array()),
-        F.array(),
-        F.array(),
-        F.array(),
-        F.lit(True),
-    ).cast(EXTRACTION_TYPE)
+    has_text = "(text IS NOT NULL AND text != '')"
+    return (
+        f"CAST(struct('plain', CAST({has_text} AS INT), coalesce(text, ''),"
+        f" CASE WHEN {has_text} THEN array(struct(0, length(text)))"
+        " ELSE array() END, array(), array(), array(), true)"
+        f" AS {EXTRACTION_TYPE.simpleString()})"
+    )
 
 
 def extract_transcripts(transcripts: DataFrame) -> DataFrame:
@@ -87,18 +81,21 @@ def extract_transcripts(transcripts: DataFrame) -> DataFrame:
 
     kind, n_pages, extracted_text, spans, problems, sections,
     repaired_pages, valid, n_chars
-    """
+
+    The router, the plain result and the field select are SQL text, one
+    py4j call each; only the UDF call is a Column, staged as ``_u`` in its
+    own projection so that the field select can name it."""
     df = transcripts.withColumn("kind", _kind_expr())
     # Null input for plain rows: the Arrow transfer carries only payload rows'
     # text, and the UDF's null result falls through to the plain struct.
-    payload_text = F.when(F.col("kind") != "plain", F.col("text"))
-    x = F.coalesce(extract_turn_udf(payload_text), _plain_result())
+    payload_text = F.expr("CASE WHEN kind != 'plain' THEN text END")
+    x = f"coalesce(_u, {_plain_result_sql()})"
     fields = [f.name for f in EXTRACTION_TYPE.fields if f.name != "kind"]
-    result = df.select(
-        *[c for c in df.columns if c != "text"],
-        *[x[f].alias(f) for f in fields],
+    result = df.withColumn("_u", extract_turn_udf(payload_text)).selectExpr(
+        *[f"`{c}`" for c in df.columns if c != "text"],
+        *[f"({x}).{f} AS {f}" for f in fields],
     )
-    return result.withColumn("n_chars", F.length("extracted_text"))
+    return result.withColumn("n_chars", F.expr("length(extracted_text)"))
 
 
 def assemble_conversations(extracted: DataFrame) -> DataFrame:
@@ -109,22 +106,22 @@ def assemble_conversations(extracted: DataFrame) -> DataFrame:
     tests/test_pipeline_golden.py). Each text byte crosses the wire once and
     AQE splits skewed groups' sort spills; a 10^5-turn mega-conversation is
     pinned by tests/test_skew.py (SCALE.md has the timings up to 5*10^6)."""
-    base = extracted.select(
+    base = extracted.selectExpr(
         "conv_id", "turn_idx", "extracted_text", "n_pages",
-        (F.size("problems") > 0).cast("int").alias("has_problem"),
-        F.size("repaired_pages").alias("n_repaired"),
-    )
-    ordered = F.sort_array(
-        F.collect_list(F.struct("turn_idx", "extracted_text"))
+        "CAST(size(problems) > 0 AS INT) AS has_problem",
+        "size(repaired_pages) AS n_repaired",
     )
     agg = base.groupBy("conv_id").agg(
-        F.count("*").cast("int").alias("n_turns"),
-        ordered.alias("ordered"),
-        F.sum("n_pages").alias("total_pages"),
-        F.sum("has_problem").cast("int").alias("problem_turns"),
-        F.sum("n_repaired").cast("int").alias("repaired_pages"),
+        F.expr("CAST(count(*) AS INT) AS n_turns"),
+        F.expr(
+            "sort_array(collect_list(struct(turn_idx, extracted_text))) "
+            "AS ordered"
+        ),
+        F.expr("sum(n_pages) AS total_pages"),
+        F.expr("CAST(sum(has_problem) AS INT) AS problem_turns"),
+        F.expr("CAST(sum(n_repaired) AS INT) AS repaired_pages"),
     )
-    texts = F.transform(F.col("ordered"), lambda s: s["extracted_text"])
+    texts = F.expr("transform(ordered, s -> s.extracted_text)")
     return agg.select(
         "conv_id",
         "n_turns",

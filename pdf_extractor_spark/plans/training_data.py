@@ -23,10 +23,14 @@ twin; this module pins that they compose (tests/test_training_data.py +
 the /verify drive)."""
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.expressions import normalize_for_comparison_expr
+from ..functions.expressions import (
+    nonblank_lines_sql,
+    normalize_for_comparison_sql,
+    split_words_sql,
+)
 from ..operators.dedup import (
     _positional_shingles_col,
     decontaminate_spans,
@@ -44,6 +48,11 @@ from .pipeline import assemble_conversations, extract_transcripts
 # conversations legitimately contain table/list markup).
 MIN_WORDS = 20
 MAX_WORDS = 1_000_000
+QUALITY_KEEP_SQL = (
+    f"n_words >= {MIN_WORDS} AND n_words <= {MAX_WORDS}"
+    " AND sum_chars >= 3 * n_words AND sum_chars <= 12 * n_words"
+    " AND 5 * n_alpha_words >= 4 * n_words"
+)
 
 
 def curate(
@@ -92,14 +101,27 @@ def iter_curate_stages(
     text is not carried twice); the boilerplate stage stores the cleaned
     text plus its whitespace word split ``ws``, which feeds both the
     recomputed n_words and the repetition gate's gram build (no re-split
-    per gate). The final stage is yielded lazy for the consumer to sink.
+    per gate). The quality stage splits the markdown into words once too:
+    it checkpoints the SCORED frame and yields the gate as a filter over
+    that checkpoint, since a filter ahead of the checkpoint had each word
+    statistic's split substituted into it (12 splits per conversation in
+    the optimized plan, 2 now). The final stage is yielded lazy for the
+    consumer to sink.
 
     Every stage is a per-conversation map or a shuffle whose output AQE
     coalesces; the session's 64 KB coalescing floor (session.get_spark)
     keeps a small corpus at about one partition per core through every
     stage, so the CPU-dense row work (HOF gram sorts, word stats, PII
     regexes) runs on all cores. At Spark's 1 MB floor, a corpus whose
-    assembly shuffle was a few MB ran every stage as one task."""
+    assembly shuffle was a few MB ran every stage as one task.
+
+    Every projection and predicate on this path is SQL text (one
+    ``selectExpr`` / ``F.expr`` parse per projection); only the extraction
+    UDF call is a Column. pyspark 4 records the call site of every ``F.*``
+    call at several py4j round trips each, so the same stages built from
+    Column trees took about 6,900 round trips per run of this generator,
+    near a second of driver time on a 3 s corpus, before any row moved;
+    as SQL text they take about 1,300 (perfbench curate, seed 1)."""
     assembled = assemble_conversations(
         extract_transcripts(transcripts)
     ).localCheckpoint(eager=True)
@@ -109,24 +131,26 @@ def iter_curate_stages(
     # non-blank line split (the C4 passage unit) is materialized here so
     # the boilerplate stage never re-splits — and since clean text is
     # exactly (kept lines joined "\n"), the raw markdown is NOT carried
-    # forward at all.
-    scored = assembled.select(
-        "conv_id",
-        "n_turns",
-        "total_pages",
-        F.filter(
-            F.split("conversation_markdown", "\n"),
-            lambda x: F.trim(x) != "",
-        ).alias("lines"),
-        *word_stats_exprs("conversation_markdown"),
+    # forward at all. The word split ``ws`` is staged in its own
+    # projection, so the three statistics share one split per row; the
+    # scored frame is materialized BEFORE the gate filters it, because
+    # pushdown would substitute the statistics' alias trees (each with its
+    # own split) into the predicate.
+    scored = (
+        assembled.selectExpr(
+            "conv_id",
+            "n_turns",
+            "total_pages",
+            f"{nonblank_lines_sql('conversation_markdown')} AS lines",
+            f"{split_words_sql('conversation_markdown')} AS ws",
+        )
+        .selectExpr(
+            "conv_id", "n_turns", "total_pages", "lines",
+            *word_stats_exprs("ws"),
+        )
+        .localCheckpoint(eager=True)
     )
-    kept = scored.where(
-        (F.col("n_words") >= MIN_WORDS)
-        & (F.col("n_words") <= MAX_WORDS)
-        & (F.col("sum_chars") >= 3 * F.col("n_words"))
-        & (F.col("sum_chars") <= 12 * F.col("n_words"))
-        & (5 * F.col("n_alpha_words") >= 4 * F.col("n_words"))
-    ).localCheckpoint(eager=True)
+    kept = scored.where(QUALITY_KEEP_SQL)
     yield ("quality_gate", kept)
 
     # C4 line rule verbatim on the assembled markdown (real newlines here):
@@ -136,21 +160,17 @@ def iter_curate_stages(
     # output's stats describe what ships; its word split ``ws`` is stored
     # for the repetition gate.
     boiler = paragraph_dedup(
-        kept.select(F.col("conv_id").alias("doc_id"), "lines"),
+        kept.selectExpr("conv_id AS doc_id", "lines"),
         passages=F.col("lines"),
         joiner="\n",
-    ).select(
-        F.col("doc_id").alias("conv_id"),
-        F.col("clean_text").alias("text"),
-        F.col("n_removed").alias("n_boiler_lines"),
+    ).selectExpr(
+        "doc_id AS conv_id", "clean_text AS text", "n_removed AS n_boiler_lines"
     )
     cleaned = (
         kept.drop("lines", "n_words")
         .join(boiler, "conv_id")
-        .withColumn(
-            "ws", F.filter(F.split("text", r"\s+"), lambda x: x != "")
-        )
-        .withColumn("n_words", F.size("ws"))
+        .withColumn("ws", F.expr(split_words_sql("text")))
+        .withColumn("n_words", F.expr("size(ws)"))
         .localCheckpoint(eager=True)
     )
     yield ("boilerplate_c4", cleaned)
@@ -165,12 +185,10 @@ def iter_curate_stages(
     # a >40x blowup (8 s -> stuck) on the bench corpus. The frame is 8
     # small columns per conversation, so the checkpoint is cheap.
     rep_sig = repetition_filters(
-        cleaned.select(F.col("conv_id").alias("doc_id"), "ws"),
+        cleaned.selectExpr("conv_id AS doc_id", "ws"),
         words=F.col("ws"),
     ).localCheckpoint(eager=True)
-    rep_keep = rep_sig.where("keep").select(
-        F.col("doc_id").alias("conv_id")
-    )
+    rep_keep = rep_sig.where("keep").selectExpr("doc_id AS conv_id")
     gated = (
         cleaned.drop("ws").join(rep_keep, "conv_id", "left_semi")
         .localCheckpoint(eager=True)
@@ -190,9 +208,8 @@ def iter_curate_stages(
                 F.explode(_positional_shingles_col()).alias("sh")
             ).distinct()
         )
-        base = gated.select(
-            F.col("conv_id").alias("doc_id"),
-            F.filter(F.split("text", r"\s+"), lambda x: x != "").alias("ws"),
+        base = gated.selectExpr(
+            "conv_id AS doc_id", f"{split_words_sql('text')} AS ws"
         )
         scrubbed = decontaminate_spans(corpus_sh, bench_sh, base).select(
             F.col("doc_id").alias("conv_id"),
@@ -214,14 +231,17 @@ def iter_curate_stages(
     redacted = gated.withColumn("text", pii_redact_expr(F.col("text")))
 
     # exact dedup on normalized content: keep the lowest conv_id per key
-    key = F.md5(normalize_for_comparison_expr(F.col("text")))
-    w_rank = F.row_number().over(
-        Window.partitionBy("content_key").orderBy("conv_id")
-    )
     deduped = (
-        redacted.withColumn("content_key", key)
-        .withColumn("rk", w_rank)
-        .where(F.col("rk") == 1)
+        redacted.withColumn(
+            "content_key", F.expr(f"md5({normalize_for_comparison_sql('text')})")
+        )
+        .withColumn(
+            "rk",
+            F.expr(
+                "row_number() OVER (PARTITION BY content_key ORDER BY conv_id)"
+            ),
+        )
+        .where("rk = 1")
         .drop("rk", "content_key", "sum_chars", "n_alpha_words")
     )
 

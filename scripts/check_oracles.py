@@ -4,13 +4,14 @@ count, sorted column names, and order-insensitive values.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 
-A FULL sweep (no query names given) writes a machine-readable,
-count-asserted artifact to BENCH/<tag>_oracle_sweep.json
-(tag = $SPARK_GRAFT_BENCH_TAG, default r05): {n_queries, n_ok,
-n_rows_only, ok, rows_only, failures}. The sweep exits non-zero unless
-every registered query is accounted for as ok or rows-only — an artifact
-that silently under-covers (e.g. a hand-spliced log) can never claim
-ALL MATCH again.
+A FULL sweep (no query names given) prints a count-asserted summary and
+exits non-zero unless every registered query is accounted for as ok or
+rows-only — a sweep that silently under-covers (e.g. a hand-spliced log)
+can never claim ALL MATCH again. With $SPARK_GRAFT_BENCH_TAG set, it also
+writes that summary as a machine-readable artifact to
+BENCH/<tag>_oracle_sweep.json: {n_queries, n_ok, n_rows_only, ok,
+rows_only, failures}. Without the tag nothing is written, so a plain
+check run never rewrites a checked-in artifact.
 """
 from __future__ import annotations
 
@@ -121,13 +122,9 @@ def main():
         print(f"ok    {name}: {len(spark_rows)} rows match")
     print()
     if not only:
-        # full sweep: emit the count-asserted artifact. The assertion is
+        # full sweep: the count-asserted summary. The assertion is
         # structural — every registered query must be accounted for — so a
         # truncated or spliced log can never masquerade as full coverage.
-        tag = os.environ.get("SPARK_GRAFT_BENCH_TAG", "r05")
-        bench_dir = os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "BENCH")
-        os.makedirs(bench_dir, exist_ok=True)
         art = {
             "sf_dir": sf_dir,
             "n_queries": len(qs),
@@ -138,11 +135,19 @@ def main():
             "rows_only": sorted(rows_only),
             "failures": sorted(failures),
         }
-        path = os.path.join(bench_dir, f"{tag}_oracle_sweep.json")
-        with open(path, "w") as fh:
-            json.dump(art, fh, indent=1, sort_keys=True)
-        print(f"wrote {path}: {art['n_ok']} ok + {art['n_rows_only']} "
-              f"rows-only + {art['n_failures']} fail of {art['n_queries']}")
+        summary = (f"{art['n_ok']} ok + {art['n_rows_only']} rows-only + "
+                   f"{art['n_failures']} fail of {art['n_queries']}")
+        tag = os.environ.get("SPARK_GRAFT_BENCH_TAG")
+        if tag:
+            bench_dir = os.path.join(os.path.dirname(os.path.dirname(
+                os.path.abspath(__file__))), "BENCH")
+            os.makedirs(bench_dir, exist_ok=True)
+            path = os.path.join(bench_dir, f"{tag}_oracle_sweep.json")
+            with open(path, "w") as fh:
+                json.dump(art, fh, indent=1, sort_keys=True)
+            print(f"wrote {path}: {summary}")
+        else:
+            print(f"sweep: {summary}")
         # real failures first: a value mismatch must be diagnosed as one,
         # not as the structural under-coverage message below (which is for
         # a sweep that silently skipped queries, e.g. a spliced log).
