@@ -6,8 +6,10 @@ correctness gate, but production amortizes ONE fit over many serves. This
 module adds that split on the fsio commit protocol (plans/fsio.py):
 
 * ``ann_index_build(ev, store_root)``: fit the coarse quantizer
-  (N_CENTROIDS-cell Lloyd) + the M PQ codebooks (fused Lloyd), encode the
-  corpus, and publish ONE versioned snapshot ``idx_v<n>/`` with
+  (N_CENTROIDS-cell Lloyd) + the M PQ codebooks — two calls of the one
+  Lloyd loop, ``similarity_search._lloyd`` — encode the corpus with
+  ``pq._ivfpq_codes`` (the coarse-cell + codes builder ann_ivfpq_recall
+  uses), and publish ONE versioned snapshot ``idx_v<n>/`` with
   ``fsio.publish`` (crash-injected by scripts/fault_drive.py section E).
   The snapshot holds three row kinds in one schema:
 
@@ -19,7 +21,7 @@ module adds that split on the fsio commit protocol (plans/fsio.py):
 
 * ``ann_index_serve(ev, snap)``: the query path against a loaded
   snapshot — probes from the STORED coarse centroids, ADC over the
-  STORED codes via broadcast LUT equi-joins, a top_k shortlist,
+  STORED codes via the broadcast per-query LUT rows, a top_k shortlist,
   exact re-rank reading raw vectors by id. No fit anywhere; collecting
   the snapshot's model rows is bounded model-state driver traffic
   (the broadcast-Lloyd layout's contract).
@@ -50,70 +52,57 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..plans import fsio
 from .pq import (
+    _EVALL,
+    PQ_ITERS,
     PQ_KSUB,
     PQ_M,
-    _cb_flat,
-    _encoded,
+    _coarse_chain,
     _ivf_candidates,
+    _ivfpq_codes,
     _ivfpq_recall_oracle,
     _recall_from_candidates,
-    _subspace_fits,
+    _subspace_chain,
 )
 from .similarity_search import (
+    KMEANS_ITERS,
+    N_CENTROIDS,
+    _codebook_rows,
     _emb,
-    _fit_centroids,
-    _nearest_centroid,
+    _lloyd,
     _quantized_vecs,
 )
 
 ANN_IDX_PREFIX = "idx_v"
 
+_NO_CODE = [
+    "CAST(NULL AS BIGINT) AS vec_id",
+    "CAST(NULL AS INT) AS cell",
+    "CAST(NULL AS ARRAY<INT>) AS codes",
+]
 
-def ann_index_frames(ev: DataFrame):
-    """Fit + encode: returns (coarse centroid lists, pq codebook lists,
-    unified snapshot frame) — the build's pure computation, no I/O."""
+
+def ann_index_frames(ev: DataFrame) -> DataFrame:
+    """Fit + encode: the unified snapshot frame — the build's pure
+    computation, no I/O."""
     spark = ev.sparkSession
-    coarse = _fit_centroids(ev)
-    fits = _subspace_fits(ev)
-    codes = (
-        _encoded(ev, fits)
-        .withColumn("cell", _nearest_centroid(coarse)["cid"])
-        .select(
-            "vec_id",
-            "cell",
-            F.array(*[F.col(f"a{m}.cid") for m in range(PQ_M)]).alias(
-                "codes"
-            ),
-        )
+    coarse = _lloyd(ev, 1, N_CENTROIDS, KMEANS_ITERS)[0]
+    fits = _lloyd(ev, PQ_M, PQ_KSUB, PQ_ITERS)
+    coarse_df = _codebook_rows(spark, [coarse]).selectExpr(
+        "'coarse' AS part", "-1 AS m", "cid", "cvec", *_NO_CODE
     )
-    null_model = [
-        F.lit(None).cast("long").alias("vec_id"),
-        F.lit(None).cast("int").alias("cell"),
-        F.lit(None).cast("array<int>").alias("codes"),
-    ]
-    coarse_df = spark.createDataFrame(
-        [(i, [int(v) for v in c]) for i, c in enumerate(coarse)],
-        "cid int, cvec array<bigint>",
-    ).select(
-        F.lit("coarse").alias("part"),
-        F.lit(-1).alias("m"),
-        "cid",
-        "cvec",
-        *null_model,
+    cb_df = _codebook_rows(spark, fits).selectExpr(
+        "'codebook' AS part", "m", "cid", "cvec", *_NO_CODE
     )
-    cb_df = _cb_flat(spark, fits).select(
-        F.lit("codebook").alias("part"), "m", "cid", "cvec", *null_model
-    )
-    code_df = codes.select(
-        F.lit("code").alias("part"),
-        F.lit(None).cast("int").alias("m"),
-        F.lit(None).cast("int").alias("cid"),
-        F.lit(None).cast("array<bigint>").alias("cvec"),
+    code_df = _ivfpq_codes(ev, coarse, fits).selectExpr(
+        "'code' AS part",
+        "CAST(NULL AS INT) AS m",
+        "CAST(NULL AS INT) AS cid",
+        "CAST(NULL AS ARRAY<BIGINT>) AS cvec",
         "vec_id",
         "cell",
-        "codes",
+        f"array({', '.join(f'code{m}' for m in range(PQ_M))}) AS codes",
     )
-    return coarse, fits, coarse_df.unionByName(cb_df).unionByName(code_df)
+    return coarse_df.unionByName(cb_df).unionByName(code_df)
 
 
 def ann_index_build(ev: DataFrame, store_root: str) -> int:
@@ -121,7 +110,7 @@ def ann_index_build(ev: DataFrame, store_root: str) -> int:
     committed version number."""
     spark = ev.sparkSession
     _, last = fsio.read_latest(spark, store_root, ANN_IDX_PREFIX)
-    _, _, snap = ann_index_frames(ev)
+    snap = ann_index_frames(ev)
     fsio.publish(snap, store_root, ANN_IDX_PREFIX, last + 1)
     return last + 1
 
@@ -140,7 +129,7 @@ def ann_index_serve(ev: DataFrame, snap: DataFrame) -> DataFrame:
     candidates (broadcast equi-join on the cell id), ADC + top_k
     shortlist + exact re-rank are the shared bounded machinery.
     Output: q_id, k, n_hits (the ann_ivfpq_recall contract)."""
-    model = snap.where(F.col("part") != "code").select(
+    model = snap.where("part != 'code'").select(
         "part", "m", "cid", "cvec"
     ).collect()
     coarse_rows = sorted(
@@ -153,13 +142,8 @@ def ann_index_serve(ev: DataFrame, snap: DataFrame) -> DataFrame:
         if r["part"] == "codebook"
     }
     fits = [[cb[(m, i)] for i in range(PQ_KSUB)] for m in range(PQ_M)]
-    codes = snap.where(F.col("part") == "code").select(
-        "vec_id",
-        "cell",
-        *[
-            F.element_at("codes", m + 1).alias(f"code{m}")
-            for m in range(PQ_M)
-        ],
+    codes = snap.where("part = 'code'").selectExpr(
+        "vec_id", "cell", *[f"codes[{m}] AS code{m}" for m in range(PQ_M)]
     )
     cand = _ivf_candidates(ev, coarse, codes)
     return _recall_from_candidates(ev, fits, cand)
@@ -237,14 +221,12 @@ def q_ann_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _build_oracle() -> str:
     """Replays the coarse + subspace fits (the pq.py CTE chains), then the
     inventory: posting counts per final cell, code counts per (m, cid)."""
-    from .pq import _EVALL, _coarse_chain, _subspace_chain
-
     chains = "".join(_subspace_chain(m) for m in range(PQ_M))
     enc_union = " UNION ALL ".join(
         f"SELECT {m} AS m, cid FROM s{m}enc" for m in range(PQ_M)
     )
     cb_union = " UNION ALL ".join(
-        f"SELECT {m} AS m, cid, d, c FROM s{m}c{_pq_iters()}"
+        f"SELECT {m} AS m, cid, d, c FROM s{m}c{PQ_ITERS}"
         for m in range(PQ_M)
     )
     return (
@@ -256,7 +238,7 @@ def _build_oracle() -> str:
             SELECT cid, count(*)::BIGINT AS n_vecs FROM cellasg GROUP BY cid
         ), coarsecv AS (
             SELECT cid, list(c ORDER BY d) AS cvec
-            FROM gc{_kmeans_iters()} GROUP BY cid
+            FROM gc{KMEANS_ITERS} GROUP BY cid
         ), coarseinv AS (
             SELECT 'coarse' AS part, -1 AS m, c.cid,
                    coalesce(n.n_vecs, 0)::BIGINT AS n_vecs, c.cvec
@@ -277,18 +259,6 @@ def _build_oracle() -> str:
         SELECT part, m, cid, n_vecs, cvec FROM cbinv
     """
     )
-
-
-def _pq_iters() -> int:
-    from .pq import PQ_ITERS
-
-    return PQ_ITERS
-
-
-def _kmeans_iters() -> int:
-    from .similarity_search import KMEANS_ITERS
-
-    return KMEANS_ITERS
 
 
 QUERIES = {

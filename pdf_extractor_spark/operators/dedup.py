@@ -929,9 +929,11 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str, observation=None) -> Data
     from . import load
     from .similarity_search import (
         KMEANS_DIM,
+        KMEANS_ITERS,
+        N_CENTROIDS,
         _VQ_SCALE,
-        _fit_centroids,
-        _nearest_centroid,
+        _lloyd,
+        _quantize,
     )
 
     emb = load(spark, sf_dir, "embeddings").select(
@@ -946,9 +948,11 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str, observation=None) -> Data
         .where(F.size("vq") == KMEANS_DIM)
         .localCheckpoint(eager=True)
     )
-    cents = _fit_centroids(base.select("vec_id", "vq"))
-    labeled = base.withColumn("a", _nearest_centroid(cents)).select(
-        F.col("a.cid").alias("label"), "vec_id", "emb"
+    cents = _lloyd(
+        base.select("vec_id", "vq"), 1, N_CENTROIDS, KMEANS_ITERS
+    )[0]
+    labeled = _quantize(base, [cents]).selectExpr(
+        "a0.cid AS label", "vec_id", "emb"
     )
     pairs = embedding_cosine_pairs(labeled, observation)
     drops = pairs.select(F.col("vec_b").alias("vec_id")).distinct()

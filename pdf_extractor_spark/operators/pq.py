@@ -1,25 +1,31 @@
 """Product quantization (Jégou et al., PAMI 2011) — the compression half of
 the web-scale ANN standard (IVF-PQ): vectors are split into M subspaces, a
-small k-means codebook is trained per subspace (the same exact-integer Lloyd
-loop as kmeans_fit), and each vector is stored as M one-byte codes. Query
-scoring is ADC (asymmetric distance computation): the query precomputes a
-distance look-up table per subspace (M x KSUB entries) and any database
-vector's approximate distance is M table lookups — no float math per
-candidate at all.
+small k-means codebook is trained per subspace, and each vector is stored as
+M one-byte codes. Query scoring is ADC (asymmetric distance computation):
+the query precomputes a distance look-up table per subspace (M x KSUB
+entries) and any database vector's approximate distance is M table lookups —
+no float math per candidate at all.
 
-Scale shape: codebooks are M x KSUB x DS integers — driver/broadcast-sized
-artifacts, exactly like the IVF centroids. Encoding is a pure per-row
-expression map over one scan. ADC scoring joins the code frame against the
-BROADCAST per-query LUTs on (q_id, code) equi-keys — the corpus never
-shuffles — and the per-query top-K is ``functions.expressions.top_k`` by
-q_id, so a query's candidate list never sorts in one task. At 10^9+ vectors
-the codes frame is 64x smaller than the raw embeddings, which is the point:
-the scan that ADC streams is the compressed one.
+The M codebooks are one call of the vector quantizer in
+operators/similarity_search.py: ``_lloyd(ev, PQ_M, PQ_KSUB, PQ_ITERS)`` is
+the same exact-integer Lloyd loop that fits kmeans_fit (there with one
+codebook over the full vector), encoding is its ``_quantize`` argmin, and
+the ADC LUTs are its ``_dists_sql`` distances.
+
+Scale shape: codebooks are M x KSUB x DS integers — driver-sized artifacts
+that reach the executors as ONE broadcast data row, exactly like the IVF
+centroids. Encoding is a per-row expression map over one scan. ADC scoring
+joins the code frame against the BROADCAST per-query LUT rows on q_id — the
+corpus never shuffles — and the per-query top-K is
+``functions.expressions.top_k`` by q_id, so a query's candidate list never
+sorts in one task. At 10^9+ vectors the codes frame is 64x smaller than the
+raw embeddings, which is the point: the scan that ADC streams is the
+compressed one.
 
 Cross-engine determinism: the same integer quantization contract as
-kmeans_fit (operators/similarity_search.py) — exact integer distances,
-argmin ties to the smaller cid, centroid updates as round(int_sum * 1000.0
-/ count). The DuckDB oracle replays every subspace's every Lloyd step.
+kmeans_fit — exact integer distances, argmin ties to the smaller cid,
+centroid updates as round(int_sum * 1000.0 / count). The DuckDB oracle
+replays every subspace's every Lloyd step.
 """
 from __future__ import annotations
 
@@ -35,11 +41,13 @@ from .similarity_search import (
     KMEANS_ITERS,
     N_CENTROIDS,
     N_QUERIES,
-    _centroid_dist_structs,
+    _dists_sql,
     _emb,
-    _fit_centroids,
-    _nearest_centroid,
+    _ivf_probes,
+    _lloyd,
+    _quantize,
     _quantized_vecs,
+    _with_codebook,
 )
 
 PQ_M = 8            # subspaces
@@ -50,164 +58,25 @@ PQ_TOP_K = 3
 PQ_RERANK = 60      # ADC shortlist size re-ranked with exact distances
 
 
-def _l2(a_col, b_col) -> F.Column:
-    """Exact integer squared L2 between a vq slice and a centroid vector
-    (centroids are at _C_SCALE extra precision)."""
-    return F.aggregate(
-        F.zip_with(
-            a_col, b_col, lambda a, b: (a * _C_SCALE - b) * (a * _C_SCALE - b)
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
-
-def _cb_flat(spark: SparkSession, fits: list) -> DataFrame:
-    """Codebooks as DATA (m, cid, cvec) — M x KSUB rows. Centroids travel
-    as a broadcast row, not plan literals: a literal form at M=8 x KSUB=16
-    built ~128 expression trees per select and spent ~10 s/job in Catalyst
-    analysis alone (measured); the data form keeps every plan O(1) in the
-    codebook size — the assign_broadcast lesson from kmeans_fit."""
-    rows = [
-        (m, i, [int(v) for v in fits[m][i]])
-        for m in range(PQ_M)
-        for i in range(PQ_KSUB)
-    ]
-    return spark.createDataFrame(rows, "m int, cid int, cvec array<bigint>")
-
-
-def _with_assigns(ev: DataFrame, cb_flat: DataFrame) -> DataFrame:
-    """ev plus a{m} = struct(dist, cid) of the nearest subspace-m codebook
-    entry, for every m — one 1-row broadcast join (the packed codebook) and
-    M small higher-order argmin expressions; ties to the smaller cid via
-    lexicographic struct min."""
-    packed = cb_flat.agg(
-        F.sort_array(F.collect_list(F.struct("m", "cid", "cvec"))).alias("cb")
-    )
-    out = ev.join(F.broadcast(packed))
-
-    def assign_of(m: int) -> F.Column:
-        # closure, never `lambda c, _m=m:` — a 2-arg HOF lambda receives
-        # (element, index), so the default arg would capture the INDEX
-        sl = F.slice("vq", m * PQ_DS + 1, PQ_DS)
-        cands = F.filter("cb", lambda c: c["m"] == F.lit(m))
-        return F.array_min(
-            F.transform(
-                cands,
-                lambda c: F.struct(
-                    _l2(sl, c["cvec"]).alias("dist"),
-                    c["cid"].alias("cid"),
-                ),
-            )
-        )
-
-    for m in range(PQ_M):
-        out = out.withColumn(f"a{m}", assign_of(m))
-    return out.drop("cb")
-
-
-def _subspace_fits(ev: DataFrame) -> list:
-    """All M Lloyd fits FUSED into one corpus scan per iteration (running
-    them via _fit_centroids would cost M x ITERS scans): every row computes
-    its M subspace assignments in one select, the update statistics group
-    on (subspace, cid, dim) in one aggregate (M x KSUB x DS rows collected
-    — codebook-sized driver traffic, the broadcast-Lloyd layout), and empty
-    cells keep their previous centroid. Semantics are identical to the
-    per-subspace loop (same seeds, same exact-integer argmin and update) —
-    the oracle replays each subspace independently and matches.
-
-    Returns M codebooks (each KSUB x DS ints at _VQ_SCALE*_C_SCALE units)."""
-    init = (
-        ev.where(F.col("vec_id") < PQ_KSUB)
-        .orderBy("vec_id")
-        .select("vec_id", "vq")
-        .collect()
-    )
-    if [r["vec_id"] for r in init] != list(range(PQ_KSUB)):
-        raise ValueError(
-            f"pq fits require vec_ids 0..{PQ_KSUB - 1} with "
-            f"{KMEANS_DIM}-dim embeddings; got {[r['vec_id'] for r in init]}"
-        )
-    cents = [
-        [
-            [v * _C_SCALE for v in r["vq"][m * PQ_DS : (m + 1) * PQ_DS]]
-            for r in init
-        ]
-        for m in range(PQ_M)
-    ]
-    spark = ev.sparkSession
-    for _ in range(PQ_ITERS):
-        asg = _with_assigns(ev, _cb_flat(spark, cents)).select(
-            "vq", *[F.col(f"a{m}.cid").alias(f"c{m}") for m in range(PQ_M)]
-        )
-        cid_of_m = F.element_at(
-            F.array(*[F.col(f"c{m}") for m in range(PQ_M)]),
-            (F.col("d") / PQ_DS).cast("int") + 1,
-        )
-        stats = (
-            asg.select(
-                *[f"c{m}" for m in range(PQ_M)],
-                F.posexplode("vq").alias("d", "x"),
-            )
-            .select(
-                (F.col("d") / PQ_DS).cast("int").alias("m"),
-                cid_of_m.alias("cid"),
-                (F.col("d") % PQ_DS).alias("ld"),
-                "x",
-            )
-            .groupBy("m", "cid", "ld")
-            .agg(
-                F.round(F.sum("x") * float(_C_SCALE) / F.count("*"), 0)
-                .cast("long")
-                .alias("c")
-            )
-            .collect()
-        )
-        upd = {(r["m"], r["cid"], r["ld"]): r["c"] for r in stats}
-        cents = [
-            [
-                [
-                    upd.get((m, i, d), cents[m][i][d])
-                    for d in range(PQ_DS)
-                ]
-                for i in range(PQ_KSUB)
-            ]
-            for m in range(PQ_M)
-        ]
-    return cents
-
-
-def _encoded(ev: DataFrame, fits: list) -> DataFrame:
-    """Per vector: nearest-codebook struct a{m} = (dist, cid) per subspace —
-    one broadcast codebook row + M small argmin expressions over it."""
-    return _with_assigns(ev, _cb_flat(ev.sparkSession, fits))
-
-
 def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the M codebooks and encode the corpus: per vector its M
     subspace codes plus the exact integer reconstruction error (the
     quantity PQ training minimizes — sum of the M nearest-centroid
     distances)."""
     ev = _quantized_vecs(_emb(spark, sf_dir)).localCheckpoint(eager=True)
-    enc = _encoded(ev, _subspace_fits(ev))
-    err = None
-    for m in range(PQ_M):
-        e = F.col(f"a{m}.dist")
-        err = e if err is None else err + e
-    return enc.select(
+    enc = _quantize(ev, _lloyd(ev, PQ_M, PQ_KSUB, PQ_ITERS))
+    err = " + ".join(f"a{m}.dist" for m in range(PQ_M))
+    return enc.selectExpr(
         "vec_id",
-        *[
-            F.col(f"a{m}.cid").cast("long").alias(f"code{m}")
-            for m in range(PQ_M)
-        ],
-        err.cast("long").alias("recon_err"),
+        *[f"CAST(a{m}.cid AS BIGINT) AS code{m}" for m in range(PQ_M)],
+        f"CAST({err} AS BIGINT) AS recon_err",
     )
 
 
 def q_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Honest accuracy metric for the full IVF-PQ retrieval layout: ADC
     over the compressed codes builds a PQ_RERANK-candidate shortlist
-    (broadcast LUT equi-joins + a top_k top-R whose partial
+    (a broadcast LUT equi-join + a top_k top-R whose partial
     WindowGroupLimit ships at most PQ_RERANK rows per query from each task
     — the corpus never shuffles), the shortlist alone is re-ranked with
     exact distances (PQ_RERANK rows per query — the standard refine
@@ -218,18 +87,21 @@ def q_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: q_id, k, n_hits (integers; corpus recall@k = sum/sum)."""
     ev = _quantized_vecs(_emb(spark, sf_dir)).localCheckpoint(eager=True)
-    fits = _subspace_fits(ev)
-    codes = _encoded(ev, fits).select(
-        "vec_id",
-        *[F.col(f"a{m}.cid").alias(f"code{m}") for m in range(PQ_M)],
+    fits = _lloyd(ev, PQ_M, PQ_KSUB, PQ_ITERS)
+    codes = _quantize(ev, fits).selectExpr(
+        "vec_id", *[f"a{m}.cid AS code{m}" for m in range(PQ_M)]
     )
-    q_ids = ev.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id")
-    )
-    cand = codes.crossJoin(F.broadcast(q_ids)).where(
-        F.col("vec_id") != F.col("q_id")
-    )
+    q_ids = ev.where(f"vec_id < {N_QUERIES}").selectExpr("vec_id AS q_id")
+    cand = codes.crossJoin(F.broadcast(q_ids)).where("vec_id != q_id")
     return _recall_from_candidates(ev, fits, cand)
+
+
+# exact integer squared L2 between a vector and its query, shared by the
+# re-rank and the truth
+_EDIST = (
+    "aggregate(zip_with(vq, qvq, (a, b) -> (a - b) * (a - b)), "
+    "CAST(0 AS BIGINT), (acc, v) -> acc + v) AS edist"
+)
 
 
 def _recall_from_candidates(
@@ -238,62 +110,47 @@ def _recall_from_candidates(
     """Shared retrieval-quality core: ``cand`` holds (q_id, vec_id,
     code0..code{M-1}) candidate pairs (self-matches already excluded) —
     the full cross product for flat PQ, only the probed cells' members
-    for IVF-PQ. ADC-scores them via broadcast LUT equi-joins, takes the
+    for IVF-PQ. ADC-scores them via the broadcast LUT rows, takes the
     :func:`top_k` shortlist, re-ranks the shortlist with exact
     distances, and reports integer recall vs the exact full-corpus
     top-K."""
-    spark = ev.sparkSession
-
-    # Per-query, per-subspace distance LUT: M frames of N_QUERIES x KSUB
-    # rows — the tiny query side against the broadcast codebook rows.
-    queries = ev.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), "vq"
+    queries = ev.where(f"vec_id < {N_QUERIES}")
+    # One LUT row per query: lut{m} holds the distances from the query's
+    # subspace-m slice to codebook m in cid order (cids 0..KSUB-1), so a
+    # code's distance is entry code + 1.
+    luts = _with_codebook(queries, fits).selectExpr(
+        "vec_id AS q_id",
+        *[f"{_dists_sql(m, PQ_DS)} AS lut{m}" for m in range(PQ_M)],
     )
-    cb = _cb_flat(spark, fits).localCheckpoint(eager=True)
-    adc = cand
-    for m in range(PQ_M):
-        sl = F.slice("vq", m * PQ_DS + 1, PQ_DS)
-        lut = queries.join(F.broadcast(cb.where(F.col("m") == m))).select(
-            "q_id",
-            F.col("cid").alias(f"code{m}"),
-            _l2(sl, F.col("cvec")).alias(f"d{m}"),
-        )
-        adc = adc.join(F.broadcast(lut), ["q_id", f"code{m}"])
-    adist = None
-    for m in range(PQ_M):
-        d = F.col(f"d{m}")
-        adist = d if adist is None else adist + d
-    scored = adc.select("q_id", "vec_id", adist.alias("adist"))
+    adist = " + ".join(
+        f"element_at(lut{m}, code{m} + 1).dist" for m in range(PQ_M)
+    )
+    scored = cand.join(F.broadcast(luts), "q_id").selectExpr(
+        "q_id", "vec_id", f"{adist} AS adist"
+    )
     # top-R shortlist: a query's candidate list never sorts in one task
     shortlist = top_k(
         scored, PQ_RERANK, ["adist", "vec_id"], by=["q_id"]
     ).select("q_id", "vec_id")
 
-    # exact integer-L2 distance form, shared by the re-rank and the truth
-    edist = F.aggregate(
-        F.zip_with("vq", "qvq", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    qside = queries.select("q_id", F.col("vq").alias("qvq"))
+    qside = queries.selectExpr("vec_id AS q_id", "vq AS qvq")
 
     # refine: exact distances on the shortlist only (N_QUERIES x PQ_RERANK
     # rows — the shortlist broadcasts, the corpus side is an equi-join)
     reranked = (
         ev.join(F.broadcast(shortlist), "vec_id")
         .join(F.broadcast(qside), "q_id")
-        .select("q_id", "vec_id", edist.alias("edist"))
+        .selectExpr("q_id", "vec_id", _EDIST)
     )
     approx = (
         top_k(reranked, PQ_TOP_K, ["edist", "vec_id"], by=["q_id"])
-        .select("q_id", "vec_id")
-        .withColumn("hit", F.lit(1))
+        .selectExpr("q_id", "vec_id", "1 AS hit")
     )
 
     # ground truth: exact top-K over the full-precision corpus
     exact_scored = (
         ev.join(F.broadcast(qside), F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", edist.alias("edist"))
+        .selectExpr("q_id", "vec_id", _EDIST)
     )
     exact = top_k(
         exact_scored, PQ_TOP_K, ["edist", "vec_id"], by=["q_id"]
@@ -301,10 +158,17 @@ def _recall_from_candidates(
     return (
         exact.join(F.broadcast(approx), ["q_id", "vec_id"], "left")
         .groupBy("q_id")
-        .agg(
-            F.count("*").alias("k"),
-            F.sum(F.coalesce("hit", F.lit(0))).alias("n_hits"),
-        )
+        .agg(F.expr("count(*) AS k"), F.expr("sum(coalesce(hit, 0)) AS n_hits"))
+    )
+
+
+def _ivfpq_codes(ev: DataFrame, coarse: list, fits: list) -> DataFrame:
+    """(vec_id, cell, code0..code{M-1}): every vector's nearest coarse
+    cell and its M subspace codes — the coded corpus an IVF-PQ index
+    stores."""
+    cells = _quantize(ev, [coarse]).selectExpr("vec_id", "vq", "a0.cid AS cell")
+    return _quantize(cells, fits).selectExpr(
+        "vec_id", "cell", *[f"a{m}.cid AS code{m}" for m in range(PQ_M)]
     )
 
 
@@ -323,18 +187,9 @@ def q_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: q_id, k, n_hits."""
     ev = _quantized_vecs(_emb(spark, sf_dir)).localCheckpoint(eager=True)
-    coarse = _fit_centroids(ev)
-    fits = _subspace_fits(ev)
-    codes = (
-        _encoded(ev, fits)
-        .withColumn("cell", _nearest_centroid(coarse)["cid"])
-        .select(
-            "vec_id",
-            "cell",
-            *[F.col(f"a{m}.cid").alias(f"code{m}") for m in range(PQ_M)],
-        )
-    )
-    cand = _ivf_candidates(ev, coarse, codes)
+    coarse = _lloyd(ev, 1, N_CENTROIDS, KMEANS_ITERS)[0]
+    fits = _lloyd(ev, PQ_M, PQ_KSUB, PQ_ITERS)
+    cand = _ivf_candidates(ev, coarse, _ivfpq_codes(ev, coarse, fits))
     return _recall_from_candidates(ev, fits, cand)
 
 
@@ -343,23 +198,9 @@ def _ivf_candidates(ev: DataFrame, coarse: list, codes: DataFrame) -> DataFrame:
     one of the query's IVF_NPROBE nearest coarse cells: probes come from
     broadcast-centroid distances (no shuffle), candidates from a broadcast
     equi-join on the cell id. ``codes`` carries (vec_id, cell, code0..)."""
-    probes = (
-        ev.where(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.explode(
-                F.slice(
-                    F.sort_array(_centroid_dist_structs(coarse)),
-                    1,
-                    IVF_NPROBE,
-                )
-            ).alias("p"),
-        )
-        .select("q_id", F.col("p.cid").alias("cell"))
-    )
     return (
-        codes.join(F.broadcast(probes), "cell")
-        .where(F.col("vec_id") != F.col("q_id"))
+        codes.join(F.broadcast(_ivf_probes(ev, coarse)), "cell")
+        .where("vec_id != q_id")
         .select("q_id", "vec_id", *[f"code{m}" for m in range(PQ_M)])
     )
 

@@ -248,7 +248,9 @@ ORACLES["kmeans_assign"] = f"""
 """
 
 # ---------------------------------------------------------------------------
-# Full Lloyd k-means fit (iterative), exact-integer replayable in SQL.
+# The vector quantizer: one exact-integer Lloyd loop and one argmin, shared by
+# k-means (one codebook over the full vector), IVF (the same fit as the coarse
+# quantizer) and PQ (operators/pq.py: one codebook per subspace slice).
 #
 # Cross-engine float determinism is engineered away rather than hoped for:
 # embeddings are quantized to integers (round(x*100)), distances are exact
@@ -259,9 +261,10 @@ ORACLES["kmeans_assign"] = f"""
 # are sized so nothing leaves int64 (no silent HUGEINT promotion).
 #
 # Scale: the vector frame is localCheckpoint-ed once and re-scanned per
-# iteration; centroids (K x D ints) travel driver-side — the standard
-# "broadcast the centroids" Lloyd layout. Each iteration is one scan + one
-# tiny (K x D)-row aggregate; no joins on the big side.
+# iteration; the codebooks (books x k x ds ints) travel driver-side and reach
+# the executors as ONE broadcast data row, never as plan literals, so every
+# plan is O(1) in the model size. Each iteration is one scan + one tiny
+# (books x k x ds)-row aggregate; no joins on the big side.
 # ---------------------------------------------------------------------------
 
 KMEANS_ITERS = 2  # Lloyd updates; a final assignment then reports inertia
@@ -283,127 +286,124 @@ def _quantized_vecs(emb: DataFrame) -> DataFrame:
     )
 
 
-def _nearest_centroid(cents) -> F.Column:
-    """struct(dist, cid) of the nearest centroid — exact integer distances,
-    ties to the smallest cid via lexicographic struct min."""
-    return F.array_min(_centroid_dist_structs(cents))
-
-
-def _centroid_dist_structs(cents, col: F.Column | None = None) -> F.Column:
-    """array<struct(dist, cid)> of exact integer distances to every
-    centroid (lexicographic struct ordering = dist asc, cid asc); ``col``
-    defaults to the vq column (PQ passes a subspace slice)."""
-    options = []
-    for i, c in enumerate(cents):
-        carr = F.array(*[F.lit(int(v)) for v in c])
-        dist = F.aggregate(
-            F.zip_with(
-                col if col is not None else F.col("vq"),
-                carr,
-                lambda a, b: (a * _C_SCALE - b) * (a * _C_SCALE - b),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-        options.append(F.struct(dist.alias("dist"), F.lit(i).alias("cid")))
-    return F.array(*options)
-
-
-def centroids_df(spark: SparkSession, cents) -> DataFrame:
-    """Trained centroids as a DataFrame (cid, cvec) — the form the broadcast
-    assignment consumes, and what a production fit would materialize."""
+def _codebook_rows(spark: SparkSession, books: list) -> DataFrame:
+    """Codebooks as DATA: one (m, cid, cvec) row per entry of every book."""
     return spark.createDataFrame(
-        [(i, [int(v) for v in c]) for i, c in enumerate(cents)],
-        "cid int, cvec array<long>",
+        [
+            (m, i, [int(v) for v in c])
+            for m, book in enumerate(books)
+            for i, c in enumerate(book)
+        ],
+        "m int, cid int NOT NULL, cvec array<bigint>",
     )
 
 
-def assign_broadcast(ev: DataFrame, cents: DataFrame) -> DataFrame:
-    """Broadcast-join form of the centroid assignment for LARGE K: centroids
-    travel as DATA — one broadcast row holding array<struct(cid, cvec)> —
-    instead of K x D plan literals, so the plan size is O(1) in K (the
-    literal form in ``_nearest_centroid`` grows the plan linearly with K,
-    fine at K=8, not at K in the thousands). The 1-row broadcast join adds
-    no shuffle and the per-row argmin stays a pure expression; distances
-    are the same exact-integer form, ties to the smallest cid via
-    lexicographic struct min (parity with the literal path is pinned by
-    tests/test_kmeans_fit.py).
+def _with_codebook(ev: DataFrame, books: list) -> DataFrame:
+    """ev plus ``cb``: every book's entries packed into ONE broadcast row,
+    sorted by (m, cid), so the crossJoin adds no shuffle on the big side."""
+    cb = _codebook_rows(ev.sparkSession, books).selectExpr(
+        "sort_array(collect_list(struct(m, cid, cvec))) AS cb"
+    )
+    return ev.crossJoin(F.broadcast(cb))
 
-    Returns ev plus ``a`` = struct(dist, cid) of the nearest centroid."""
-    packed = cents.agg(
-        F.sort_array(F.collect_list(F.struct("cid", "cvec"))).alias("cents")
-    )
-    dist_of = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(
-            F.col("vq"),
-            c["cvec"],
-            lambda a, b: (a * _C_SCALE - b) * (a * _C_SCALE - b),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    nearest = F.array_min(
-        F.transform(
-            "cents",
-            lambda c: F.struct(
-                dist_of(c).alias("dist"), c["cid"].alias("cid")
-            ),
-        )
-    )
+
+def _dists_sql(m: int, ds: int) -> str:
+    """array<struct(dist, cid)>, in cid order: the exact integer squared
+    distance from slice m of ``vq`` (ds dims) to every entry of codebook m
+    in ``cb`` (entries carry _C_SCALE extra precision). Struct order is
+    (dist asc, cid asc), so array_min is the argmin with ties to the
+    smaller cid."""
     return (
-        ev.join(F.broadcast(packed))
-        .withColumn("a", nearest)
-        .drop("cents")
+        f"transform(filter(cb, c -> c.m = {m}), c -> named_struct('dist', "
+        f"aggregate(zip_with(slice(vq, {m * ds + 1}, {ds}), c.cvec, "
+        f"(a, b) -> (a * {_C_SCALE} - b) * (a * {_C_SCALE} - b)), "
+        f"CAST(0 AS BIGINT), (acc, v) -> acc + v), 'cid', c.cid))"
     )
 
 
-def _fit_centroids(
-    ev: DataFrame,
-    dim: int = KMEANS_DIM,
-    k: int = N_CENTROIDS,
-    iters: int = KMEANS_ITERS,
-):
-    """The Lloyd loop: seed from vec_ids 0..k-1, ``iters`` assign+update
-    rounds (empty clusters keep their previous centroid). Returns the
-    trained centroid lists (ints at _VQ_SCALE * _C_SCALE units). The dim/k
-    parameters let the PQ trainer (operators/pq.py) run the same loop per
-    subspace slice."""
+def _quantize(ev: DataFrame, books: list) -> DataFrame:
+    """ev plus a{m} = struct(dist, cid) of the nearest entry of book m to
+    slice m of ``vq``, for every book.
+
+    The coalesce never fires (no book is empty); it makes a{m}.cid
+    non-nullable, so a caller joining on the cid gets no inferred
+    isnotnull(argmin) pushed into the codebook crossJoin as a join
+    condition, which would compute every argmin twice."""
+    ds = len(books[0][0])
+    return _with_codebook(ev, books).selectExpr(
+        *ev.columns,
+        *[
+            f"coalesce(array_min({_dists_sql(m, ds)}), named_struct("
+            f"'dist', CAST(NULL AS BIGINT), 'cid', -1)) AS a{m}"
+            for m in range(len(books))
+        ],
+    )
+
+
+def _ivf_probes(ev: DataFrame, cents: list) -> DataFrame:
+    """(q_id, cell) for each of the query vectors' IVF_NPROBE nearest
+    cells of the coarse quantizer ``cents``."""
+    queries = ev.where(f"vec_id < {N_QUERIES}")
+    return _with_codebook(queries, [cents]).selectExpr(
+        "vec_id AS q_id",
+        f"explode(slice(sort_array({_dists_sql(0, len(cents[0]))}), 1, "
+        f"{IVF_NPROBE})) AS p",
+    ).selectExpr("q_id", "p.cid AS cell")
+
+
+def _lloyd(ev: DataFrame, n_books: int, k: int, iters: int) -> list:
+    """The Lloyd loop over ``n_books`` codebooks of k entries, one per
+    equal slice of ``vq``, all fused into one corpus scan per iteration:
+    seeds are vec_ids 0..k-1, each round assigns every slice to its
+    nearest entry and moves each entry to round(int_sum * _C_SCALE /
+    count) of its members (an empty cell keeps its entry). The update
+    statistics group on (book, cid, dim) and are collected — codebook-
+    sized driver traffic. The oracles replay each book independently.
+
+    Returns the books: n_books lists of k centroid int lists (at
+    _VQ_SCALE * _C_SCALE units)."""
     init = (
-        ev.where(F.col("vec_id") < k)
-        .orderBy("vec_id")
-        .select("vec_id", "vq")
+        ev.where(f"vec_id < {k}").orderBy("vec_id").select("vec_id", "vq")
         .collect()
     )
-    # seed contract (mirrored by the oracle's `cid = vec_id`): vec_ids
-    # 0..k-1 must exist with the expected dimension — fail loudly
-    # rather than silently shifting cluster ids by position
-    if [r["vec_id"] for r in init] != list(range(k)):
+    # seed contract (mirrored by the oracles' `cid = vec_id`): vec_ids
+    # 0..k-1 must exist — fail loudly rather than silently shifting
+    # cluster ids by position
+    ids = [r["vec_id"] for r in init]
+    if ids != list(range(k)):
         raise ValueError(
-            f"kmeans_fit seeds require vec_ids 0..{k - 1} with "
-            f"{dim}-dim embeddings; got {[r['vec_id'] for r in init]}"
+            f"quantizer seeds require vec_ids 0..{k - 1}; got {ids}"
         )
-    cents = [[v * _C_SCALE for v in r["vq"]] for r in init]
-
+    ds = len(init[0]["vq"]) // n_books
+    books = [
+        [[v * _C_SCALE for v in r["vq"][m * ds : (m + 1) * ds]] for r in init]
+        for m in range(n_books)
+    ]
+    cids = ", ".join(f"a{m}.cid" for m in range(n_books))
     for _ in range(iters):
-        assigned = ev.withColumn("a", _nearest_centroid(cents)).select(
-            "vq", F.col("a.cid").alias("cid")
-        )
         stats = (
-            assigned.select("cid", F.posexplode("vq").alias("d", "x"))
-            .groupBy("cid", "d")
-            .agg(
-                F.round(F.sum("x") * float(_C_SCALE) / F.count("*"), 0)
-                .cast("long")
-                .alias("c")
+            _quantize(ev, books)
+            .selectExpr(f"array({cids}) AS cids", "posexplode(vq) AS (d, x)")
+            .selectExpr(
+                f"d DIV {ds} AS m", f"cids[d DIV {ds}] AS cid",
+                f"d % {ds} AS ld", "x",
             )
+            .groupBy("m", "cid", "ld")
+            .agg(F.expr(
+                f"CAST(round(sum(x) * CAST({_C_SCALE} AS DOUBLE) / count(*), 0)"
+                " AS BIGINT) AS c"
+            ))
             .collect()
         )
-        upd = {(r["cid"], r["d"]): r["c"] for r in stats}
-        cents = [
-            [upd.get((i, d), cents[i][d]) for d in range(dim)]
-            for i in range(k)
+        upd = {(r["m"], r["cid"], r["ld"]): r["c"] for r in stats}
+        books = [
+            [
+                [upd.get((m, i, d), c[d]) for d in range(ds)]
+                for i, c in enumerate(book)
+            ]
+            for m, book in enumerate(books)
         ]
-    return cents
+    return books
 
 
 def q_kmeans_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -412,20 +412,18 @@ def q_kmeans_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid), then a final assignment reporting per-cluster size, exact
     integer inertia, and the first 4 trained-centroid components."""
     ev = _quantized_vecs(_emb(spark, sf_dir)).localCheckpoint(eager=True)
-    cents = _fit_centroids(ev)
-
-    final = ev.withColumn("a", _nearest_centroid(cents)).select(
-        F.col("a.cid").alias("cluster"), F.col("a.dist").alias("dist")
+    cents = _lloyd(ev, 1, N_CENTROIDS, KMEANS_ITERS)[0]
+    out = (
+        _quantize(ev, [cents])
+        .selectExpr("a0.cid AS cluster", "a0.dist AS dist")
+        .groupBy("cluster")
+        .agg(F.expr("count(*) AS n_vecs"), F.expr("sum(dist) AS inertia"))
     )
-    out = final.groupBy("cluster").agg(
-        F.count("*").alias("n_vecs"), F.sum("dist").alias("inertia")
+    comps = _codebook_rows(spark, [cents]).selectExpr(
+        "cid AS cluster",
+        *[f"cvec[{d}] AS c{d}" for d in range(_N_CENT_OUT)],
     )
-    for d in range(_N_CENT_OUT):
-        byc = F.array(*[F.lit(int(cents[i][d])) for i in range(N_CENTROIDS)])
-        out = out.withColumn(
-            f"c{d}", F.element_at(byc, F.col("cluster") + 1).cast("long")
-        )
-    return out
+    return out.join(F.broadcast(comps), "cluster")
 
 
 def _kmeans_cte_chain():
@@ -521,30 +519,18 @@ def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern, but with cells that follow the data distribution."""
     emb = _emb(spark, sf_dir)
     ev = _quantized_vecs(emb).localCheckpoint(eager=True)
-    cents = _fit_centroids(ev)
+    cents = _lloyd(ev, 1, N_CENTROIDS, KMEANS_ITERS)[0]
 
-    members = ev.withColumn("a", _nearest_centroid(cents)).select(
-        "vec_id", F.col("a.cid").alias("cid")
-    ).join(emb, "vec_id")
-    probes = (
-        ev.where(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.explode(
-                F.slice(
-                    F.sort_array(_centroid_dist_structs(cents)),
-                    1,
-                    IVF_NPROBE,
-                )
-            ).alias("p"),
-        )
-        .select("q_id", F.col("p.cid").alias("cid"))
+    members = (
+        _quantize(ev, [cents]).selectExpr("vec_id", "a0.cid AS cell")
+        .join(emb, "vec_id")
     )
+    probes = _ivf_probes(ev, cents)
     q_embs = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
     scored = (
-        members.join(F.broadcast(probes), "cid")
+        members.join(F.broadcast(probes), "cell")
         .where(F.col("vec_id") != F.col("q_id"))
         .join(F.broadcast(q_embs), "q_id")
         .select(
@@ -622,9 +608,9 @@ def q_cluster_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import load
 
     ev = _quantized_vecs(_emb(spark, sf_dir)).localCheckpoint(eager=True)
-    cents = _fit_centroids(ev)
-    labels = ev.withColumn("a", _nearest_centroid(cents)).select(
-        F.col("vec_id").alias("doc_id"), F.col("a.cid").alias("cluster")
+    cents = _lloyd(ev, 1, N_CENTROIDS, KMEANS_ITERS)[0]
+    labels = _quantize(ev, [cents]).selectExpr(
+        "vec_id AS doc_id", "a0.cid AS cluster"
     )
     words = (
         load(spark, sf_dir, "documents")

@@ -7,6 +7,9 @@ in plan shape fails loudly rather than silently costing a shuffle at 100 TB:
   Python (BatchEvalPython), no cogrouped-Pandas nodes, and no
   BroadcastNestedLoopJoin outside the explicit NLJ_ALLOWED set (exact
   baselines + bounded 1-row combine crossJoins);
+- the vector-quantizer queries' nested loops are unconditioned codebook-row
+  crossJoins (QUANTIZER_NLJ_CONDITIONS), apart from the recall queries'
+  exact self-excluding baseline;
 - every query additionally carries a RULES shape rule — the script fails
   if one is missing; every top_k rank keeps Spark's native two-stage
   shape (a partial WindowGroupLimit per group, TakeOrderedAndProject over
@@ -90,12 +93,12 @@ RULES = {
     # gram stream; selection is windowless integer arithmetic
     "dsir_select": ([r"BroadcastHashJoin"], [r"SortMergeJoin", r"\bWindow\b", r"ArrowEvalPython"]),
     # PQ encode is a pure map after the fit (1-row broadcast codebook);
-    # ADC recall must keep the broadcast LUTs (its shortlist is a top_k)
+    # ADC recall must keep the broadcast LUT join (its shortlist is a top_k)
     "pq_codes": ([], [r"SortMergeJoin", r"\bWindow\b", r"ArrowEvalPython"]),
     "pq_adc_recall": ([r"BroadcastHashJoin"], [r"SortMergeJoin", r"ArrowEvalPython"]),
     "ann_ivfpq_recall": ([r"BroadcastHashJoin"], [r"SortMergeJoin", r"ArrowEvalPython"]),
     # train-once/serve-many: the serve path must keep the IVF-PQ shape —
-    # broadcast LUT equi-joins + top_k shortlist — with model/code inputs
+    # broadcast LUT equi-join + top_k shortlist — with model/code inputs
     # read from the committed snapshot (a parquet scan, no refit in the
     # served plan)
     "ann_index_query": ([r"BroadcastHashJoin"], [r"SortMergeJoin", r"ArrowEvalPython"]),
@@ -274,8 +277,9 @@ RULES = {
                             [r"SortMergeJoin", r"ArrowEvalPython"]),
     "bitext_clean": ([r"BroadcastHashJoin"],
                      [r"SortMergeJoin", r"ArrowEvalPython"]),
-    # assignment rides the broadcast DATA-row crossjoin (assign_broadcast:
-    # one 1-row codebook NLJ, never a per-centroid plan literal forest)
+    # assignment: the N_CENTROIDS seed-centroid rows broadcast as DATA into
+    # a crossJoin (never a per-centroid plan literal forest) and the
+    # per-vector argmax is a vec_id window
     "kmeans_assign": ([r"\bWindow\b"],
                       [r"SortMergeJoin", r"ArrowEvalPython"]),
     "dedup_pair_audit": ([r"BroadcastHashJoin"],
@@ -290,8 +294,18 @@ RULES = {
     "image_ahash_dedup": ([r"MapInPandas", r"BroadcastHashJoin"],
                           [r"SortMergeJoin", r"BatchEvalPython"]),
     "minhash_signatures": ([], [r"Join", r"ArrowEvalPython"]),
+    # cells and probes come from the codebook-row crossJoin (its NLJ is
+    # pinned unconditioned by QUANTIZER_NLJ_CONDITIONS); candidates must
+    # stay a broadcast equi-join on the cell id
     "ann_ivf_trained": ([r"BroadcastHashJoin"],
-                        [r"BroadcastNestedLoopJoin", r"ArrowEvalPython"]),
+                        [r"SortMergeJoin", r"ShuffledHashJoin",
+                         r"ArrowEvalPython"]),
+    # final assignment = the codebook-row crossJoin + one hash aggregate;
+    # the trained-centroid components join back onto the <= K cluster rows
+    # by a broadcast; no shuffle join, no window
+    "kmeans_fit": ([r"HashAggregate", r"BroadcastNestedLoopJoin"],
+                   [r"SortMergeJoin", r"ShuffledHashJoin", r"\bWindow\b",
+                    r"ArrowEvalPython"]),
     # round-4 ops: winnowing = per-doc bounded window + keyed join-backs;
     # shard_assign = pure map + one agg + a <=8-row share window
     "winnow_fingerprints": ([r"\bWindow\b", r"HashAggregate"],
@@ -340,7 +354,7 @@ _AGG_ONLY = [
     "corpus_report", "cusum_changepoint", "dedup_ngram_jaccard",
     "dispersion_index", "gate_attrition", "groupwise_trend",
     "hashed_tf_vectors", "holdout_split", "interval_overlap_join",
-    "json_extract_profile", "kmeans_fit", "markdown_render",
+    "json_extract_profile", "markdown_render",
     "ordered_concat", "page_assembly", "partition_digest",
     "status_breakdown", "status_rollup", "tumbling_window",
     "validation_cost", "conv_window_pack", "kappa_agreement",
@@ -406,8 +420,9 @@ NLJ_ALLOWED = {
     "bitext_clean", "budget_apportion", "dedup_pair_audit", "kcore_peel",
     "kmeans_assign", "session_depth_histogram", "survival_table",
     "temperature_mixture",
-    # broadcast DATA-row crossJoins (1-row codebooks/centroid tables —
-    # the assign_broadcast pattern; plan stays O(1) in model size):
+    # broadcast DATA-row crossJoins (the 1-row packed codebook of
+    # similarity_search._quantize; plan stays O(1) in model size):
+    "kmeans_fit", "ann_ivf_trained", "cluster_top_terms", "semantic_dedup",
     "pq_codes", "pq_adc_recall", "ann_ivfpq_recall", "ann_index_query",
     # 1-row corpus-stat / totals / boundary combines (logreg pattern),
     # audited sound in VERDICT r03's collect/NLJ sweep:
@@ -419,6 +434,41 @@ NLJ_ALLOWED = {
     # bounded top-K × top-K fusion lists (K=20 per system):
     "rrf_fusion",
 }
+
+# The vector-quantizer queries: their codebook-row crossJoins are the only
+# nested loops allowed, and such a join has no condition. A conditioned NLJ
+# is a candidate or assignment join that lost its equi-key (or an argmin
+# copied into a join condition), which would loop every vector over every
+# broadcast row. The recall queries also carry their exact baseline, the
+# query set against the whole corpus minus the self-match. Query -> regex
+# that every "Join condition:" of a BroadcastNestedLoopJoin must match.
+_SELF_EXCLUSION = r"None|NOT \(vec_id#\d+L = q_id#\d+L\)"
+QUANTIZER_NLJ_CONDITIONS = {
+    "kmeans_fit": "None", "ann_ivf_trained": "None",
+    "cluster_top_terms": "None", "semantic_dedup": "None",
+    "pq_codes": "None", "ann_index_build": "None",
+    "pq_adc_recall": _SELF_EXCLUSION, "ann_ivfpq_recall": _SELF_EXCLUSION,
+    "ann_index_query": _SELF_EXCLUSION,
+}
+
+
+def nlj_condition_failures(name: str, plan: str) -> list:
+    """Conditions of the BroadcastNestedLoopJoins in a formatted plan that
+    QUANTIZER_NLJ_CONDITIONS does not allow for this query."""
+    allowed = QUANTIZER_NLJ_CONDITIONS.get(name)
+    if allowed is None:
+        return []
+    conds = re.findall(
+        r"\(\d+\) BroadcastNestedLoopJoin[^\n]*\n(?:.*\n)*?"
+        r"Join condition: (.*)",
+        plan,
+    )
+    return [
+        f"{name}: BroadcastNestedLoopJoin condition {c[:120]!r} is not "
+        f"{allowed!r}"
+        for c in conds if not re.fullmatch(allowed, c)
+    ]
+
 
 # Applied to EVERY registered query: no cartesian products, no
 # row-at-a-time Python UDFs, no cogrouped-Pandas nodes (the one cogroup
@@ -542,6 +592,7 @@ def main() -> int:
                 f"{name}: BroadcastNestedLoopJoin present but not in "
                 f"NLJ_ALLOWED (unbounded nested loop at scale?)"
             )
+        failures.extend(nlj_condition_failures(name, plan))
         # specific shape rules
         if name in RULES:
             must, must_not = RULES[name]

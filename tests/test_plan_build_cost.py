@@ -6,7 +6,9 @@ tree built node by node from Columns costs hundreds to thousands of round
 trips before any row moves. The curate path's projections are SQL text
 instead (one parse per projection); these tests pin the round-trip counts
 of building its operators and pin curate's output bytes, which an escape
-or type slip in the SQL text would change."""
+or type slip in the SQL text would change. The vector quantizer's
+distances are SQL text over one broadcast codebook row too; a further
+test pins the round trips of a whole k-means fit."""
 import hashlib
 import json
 import threading
@@ -16,6 +18,7 @@ from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.operators.dedup import paragraph_dedup
+from pdf_extractor_spark.operators.similarity_search import q_kmeans_fit
 from pdf_extractor_spark.operators.text_analysis import repetition_filters
 from pdf_extractor_spark.plans.pipeline import run_pipeline
 from pdf_extractor_spark.plans.training_data import iter_curate_stages
@@ -89,3 +92,15 @@ CURATE_SHA1 = "34fd524aa8e7dc610683af076d057f7e304217c1"
 
 def test_curate_output_bytes_unchanged(spark):
     assert curate_digest(spark) == CURATE_SHA1
+
+
+# About twice the 549 round trips of building and collecting q_kmeans_fit at
+# sf0.001 on a cold build. With the centroids written into the plan as
+# K x D literals, once per Lloyd round, the same call took 11,575.
+MAX_KMEANS_FIT_TRIPS = 1100
+
+
+def test_kmeans_fit_takes_few_round_trips(spark):
+    with round_trips() as n:
+        q_kmeans_fit(spark, "/root/testdata/sf0.001").collect()
+    assert n[0] <= MAX_KMEANS_FIT_TRIPS, n[0]
